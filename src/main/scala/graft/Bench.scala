@@ -63,7 +63,8 @@ object Bench {
         } else (System.nanoTime() - t0) / 1e9
       } finally {
         pool.shutdown()
-        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+        if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
+          System.err.println(s"BENCH WARN $phase: builds still running after 10 min")
       }
     }
     // The session-shared stagings — the LSH near-dup pair table (q41/

@@ -60,10 +60,10 @@ object DedupOps {
   val BroadcastMaxIds: Long = 4L * 1000 * 1000
 
   /** propagateMin rounds that run the plain one-join neighbor-min shape
-    * before the loop turns on pointer jumping. Small-clique components
-    * (the common case) converge inside this budget with zero extra
-    * per-round cost; anything still changing is a deep path, where the
-    * jump collapses the remaining rounds to O(log diameter). */
+    * before the loop turns on hooking. Small-clique components (the
+    * common case) converge inside this budget with zero extra per-round
+    * cost; anything still changing is a deep path, where hooking
+    * collapses the remaining rounds to O(log diameter). */
   val PlainRounds = 3
 
   /** q131 exact substring dedup: window width in tokens, and the
@@ -1322,34 +1322,25 @@ object DedupOps {
     var round = 0
     while (changed > 0) {
       round += 1
-      val viaNeighbor = edges
-        .join(labels.select(col("doc_id").as("dst"), col("rep").as("nrep")), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("nrep")).as("nmin"))
-      // convergence is detected from a `chg` flag computed IN the same
-      // pass the checkpoint materializes — the old shape re-joined the
-      // new checkpoint against the previous one just to count changed
-      // rows, a full extra join + exchange per iteration (2 jobs/round
-      // → 1 job + a shuffle-free scan-count of the materialized blocks)
-      val stepped = labels.join(viaNeighbor, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("rep").as("rep0"),
-          least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep1"))
-      // ADAPTIVE POINTER JUMP (path halving): near-dup components are
-      // almost always small cliques that converge in <= PlainRounds
-      // neighbor-min rounds, so early rounds stay the cheap one-join
-      // shape (measured: a jump join in EVERY round regressed the whole
-      // cluster family ~2x at sf0.1 — the loop is job-latency-bound).
-      // A component still changing after PlainRounds is a DEEP path —
-      // the maintained index's bridge chain is 158 hops, i.e. 158
-      // checkpoint+count jobs on the plain path — so later rounds also
-      // relabel to the PREVIOUS round's label of the stepped rep:
-      // labels are monotone non-increasing with label(v) <= v, so
-      // labels[rep1] is a same-component id <= rep1, the hop distance
-      // covered per round doubles, and the tail converges in
-      // O(log diameter) rounds. The fixpoint is unchanged: every
-      // relabel stays inside the component and only decreases, and the
-      // loop still exits only when a full neighbor-min round changes
-      // nothing (the original criterion).
+      // ADAPTIVE HOOKING: near-dup components are almost always small
+      // cliques that converge in <= PlainRounds neighbor-min rounds, so
+      // early rounds stay the cheap one-join shape (measured: a heavier
+      // round in EVERY round regressed the whole cluster family ~2x at
+      // sf0.1 — the loop is job-latency-bound). A component still
+      // changing after PlainRounds is a DEEP path (the maintained
+      // index's bridge chain is 158 hops, i.e. 158 checkpoint jobs on
+      // the plain path), so later rounds run the FastSV step (Zhang,
+      // Azad, Hu, SIAM PP 2020) on the labels read as parent pointers:
+      // with g = the grandparent label(label(v)) and n = the minimum g
+      // over v's neighbors, v takes min(label, g, n) (shortcutting +
+      // aggressive hooking) and v's PARENT also takes n (stochastic
+      // hooking). Hooking parents merges whole label trees per round,
+      // which is what makes the round count O(log diameter): relabeling
+      // vertices alone (label := label(label)) can still advance one
+      // vertex per round along a path whose ids are shuffled.
+      // The fixpoint is unchanged: every relabel stays inside the
+      // component and only decreases, and a round that changes nothing
+      // leaves every component a star on its minimum id.
       // the changed-row count rides the checkpoint's own job as an
       // observe() metric — the separate filter(chg).count() job per
       // round was pure scheduling latency on already-materialized
@@ -1357,16 +1348,39 @@ object DedupOps {
       // caller: q77/q150/q161/q210/q213 and all four maintained-index
       // loop invocations)
       val obs = new org.apache.spark.sql.Observation()
-      val next = (if (round <= PlainRounds) stepped
-        else stepped
-          .join(labels.select(col("doc_id").as("rep1"), col("rep").as("jrep")),
-            Seq("rep1"), "left")
-          .select(col("doc_id"), col("rep0"),
-            least(col("rep1"), coalesce(col("jrep"), col("rep1"))).as("rep1")))
+      val stepped =
+        if (round <= PlainRounds) {
+          val viaNeighbor = edges
+            .join(labels.select(col("doc_id").as("dst"), col("rep").as("nrep")), "dst")
+            .groupBy(col("src").as("doc_id"))
+            .agg(min(col("nrep")).as("nmin"))
+          labels.join(viaNeighbor, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("rep").as("rep0"),
+              least(col("rep"), coalesce(col("nmin"), col("rep"))).as("rep1"))
+        } else {
+          val gp = labels
+            .join(labels.select(col("doc_id").as("rep"), col("rep").as("g")), "rep")
+          val viaNeighbor = edges
+            .join(gp.select(col("doc_id").as("dst"), col("g")), "dst")
+            .groupBy(col("src").as("doc_id"))
+            .agg(min(col("g")).as("n"))
+          val own = gp.join(viaNeighbor, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("rep").as("rep0"), col("n"),
+              least(col("rep"), col("g"), coalesce(col("n"), col("rep"))).as("rep1"))
+          val hooks = own.filter(col("n").isNotNull)
+            .groupBy(col("rep0").as("doc_id"))
+            .agg(min(col("n")).as("hook"))
+          own.join(hooks, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("rep0"),
+              least(col("rep1"), coalesce(col("hook"), col("rep1"))).as("rep1"))
+        }
+      // the cap keeps each round's checkpoint from inheriting a size
+      // estimate that multiplies round over round (see boundStats)
+      val next = org.apache.spark.sql.graft.GraftBridge.boundStats(stepped
         .select(col("doc_id"), col("rep1").as("rep"),
           (col("rep1") < col("rep0")).as("chg"))
         .observe(obs, count(when(col("chg"), 1)).as("n_changed"))
-        .localCheckpoint()
+        .localCheckpoint())
       changed = obs.get("n_changed").asInstanceOf[Long]
       // the previous iteration's checkpoint is dead once `changed` is
       // counted — free it now instead of waiting for the ContextCleaner

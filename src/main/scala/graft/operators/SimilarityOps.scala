@@ -600,7 +600,9 @@ object SimilarityOps {
     * threw "Recursive update" whenever the two keys landed in one bin
     * (appId-dependent, a per-run lottery once Bench built the index
     * fixtures concurrently). A failed build removes its claim so later
-    * callers retry instead of consuming a poisoned future. */
+    * callers retry instead of consuming a poisoned future. A build that
+    * returns null fails loudly: waiters treat a null result as "no
+    * result yet", so a null claim would rebuild forever. */
   private[graft] def memoFit[T <: AnyRef](s: SparkSession, dir: String,
       tag: String)(f: => T): T = {
     val k = (s.sparkContext.applicationId, dir, tag)
@@ -609,7 +611,11 @@ object SimilarityOps {
       val fresh = new java.util.concurrent.CompletableFuture[AnyRef]()
       val existing = fitMemo.putIfAbsent(k, fresh)
       if (existing == null) {
-        try { out = f; fresh.complete(out) }
+        try {
+          out = f
+          require(out != null, s"memoFit build '$tag' for $dir returned null")
+          fresh.complete(out)
+        }
         catch { case t: Throwable =>
           fitMemo.remove(k, fresh); fresh.completeExceptionally(t); throw t }
       } else {

@@ -1,16 +1,14 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfPqOps, PqOps, SimilarityOps}
 
 /** Incremental maintenance of the IVFPQ index AT REST — the ANN
-  * analogue of [[PostingsMaintenance]]'s search-ingest loop, sharing the
-  * same durable-state protocol:
+  * analogue of [[PostingsMaintenance]]'s search-ingest loop:
   *
   *   - CREATE trains the coarse codebook (integer Lloyd) and the
   *     residual-PQ codebooks on the source SNAPSHOT, persists both as
@@ -24,13 +22,12 @@ import graft.operators.{IvfPqOps, PqOps, SimilarityOps}
   *     function of (vector, codebooks), incremental maintenance is
   *     EXACT: the maintained table equals a from-scratch re-encode of
   *     the whole corpus against the same codebooks, bit for bit.
+  *   - REFRESH-CDC also retires merge-on-read deletes, as equality
+  *     deletes keyed by vec_id.
   *
-  * EXACTLY-ONCE under the single-refresher contract via the identical
-  * [[PendingWindow]] three-step pivot as [[IncrementalMv]] /
-  * [[PostingsMaintenance]]: stake the window durably, append the delta
-  * codes, finalize (advance pointer + clear marker) in one commit.
-  * Crash recovery pivots on whether the codes table advanced past the
-  * marker's version — a replayed window can never double-encode.
+  * Exactly-once by [[PendingWindow]]: `refresh` appends once (the
+  * single-commit pivot), `refreshCdc` appends then deletes (commit
+  * counting) — a replayed window can never double-encode.
   *
   * Scale shape: refresh I/O is proportional to the DELTA (only the
   * window's source files are read — the spec deletes consumed files to
@@ -40,17 +37,13 @@ import graft.operators.{IvfPqOps, PqOps, SimilarityOps}
   * periodic re-create, not silently. Search stays [[IvfPqOps]]'s
   * probed-cell ADC over the maintained table. */
 object AnnIndexMaintenance {
-  private val SourceVersionProp = "ann.source-version"
-  private val PendingProp = "ann.pending"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Append = PendingWindow.Protocol("ann", "ann.pending",
+    PendingWindow.SinglePivot)
+  private val Cdc = PendingWindow.Protocol("ann", "ann.pending-cdc",
+    PendingWindow.CommitCount)
 
   def lastSourceVersion(s: SparkSession, catalog: String, idxIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, idxIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, idxIdent, Append.kind)
 
   private def coarseIdent(idxIdent: String) = s"${idxIdent}_coarse"
   private def pqcIdent(idxIdent: String) = s"${idxIdent}_pqc"
@@ -58,191 +51,72 @@ object AnnIndexMaintenance {
   /** Train on the CURRENT source snapshot, persist codebooks + snapshot
     * codes, record the consumed version. Returns it. */
   def createIndex(s: SparkSession, catalog: String, srcIdent: String,
-      idxIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val v0 = ManifestSink.currentVersion(srcRoot)
-    s.sql(s"CREATE TABLE $catalog.$idxIdent " +
-      "(vec_id BIGINT, cell BIGINT, codes ARRAY<BIGINT>) " +
-      "TBLPROPERTIES ('write.sort-by' = 'cell')")
-    s.sql(s"CREATE TABLE $catalog.${coarseIdent(idxIdent)} " +
-      "(cluster BIGINT, cvec ARRAY<BIGINT>)")
-    s.sql(s"CREATE TABLE $catalog.${pqcIdent(idxIdent)} " +
-      "(sub BIGINT, code BIGINT, cv ARRAY<BIGINT>)")
-    val snap = s.table(s"$catalog.$srcIdent")
-    val (coarse, _) = SimilarityOps.kmeansFit(snap,
-      SimilarityOps.NumCentroids, SimilarityOps.KmIters)
-    coarse.writeTo(s"$catalog.${coarseIdent(idxIdent)}").append()
-    val coarseT = s.table(s"$catalog.${coarseIdent(idxIdent)}")
-    val res = IvfPqOps.residuals(SimilarityOps.quantized(snap), coarseT)
-    val (pqc, _) = PqOps.pqFitQ(
-      res.select(col("vec_id"), col("rvec").as("qvec")),
-      PqOps.M, PqOps.SubDim, PqOps.Ksub, PqOps.PqIters, "annm:")
-    pqc.writeTo(s"$catalog.${pqcIdent(idxIdent)}").append()
-    val pqcT = s.table(s"$catalog.${pqcIdent(idxIdent)}")
-    IvfPqOps.freshEncode(snap, coarseT, pqcT, PqOps.M, PqOps.SubDim)
-      .writeTo(s"$catalog.$idxIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, idxIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
+      idxIdent: String): Long =
+    PendingWindow.create(s, catalog, srcIdent, idxIdent, Append.kind) {
+      s.sql(s"CREATE TABLE $catalog.$idxIdent " +
+        "(vec_id BIGINT, cell BIGINT, codes ARRAY<BIGINT>) " +
+        "TBLPROPERTIES ('write.sort-by' = 'cell')")
+      s.sql(s"CREATE TABLE $catalog.${coarseIdent(idxIdent)} " +
+        "(cluster BIGINT, cvec ARRAY<BIGINT>)")
+      s.sql(s"CREATE TABLE $catalog.${pqcIdent(idxIdent)} " +
+        "(sub BIGINT, code BIGINT, cv ARRAY<BIGINT>)")
+      val snap = s.table(s"$catalog.$srcIdent")
+      val (coarse, _) = SimilarityOps.kmeansFit(snap,
+        SimilarityOps.NumCentroids, SimilarityOps.KmIters)
+      coarse.writeTo(s"$catalog.${coarseIdent(idxIdent)}").append()
+      val coarseT = s.table(s"$catalog.${coarseIdent(idxIdent)}")
+      val res = IvfPqOps.residuals(SimilarityOps.quantized(snap), coarseT)
+      val (pqc, _) = PqOps.pqFitQ(
+        res.select(col("vec_id"), col("rvec").as("qvec")),
+        PqOps.M, PqOps.SubDim, PqOps.Ksub, PqOps.PqIters, "annm:")
+      pqc.writeTo(s"$catalog.${pqcIdent(idxIdent)}").append()
+      val pqcT = s.table(s"$catalog.${pqcIdent(idxIdent)}")
+      IvfPqOps.freshEncode(snap, coarseT, pqcT, PqOps.M, PqOps.SubDim)
+        .writeTo(s"$catalog.$idxIdent").append()
+    }
 
-  /** The window's vectors — derived from the CHANGE FEED, so only delta
-    * files are ever opened (append-only enforced by the feed itself). */
-  private def windowDelta(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .load()
-      .select(col("vec_id"), col("embedding"))
-
-  private[sources] def applyWindow(s: SparkSession, catalog: String,
-      srcRoot: Path, idxIdent: String, from: Long, to: Long): Unit =
-    IvfPqOps.freshEncode(windowDelta(s, srcRoot, from, to),
+  /** Append `vecs`' codes under the index's frozen codebooks. */
+  private def appendCodes(s: SparkSession, catalog: String, idxIdent: String,
+      vecs: DataFrame): Unit =
+    IvfPqOps.freshEncode(vecs,
         s.table(s"$catalog.${coarseIdent(idxIdent)}"),
         s.table(s"$catalog.${pqcIdent(idxIdent)}"),
         PqOps.M, PqOps.SubDim)
       .writeTo(s"$catalog.$idxIdent").append()
 
-  private[sources] def finalizeWindow(idxRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(idxRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(PendingProp)))
-
-  private[sources] def recoverPending(s: SparkSession, catalog: String,
-      srcIdent: String, idxIdent: String): Boolean = {
-    val idxRoot = tableRoot(s, catalog, idxIdent)
-    ManifestSink.readHeader(idxRoot).props.get(PendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(idxRoot, PendingProp, p, vA)
-        if (ManifestSink.currentVersion(idxRoot) == vA)
-          applyWindow(s, catalog, tableRoot(s, catalog, srcIdent),
-            idxIdent, pf, pt)
-        finalizeWindow(idxRoot, pt)
-        true
-    }
-  }
+  private[sources] def applyWindow(s: SparkSession, catalog: String,
+      srcRoot: Path, idxIdent: String, from: Long, to: Long): Unit =
+    appendCodes(s, catalog, idxIdent,
+      PendingWindow.changes(s, srcRoot, from, to, cdc = false)
+        .select(col("vec_id"), col("embedding")))
 
   /** Refresh the maintained index from the vectors appended since the
     * last refresh. Returns the source version the index now reflects. */
   def refresh(s: SparkSession, catalog: String, srcIdent: String,
-      idxIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val idxRoot = tableRoot(s, catalog, idxIdent)
-    recoverPending(s, catalog, srcIdent, idxIdent)
-    val from = lastSourceVersion(s, catalog, idxIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(idxRoot, PendingProp, from, to)
-    applyWindow(s, catalog, srcRoot, idxIdent, from, to)
-    finalizeWindow(idxRoot, to)
-    to
-  }
-
-  // ---- CDC-aware refresh: deletes propagate without reading anything ----
-
-  private val CdcPendingProp = "ann.pending-cdc"
-
-  /** The window's ROW CHANGE FEED: inserts + merge-on-read delete
-    * images (a CoW rewrite in the window still fails loudly — that is
-    * the feed's own contract). */
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("vec_id"), col("embedding"), col("_change_type"))
+      idxIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, idxIdent, Append)(w =>
+      applyWindow(s, catalog, w.src, idxIdent, w.from, w.to))
 
   /** Deterministic two-commit apply: encode-append the window's inserts
     * (first commit), then retire its deletes as ONE EQUALITY DELETE on
     * the index keyed by vec_id (second commit) — the q156 zero-read
     * delete path: O(delete keys), no index base file is ever opened.
-    * The key list streams through [[MinHashIndexMaintenance.chunkedEqDelete]]
-    * (100k-key commits) — it never materializes whole on the driver.
-    * A key both inserted and deleted inside one window is REFUSED (the
-    * feed carries no intra-window ordering to replay it faithfully);
-    * refresh more often than you churn a key. Returns (hadInserts,
-    * hadDeletes) so recovery can count the expected commits. */
+    * `skipInsert` (recovery) applies only the delete half. */
   private[sources] def applyWindowCdc(s: SparkSession, catalog: String,
       srcRoot: Path, idxRoot: Path, idxIdent: String, from: Long,
-      to: Long, skipInsert: Boolean = false): (Boolean, Boolean) = {
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val dels = ch.filter(col("_change_type") === "delete").select("vec_id")
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("vec_id"), col("embedding"))
-    val insDel = ins.join(dels, Seq("vec_id"), "left_semi").limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes vec_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
-    val hasIns = !ins.isEmpty
-    if (hasIns && !skipInsert)
-      IvfPqOps.freshEncode(ins,
-          s.table(s"$catalog.${coarseIdent(idxIdent)}"),
-          s.table(s"$catalog.${pqcIdent(idxIdent)}"),
-          PqOps.M, PqOps.SubDim)
-        .writeTo(s"$catalog.$idxIdent").append()
-    val hasDel =
-      MinHashIndexMaintenance.chunkedEqDelete(dels, "vec_id", Seq(idxRoot))
-    (hasIns, hasDel)
+      to: Long, skipInsert: Boolean = false): Unit = {
+    val (ins, dels) =
+      PendingWindow.split(s, srcRoot, from, to, "vec_id", Seq("embedding"))()
+    if (!ins.isEmpty && !skipInsert) appendCodes(s, catalog, idxIdent, ins)
+    PendingWindow.chunkedEqDelete(dels.select("vec_id"), "vec_id", Seq(idxRoot))
   }
-
-  private[sources] def recoverPendingCdc(s: SparkSession, catalog: String,
-      srcIdent: String, idxIdent: String): Boolean = {
-    val idxRoot = tableRoot(s, catalog, idxIdent)
-    ManifestSink.readHeader(idxRoot).props.get(CdcPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(idxRoot, CdcPendingProp, p, vA)
-        val srcRoot = tableRoot(s, catalog, srcIdent)
-        val cur = ManifestSink.currentVersion(idxRoot)
-        // the apply order is deterministic (append, then delete), so the
-        // landed-commit count disambiguates exactly which half remains
-        if (cur == vA)
-          applyWindowCdc(s, catalog, srcRoot, idxRoot, idxIdent, pf, pt)
-        else {
-          // at least the first commit landed; re-derive the window shape
-          // and apply only what the landed count says is missing
-          val ch = windowChanges(s, srcRoot, pf, pt)
-          val hasIns = !ch.filter(col("_change_type") === "insert").isEmpty
-          val hasDel = !ch.filter(col("_change_type") === "delete").isEmpty
-          val expected = vA + (if (hasIns) 1L else 0L) + (if (hasDel) 1L else 0L)
-          if (cur < expected && hasIns && hasDel && cur == vA + 1L)
-            applyWindowCdc(s, catalog, srcRoot, idxRoot, idxIdent, pf, pt,
-              skipInsert = true)
-        }
-        finalizeWindowCdc(idxRoot, pt)
-        true
-    }
-  }
-
-  private def finalizeWindowCdc(idxRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(idxRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(CdcPendingProp)))
 
   /** [[refresh]] for sources that DELETE: consumes the row change feed,
     * so merge-on-read deletes in the window retire index rows through
-    * the equality-delete path instead of failing the refresh. Same
-    * exactly-once pivot; two deterministic commits per window. */
+    * the equality-delete path instead of failing the refresh. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      idxIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val idxRoot = tableRoot(s, catalog, idxIdent)
-    recoverPendingCdc(s, catalog, srcIdent, idxIdent)
-    val from = lastSourceVersion(s, catalog, idxIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(idxRoot, CdcPendingProp, from, to)
-    applyWindowCdc(s, catalog, srcRoot, idxRoot, idxIdent, from, to)
-    finalizeWindowCdc(idxRoot, to)
-    to
-  }
+      idxIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, idxIdent, Cdc)(w =>
+      applyWindowCdc(s, catalog, w.src, w.state, idxIdent, w.from, w.to,
+        w.skipInsert))
 }

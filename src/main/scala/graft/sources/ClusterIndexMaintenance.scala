@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
@@ -51,14 +50,14 @@ import graft.operators.DedupOps
   *      equality delete keyed by doc_id (zero base-file reads), then
   *      one append of the recomputed rows.
   *
-  * EXACTLY-ONCE via the [[PendingWindow]] pivot on the labels table.
-  * The marker's own commit version vA doubles as the PIN: a marker
-  * commit is metadata-only, so labels@vA IS the pre-window snapshot,
-  * and every derived set (R, M, the rewrite's delete keys) is a pure
-  * function of that immutable snapshot plus the window — recovery
-  * recomputes them bit-identically. The scrub rule: first equality-
-  * delete the window's INSERT keys from bands and both edge endpoints
-  * (erasing whatever partial append landed), then re-apply; the labels
+  * Exactly-once by [[PendingWindow]]'s scrub-and-re-apply rule, with the
+  * marker on the labels table. The marker's own commit version vA
+  * doubles as the PIN: a marker commit is metadata-only, so labels@vA IS
+  * the pre-window snapshot, and every derived set (R, M, the rewrite's
+  * delete keys) is a pure function of that immutable snapshot plus the
+  * window — recovery recomputes them bit-identically. The scrub
+  * equality-deletes the window's INSERT keys from bands and both edge
+  * endpoints (erasing whatever partial append landed); the labels
   * rewrite needs no special scrub because its delete-keys-then-append
   * is already deterministic-destructive — the recomputed delete key set
   * covers every row a partial prior attempt could have appended
@@ -68,23 +67,17 @@ import graft.operators.DedupOps
   * Scale shape: refresh I/O is delta + touched-components only; the
   * only corpus-proportional work is the initial create (one LSH pass,
   * the price of any index build). Key lists stream through
-  * [[MinHashIndexMaintenance.chunkedEqDelete]] — the driver never holds
+  * [[PendingWindow.chunkedEqDelete]] — the Spark driver never holds
   * more than one sorted partition of keys. The documented bound: a
   * single refresh window's touched-member set M is assumed to fit one
   * equality-delete sidecar family (~1e8 keys); a churn event touching
   * more than that should be split into narrower windows. */
 object ClusterIndexMaintenance {
-  private val SourceVersionProp = "cl.source-version"
-  private val CdcPendingProp = "cl.pending-cdc"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    java.nio.file.Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Cdc = PendingWindow.Protocol("cl", "cl.pending-cdc",
+    PendingWindow.ScrubReapply)
 
   def lastSourceVersion(s: SparkSession, catalog: String, labIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, labIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, labIdent, Cdc.kind)
 
   /** Verified near-dup edges (exact Jaccard ≥ 0.5) between `probe` docs
     * and band-table docs, texts for the standing side fetched
@@ -143,36 +136,23 @@ object ClusterIndexMaintenance {
     * cold create. */
   def createIndex(s: SparkSession, catalog: String, srcIdent: String,
       labIdent: String, edgeIdent: String, bandIdent: String,
-      knownEdges: Option[DataFrame] = None): Long = {
-    val v0 = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
-    s.sql(s"CREATE TABLE $catalog.$edgeIdent (doc_a BIGINT, doc_b BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'doc_a')")
-    s.sql(s"CREATE TABLE $catalog.$labIdent (doc_id BIGINT, rep BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'rep')")
-    val snap = s.table(s"$catalog.$srcIdent")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    MinHashIndexMaintenance.bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
-    val edges = knownEdges.getOrElse(DedupOps.nearDupPairsOf(snap)._1)
-      .select("doc_a", "doc_b").localCheckpoint()
-    edges.writeTo(s"$catalog.$edgeIdent").append()
-    DedupOps.labelsFor(snap.select("doc_id"), edges)
-      .writeTo(s"$catalog.$labIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, labIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
-
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("doc_id"), col("text"), col("_change_type"))
+      knownEdges: Option[DataFrame] = None): Long =
+    PendingWindow.create(s, catalog, srcIdent, labIdent, Cdc.kind) {
+      s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
+      s.sql(s"CREATE TABLE $catalog.$edgeIdent (doc_a BIGINT, doc_b BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'doc_a')")
+      s.sql(s"CREATE TABLE $catalog.$labIdent (doc_id BIGINT, rep BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'rep')")
+      val snap = s.table(s"$catalog.$srcIdent")
+        .select(col("doc_id"), col("text")).localCheckpoint()
+      MinHashIndexMaintenance.bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
+      val edges = knownEdges.getOrElse(DedupOps.nearDupPairsOf(snap)._1)
+        .select("doc_a", "doc_b").localCheckpoint()
+      edges.writeTo(s"$catalog.$edgeIdent").append()
+      DedupOps.labelsFor(snap.select("doc_id"), edges)
+        .writeTo(s"$catalog.$labIdent").append()
+    }
 
   /** Labels pinned to the marker's own commit version — metadata-only,
     * so this IS the pre-window snapshot every derived key set must be a
@@ -188,36 +168,30 @@ object ClusterIndexMaintenance {
   private[sources] def applyWindowCdc(s: SparkSession, catalog: String,
       srcRoot: Path, labIdent: String, edgeIdent: String, bandIdent: String,
       from: Long, to: Long, vPin: Long, scrub: Boolean = false): Unit = {
-    val labRoot = tableRoot(s, catalog, labIdent)
-    val edgeRoot = tableRoot(s, catalog, edgeIdent)
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val dels = ch.filter(col("_change_type") === "delete")
-      .select("doc_id").distinct().localCheckpoint()
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    val insDel = ins.join(dels, Seq("doc_id"), "left_semi").limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes doc_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
+    val Seq(labRoot, edgeRoot, bandRoot) = Seq(labIdent, edgeIdent, bandIdent)
+      .map(PendingWindow.tableRoot(s, catalog, _))
+    val (ins, dels) = PendingWindow.split(s, srcRoot, from, to, "doc_id",
+        Seq("text")) { (i, d) =>
+      val keys = d.select("doc_id").distinct().localCheckpoint()
+      (i.localCheckpoint(), keys)
+    }
     if (scrub) {
       // erase whatever partial prior attempt landed: the window's edge
       // appends all touch an inserted doc, its band appends are keyed by
       // inserted doc_id (labels need no scrub — the rewrite below is
       // deterministic-destructive over its recomputed key set)
       val insKeys = ins.select("doc_id")
-      MinHashIndexMaintenance.chunkedEqDelete(insKeys, "doc_id", Seq(bandRoot))
-      MinHashIndexMaintenance.chunkedEqDelete(
+      PendingWindow.chunkedEqDelete(insKeys, "doc_id", Seq(bandRoot))
+      PendingWindow.chunkedEqDelete(
         insKeys.toDF("doc_a"), "doc_a", Seq(edgeRoot))
-      MinHashIndexMaintenance.chunkedEqDelete(
+      PendingWindow.chunkedEqDelete(
         insKeys.toDF("doc_b"), "doc_b", Seq(edgeRoot))
     }
     // 1. bands: append inserts, retire deletes
     if (!ins.isEmpty) {
       MinHashIndexMaintenance.bandRows(ins).writeTo(s"$catalog.$bandIdent").append()
     }
-    MinHashIndexMaintenance.chunkedEqDelete(dels, "doc_id", Seq(bandRoot))
+    PendingWindow.chunkedEqDelete(dels, "doc_id", Seq(bandRoot))
     // 2. new edges (batch×batch + batch×standing), deletes excluded
     val newEdges =
       if (ins.isEmpty)
@@ -236,9 +210,9 @@ object ClusterIndexMaintenance {
     if (!newEdges.isEmpty) {
       newEdges.writeTo(s"$catalog.$edgeIdent").append()
     }
-    MinHashIndexMaintenance.chunkedEqDelete(
+    PendingWindow.chunkedEqDelete(
       dels.toDF("doc_a"), "doc_a", Seq(edgeRoot))
-    MinHashIndexMaintenance.chunkedEqDelete(
+    PendingWindow.chunkedEqDelete(
       dels.toDF("doc_b"), "doc_b", Seq(edgeRoot))
     // 3. touched reps: standing endpoints of new edges + deleted docs,
     //    looked up against the PINNED pre-window labels
@@ -264,48 +238,18 @@ object ClusterIndexMaintenance {
       members.toDF("doc_b"), "doc_b")
       .select("doc_a", "doc_b")
     val newLabels = DedupOps.labelsFor(members, touchedEdges).localCheckpoint()
-    MinHashIndexMaintenance.chunkedEqDelete(
+    PendingWindow.chunkedEqDelete(
       members0.union(insIds).union(dels), "doc_id", Seq(labRoot))
     if (!newLabels.isEmpty) {
       newLabels.writeTo(s"$catalog.$labIdent").append()
     }
   }
 
-  private def finalizeWindow(labRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(labRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(CdcPendingProp)))
-
-  private[sources] def recoverPendingCdc(s: SparkSession, catalog: String,
-      srcIdent: String, labIdent: String, edgeIdent: String,
-      bandIdent: String): Boolean = {
-    val labRoot = tableRoot(s, catalog, labIdent)
-    ManifestSink.readHeader(labRoot).props.get(CdcPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(labRoot, CdcPendingProp, p, vA)
-        applyWindowCdc(s, catalog, tableRoot(s, catalog, srcIdent),
-          labIdent, edgeIdent, bandIdent, pf, pt, vA, scrub = true)
-        finalizeWindow(labRoot, pt)
-        true
-    }
-  }
-
   /** Refresh the cluster index from the rows changed since the last
     * refresh. Returns the source version the index now reflects. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      labIdent: String, edgeIdent: String, bandIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val labRoot = tableRoot(s, catalog, labIdent)
-    recoverPendingCdc(s, catalog, srcIdent, labIdent, edgeIdent, bandIdent)
-    val from = lastSourceVersion(s, catalog, labIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    val vPin = PendingWindow.stage(labRoot, CdcPendingProp, from, to)
-    applyWindowCdc(s, catalog, srcRoot, labIdent, edgeIdent, bandIdent,
-      from, to, vPin)
-    finalizeWindow(labRoot, to)
-    to
-  }
+      labIdent: String, edgeIdent: String, bandIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, labIdent, Cdc)(w =>
+      applyWindowCdc(s, catalog, w.src, labIdent, edgeIdent, bandIdent,
+        w.from, w.to, w.vA, w.scrub))
 }

@@ -1,26 +1,22 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained materialized views over manifest tables,
   * composed entirely from the engine's own public surfaces:
   *
-  *   - the CHANGE FEED (`changesFromVersion`/`changesToVersion` read
-  *     options) yields exactly the rows appended between two versions,
-  *     with pure-append enforcement and `#rewrite` (OPTIMIZE) versions
+  *   - the ROW CHANGE FEED ([[PendingWindow.changes]]) yields exactly the
+  *     rows changed between two versions, `#rewrite` (OPTIMIZE) versions
   *     contributing nothing — see [[ManifestSink.addedEntries]];
   *   - MERGE INTO folds the delta aggregate into the view (count and
   *     per-column sums are the classic self-maintainable aggregates:
   *     new_state = old_state + delta, no access to history needed);
   *   - the free-form TBLPROPERTIES bag records the view's refresh state
   *     (`mv.source-version`, and `mv.pending-refresh` while a window is
-  *     in flight), so refresh is a pure function of durable table
-  *     state — any job, any session, any machine can run the next
-  *     refresh.
+  *     in flight).
   *
   * Scale shape: a refresh reads ONLY the delta files (the spec proves it
   * physically by deleting the already-consumed files first) and touches
@@ -28,70 +24,39 @@ import org.apache.spark.sql.functions._
   * filter rewrites only matched files). At 100 TB with daily appends of
   * 0.1%, refresh cost is proportional to the DAY, not the decade.
   *
-  * Delivery semantics: EXACTLY-ONCE under the single-refresher contract
-  * (the MV table is written only by this refresh loop — the natural
-  * deployment for a derived table). The protocol is a durable
-  * three-step: (1) commit `mv.pending-refresh = from:to:v` where v is
-  * the version that very commit occupies, (2) MERGE the window's delta,
-  * (3) ONE commit that both advances `mv.source-version` and clears the
-  * marker. A crash between any two steps is rolled forward by the next
-  * refresh: pending present and the MV still at v means the MERGE never
-  * landed (re-apply the window — nothing was folded); pending present
-  * and the MV past v means it did (skip straight to step 3). The signed
-  * fold is therefore never applied twice — the failure mode the old
-  * two-publish design (at-least-once, silent double-count) allowed.
-  * Do not run OPTIMIZE/compaction against the MV between a refresh
-  * crash and the next refresh: recovery distinguishes the two crash
-  * states by whether the MV advanced past v.
+  * Exactly-once by [[PendingWindow]]'s single-commit pivot: the MERGE is
+  * the window's one commit, so the signed fold is never applied twice —
+  * the failure mode the old two-publish design (at-least-once, silent
+  * double-count) allowed.
   *
-  * Retractions: the refresh consumes the ROW change feed
-  * (`changeFeedMode=cdc`), so MERGE-ON-READ deletes in the source fold
-  * into the view as sign −1 row images and a key whose live count hits
-  * zero leaves the view. Copy-on-write rewrites in the window still
-  * fail LOUDLY inside the feed — their row diff is not reconstructible,
-  * and silently skipping it would corrupt every downstream fold. */
+  * Retractions: merge-on-read deletes in the source fold into the view
+  * as sign −1 row images and a key whose live count hits zero leaves the
+  * view. Copy-on-write rewrites in the window still fail LOUDLY inside
+  * the feed — their row diff is not reconstructible, and silently
+  * skipping it would corrupt every downstream fold. */
 object IncrementalMv {
-  private val SourceVersionProp = "mv.source-version"
-  private val PendingProp = "mv.pending-refresh"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Refresh = PendingWindow.Protocol("mv", "mv.pending-refresh",
+    PendingWindow.SinglePivot)
 
   /** The view's last-consumed source version (0 = never refreshed). */
   def lastSourceVersion(s: SparkSession, catalog: String, mvIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, mvIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, mvIdent, Refresh.kind)
 
-  /** Step 1: durably stake out the window BEFORE folding it. The marker
-    * records the version its own commit occupies — that is the pivot
-    * recovery uses to decide whether the MERGE landed. Exposed to the
-    * spec so crash states can be constructed deliberately. */
   private[sources] def stagePending(mvRoot: Path, from: Long, to: Long): Unit =
-    PendingWindow.stage(mvRoot, PendingProp, from, to): Unit
+    PendingWindow.stage(mvRoot, Refresh.pending, from, to): Unit
 
-  /** Step 2: fold the (from, to] window's signed row change feed into
-    * the view. Pure function of durable state — safe to re-run ONLY
-    * when the previous attempt provably never committed (recovery
-    * checks that through the pending marker's recorded version). */
+  /** Fold the (from, to] window's signed row change feed into the view.
+    * Pure function of durable state — safe to re-run ONLY when the
+    * previous attempt provably never committed. */
   private[sources] def applyWindow(s: SparkSession, catalog: String,
       srcRoot: Path, mvIdent: String, keyCols: Seq[String],
       sumCols: Seq[String], from: Long, to: Long): Unit = {
-    // the delta: the ROW change feed for (from, to] — inserted rows
-    // fold in with sign +1, merge-on-read DELETED row images with sign
-    // -1 (count and sum are self-maintainable under retraction:
-    // state' = state + Σ sign·x). Copy-on-write rewrites in the window
-    // still fail loudly inside the feed — a silent skip would corrupt
-    // the view. Only the delta files (and the delete positions' base
-    // files) are ever read.
-    val delta = s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
+    // the delta: inserted rows fold in with sign +1, merge-on-read
+    // DELETED row images with sign -1 (count and sum are
+    // self-maintainable under retraction: state' = state + Σ sign·x).
+    // Only the delta files (and the delete positions' base files) are
+    // ever read.
+    val delta = PendingWindow.changes(s, srcRoot, from, to, cdc = true)
       .withColumn("_sign",
         when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L)))
     val aggs = sum(col("_sign")).as("n") +:
@@ -120,54 +85,14 @@ object IncrementalMv {
     finally s.catalog.dropTempView(view)
   }
 
-  /** Step 3: ONE commit advances the consumed-version pointer and
-    * clears the in-flight marker — atomicity here is what makes the
-    * recovery pivot sound. */
-  private[sources] def finalizeWindow(mvRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(mvRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(PendingProp)))
-
-  /** Roll an interrupted refresh forward (see the protocol scaladoc).
-    * Returns true if there was anything to recover. */
-  private[sources] def recoverPending(s: SparkSession, catalog: String,
-      srcIdent: String, mvIdent: String, keyCols: Seq[String],
-      sumCols: Seq[String]): Boolean = {
-    val mvRoot = tableRoot(s, catalog, mvIdent)
-    ManifestSink.readHeader(mvRoot).props.get(PendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(mvRoot, PendingProp, p, vA)
-        val cur = ManifestSink.currentVersion(mvRoot)
-        // cur == vA: the marker's commit is still the head — the MERGE
-        // never landed; apply the window now. cur > vA: the MERGE (or
-        // an empty-delta no-op followed by a crash before step 3)
-        // already folded; applying again would double-count.
-        if (cur == vA)
-          applyWindow(s, catalog, tableRoot(s, catalog, srcIdent), mvIdent,
-            keyCols, sumCols, pf, pt)
-        finalizeWindow(mvRoot, pt)
-        true
-    }
-  }
-
   /** Refresh `mvIdent` (schema: keyCols, n BIGINT, sum_<c> per sumCol)
-    * from the rows `srcIdent` appended since the last refresh. Returns
+    * from the rows `srcIdent` changed since the last refresh. Returns
     * the source version the view now reflects; a no-op (source
     * unchanged) returns it without committing anything. */
   def refresh(s: SparkSession, catalog: String, srcIdent: String,
       mvIdent: String, keyCols: Seq[String], sumCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "an aggregate view needs at least one key column")
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val mvRoot = tableRoot(s, catalog, mvIdent)
-    recoverPending(s, catalog, srcIdent, mvIdent, keyCols, sumCols)
-    val from = lastSourceVersion(s, catalog, mvIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    stagePending(mvRoot, from, to)
-    applyWindow(s, catalog, srcRoot, mvIdent, keyCols, sumCols, from, to)
-    finalizeWindow(mvRoot, to)
-    to
+    PendingWindow.refresh(s, catalog, srcIdent, mvIdent, Refresh)(w =>
+      applyWindow(s, catalog, w.src, mvIdent, keyCols, sumCols, w.from, w.to))
   }
 }

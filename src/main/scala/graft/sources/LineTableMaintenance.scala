@@ -1,21 +1,19 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
 
 /** Incremental maintenance of the standing LINE table (q206's corpus
-  * statistic) — the same durable-state protocol as [[PostingsMaintenance]]
-  * / [[AnnIndexMaintenance]] / [[SsimIndexMaintenance]], with one
-  * structural difference: line membership is REFERENCE-COUNTED. A line
-  * row is not owned by one doc (the prefix index's equality-delete path
-  * does not apply) — `df` counts the surviving source docs containing
-  * the line, so maintenance is a MERGE with count arithmetic, exactly
-  * the [[IncrementalMv]] retraction shape:
+  * statistic), with one structural difference from the other maintained
+  * indexes: line membership is REFERENCE-COUNTED. A line row is not
+  * owned by one doc (the prefix index's equality-delete path does not
+  * apply) — `df` counts the surviving source docs containing the line,
+  * so maintenance is a MERGE with count arithmetic, exactly the
+  * [[IncrementalMv]] retraction shape:
   *
   *   - CREATE counts each distinct line's containing docs on the source
   *     SNAPSHOT and records the consumed version;
@@ -26,23 +24,16 @@ import graft.operators.DedupOps
   *     delta INSERT. Merge-on-read source deletes arrive as delete
   *     images in the feed — the window's I/O is delta-only.
   *
-  * EXACTLY-ONCE under the single-refresher contract via the
-  * [[PendingWindow]] pivot: the MERGE is a single deterministic commit
-  * recomputed from the pinned (from, to] window on crash replay.
-  * Scale shape: refresh cost follows the window's docs; the only
-  * corpus-proportional pass is CREATE. */
+  * Exactly-once by [[PendingWindow]]'s single-commit pivot: the MERGE is
+  * one deterministic commit recomputed from the pinned (from, to]
+  * window on crash replay. Scale shape: refresh cost follows the
+  * window's docs; the only corpus-proportional pass is CREATE. */
 object LineTableMaintenance {
-  private val SourceVersionProp = "linem.source-version"
-  private val PendingProp = "linem.pending"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Cdc = PendingWindow.Protocol("linem", "linem.pending",
+    PendingWindow.SinglePivot)
 
   def lastSourceVersion(s: SparkSession, catalog: String, linesIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, linesIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, linesIdent, Cdc.kind)
 
   /** One membership row per (doc, distinct line) — a line repeated
     * WITHIN a doc counts once, matching q206's membership semantics. */
@@ -54,45 +45,20 @@ object LineTableMaintenance {
   /** Build the line table on the source's CURRENT snapshot, record the
     * consumed version. Returns it. */
   def create(s: SparkSession, catalog: String, srcIdent: String,
-      linesIdent: String): Long = {
-    val v0 = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    s.sql(s"CREATE TABLE $catalog.$linesIdent (line STRING, df BIGINT) " +
-      "TBLPROPERTIES ('bloom.columns' = 'line')")
-    docLines(s.table(s"$catalog.$srcIdent"))
-      .groupBy("line").agg(count(lit(1)).as("df"))
-      .writeTo(s"$catalog.$linesIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, linesIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
+      linesIdent: String): Long =
+    PendingWindow.create(s, catalog, srcIdent, linesIdent, Cdc.kind) {
+      s.sql(s"CREATE TABLE $catalog.$linesIdent (line STRING, df BIGINT) " +
+        "TBLPROPERTIES ('bloom.columns' = 'line')")
+      docLines(s.table(s"$catalog.$srcIdent"))
+        .groupBy("line").agg(count(lit(1)).as("df"))
+        .writeTo(s"$catalog.$linesIdent").append()
+    }
 
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("doc_id"), col("text"), col("_change_type"))
-
-  /** ONE deterministic MERGE commit folds the window's ±1 memberships.
-    * A doc both inserted and deleted inside one window is REFUSED (the
-    * feed carries no intra-window ordering), mirroring
-    * [[SsimIndexMaintenance.applyWindowCdc]]. */
+  /** ONE deterministic MERGE commit folds the window's ±1 memberships. */
   private[sources] def applyWindow(s: SparkSession, catalog: String,
       srcRoot: Path, linesIdent: String, from: Long, to: Long): Unit = {
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("doc_id"), col("text"))
-    val del = ch.filter(col("_change_type") === "delete")
-      .select(col("doc_id"), col("text"))
-    val insDel = ins.join(del.select("doc_id"), Seq("doc_id"), "left_semi")
-      .limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes doc_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
+    val (ins, del) =
+      PendingWindow.split(s, srcRoot, from, to, "doc_id", Seq("text"))()
     // memberships fully cancelling within the window (delta 0) must not
     // INSERT a zero row nor UPDATE — drop them before the merge
     val deltas = docLines(ins).withColumn("d", lit(1L))
@@ -111,43 +77,11 @@ object LineTableMaintenance {
     }
   }
 
-  private def finalizeWindow(linesRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(linesRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(PendingProp)))
-
-  private[sources] def recoverPending(s: SparkSession, catalog: String,
-      srcIdent: String, linesIdent: String): Boolean = {
-    val linesRoot = tableRoot(s, catalog, linesIdent)
-    ManifestSink.readHeader(linesRoot).props.get(PendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(linesRoot, PendingProp, p, vA)
-        // single-commit apply: at vA the merge never landed — redo it;
-        // past vA it landed — only the finalize remains
-        if (ManifestSink.currentVersion(linesRoot) == vA)
-          applyWindow(s, catalog, tableRoot(s, catalog, srcIdent),
-            linesIdent, pf, pt)
-        finalizeWindow(linesRoot, pt)
-        true
-    }
-  }
-
   /** Fold every source change since the last refresh (appends AND
     * merge-on-read deletes) into the line table. Returns the source
     * version the table now reflects. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      linesIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val linesRoot = tableRoot(s, catalog, linesIdent)
-    recoverPending(s, catalog, srcIdent, linesIdent)
-    val from = lastSourceVersion(s, catalog, linesIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(linesRoot, PendingProp, from, to)
-    applyWindow(s, catalog, srcRoot, linesIdent, from, to)
-    finalizeWindow(linesRoot, to)
-    to
-  }
+      linesIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, linesIdent, Cdc)(w =>
+      applyWindow(s, catalog, w.src, linesIdent, w.from, w.to))
 }

@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
@@ -31,17 +30,12 @@ import graft.operators.DedupOps
   * doc_id, and an index rebuilt from scratch is bit-identical to one
   * maintained through any append/delete history (q209's oracle proof).
   *
-  * EXACTLY-ONCE via the [[PendingWindow]] pivot on the bands table, with
-  * a recovery rule SIMPLER than set-sim's commit counting: a recovering
-  * refresh first equality-deletes the window's inserted doc_ids from
-  * both tables (scrubbing whatever partial append landed), then
-  * re-applies the window. This is exact because (a) equality deletes
-  * follow the Iceberg v2 sequencing rule — they apply only to files
-  * committed BEFORE the delete, so the scrub can never touch the
-  * re-append that follows it — and (b) doc_ids are unique across the
-  * source's life (the same contract as the postings/ANN/set-sim
-  * indexes: compose with exact dedup upstream if ids can recur), so the
-  * scrub can only remove THIS window's rows.
+  * Exactly-once by [[PendingWindow]]'s scrub-and-re-apply rule, with the
+  * marker on the bands table. Scrubbing is exact here because a doc's
+  * digest and band rows are keyed by its own doc_id and derived from its
+  * own text alone: equality-deleting the window's inserted doc_ids
+  * erases exactly the rows a partial apply could have appended, and the
+  * re-apply recomputes them bit-identically.
   *
   * Scale shape: refresh I/O is delta-only (the change feed opens only
   * window files — MinHashMaintenanceSpec deletes consumed files to
@@ -52,17 +46,11 @@ import graft.operators.DedupOps
   * orders of magnitude smaller than the corpus, probed with
   * broadcast-driven runtime file pruning (the q199 pattern). */
 object MinHashIndexMaintenance {
-  private val SourceVersionProp = "mh.source-version"
-  private val CdcPendingProp = "mh.pending-cdc"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Cdc = PendingWindow.Protocol("mh", "mh.pending-cdc",
+    PendingWindow.ScrubReapply)
 
   def lastSourceVersion(s: SparkSession, catalog: String, bandIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, bandIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, bandIdent, Cdc.kind)
 
   /** One digest row per doc — the exact-match arm (q119's md5 join). */
   private[graft] def digestRows(docs: DataFrame): DataFrame =
@@ -82,125 +70,44 @@ object MinHashIndexMaintenance {
   /** Build both index tables on the source's CURRENT snapshot, record
     * the consumed version. Returns it. */
   def createIndex(s: SparkSession, catalog: String, srcIdent: String,
-      digIdent: String, bandIdent: String): Long = {
-    val v0 = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    s.sql(s"CREATE TABLE $catalog.$digIdent (h STRING, doc_id BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'h', 'bloom.columns' = 'h')")
-    s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
-    val snap = s.table(s"$catalog.$srcIdent")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    digestRows(snap).writeTo(s"$catalog.$digIdent").append()
-    bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, bandIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
-
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("doc_id"), col("text"), col("_change_type"))
-
-  /** Equality-delete key chunk size: the driver never holds more than
-    * one sorted partition (via toLocalIterator) and never passes more
-    * than this many keys to one deleteWhereEq commit. Each chunk is an
-    * independent idempotent metadata commit, so a crash between chunks
-    * is healed by the same scrub + re-apply recovery as any other
-    * partial window. Bounds DRIVER memory, not window size — a window
-    * of any size streams through; the remaining (documented) bound is
-    * the eq-delete SIDECAR count: a window of K deleted keys lands
-    * ceil(K / chunk) sidecar files per table, so refresh cadence should
-    * keep windows well under ~1e8 keys or OPTIMIZE afterwards. */
-  private val EqDelChunk = 100000
-
-  /** Stream `keyDf`'s single BIGINT column to equality deletes on every
-    * root in `roots`, in sorted EqDelChunk-sized slices. Returns true
-    * iff at least one key was deleted. */
-  private[sources] def chunkedEqDelete(keyDf: DataFrame, column: String,
-      roots: Seq[Path]): Boolean = {
-    import scala.jdk.CollectionConverters._
-    var any = false
-    keyDf.distinct().sort(column).toLocalIterator().asScala
-      .map(_.getLong(0).toString).grouped(EqDelChunk).foreach { ks =>
-        any = true
-        roots.foreach(r =>
-          ManifestSink.deleteWhereEq(r.toString, column, ks.toSeq))
-      }
-    any
-  }
+      digIdent: String, bandIdent: String): Long =
+    PendingWindow.create(s, catalog, srcIdent, bandIdent, Cdc.kind) {
+      s.sql(s"CREATE TABLE $catalog.$digIdent (h STRING, doc_id BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'h', 'bloom.columns' = 'h')")
+      s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
+      val snap = s.table(s"$catalog.$srcIdent")
+        .select(col("doc_id"), col("text")).localCheckpoint()
+      digestRows(snap).writeTo(s"$catalog.$digIdent").append()
+      bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
+    }
 
   /** Apply one window: append the inserted docs' digest + band rows,
     * then retire its deletes as equality deletes keyed by doc_id —
-    * zero base-file reads, driver-bounded via [[chunkedEqDelete]].
-    * `scrub = true` (recovery) first equality-deletes the window's
-    * INSERT keys from both tables so a partially-landed prior attempt
-    * is erased before the re-apply (see the object doc for why this is
-    * exact). A key both inserted and deleted inside one window is
-    * REFUSED — the feed carries no intra-window ordering. */
+    * zero base-file reads, driver-bounded via
+    * [[PendingWindow.chunkedEqDelete]]. `scrub = true` (recovery) first
+    * equality-deletes the window's INSERT keys from both tables so a
+    * partially-landed prior attempt is erased before the re-apply. */
   private[sources] def applyWindowCdc(s: SparkSession, catalog: String,
       srcRoot: Path, digIdent: String, bandIdent: String,
       from: Long, to: Long, scrub: Boolean = false): Unit = {
-    val digRoot = tableRoot(s, catalog, digIdent)
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val dels = ch.filter(col("_change_type") === "delete").select("doc_id")
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("doc_id"), col("text")).localCheckpoint()
-    val insDel = ins.join(dels, Seq("doc_id"), "left_semi").limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes doc_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
-    if (scrub) {
-      chunkedEqDelete(ins.select("doc_id"), "doc_id", Seq(digRoot, bandRoot))
-    }
+    val roots = Seq(digIdent, bandIdent).map(PendingWindow.tableRoot(s, catalog, _))
+    val (ins, dels) = PendingWindow.split(s, srcRoot, from, to, "doc_id",
+      Seq("text"))((i, d) => (i.localCheckpoint(), d))
+    if (scrub) PendingWindow.chunkedEqDelete(ins.select("doc_id"), "doc_id", roots)
     if (!ins.isEmpty) {
       digestRows(ins).writeTo(s"$catalog.$digIdent").append()
       bandRows(ins).writeTo(s"$catalog.$bandIdent").append()
     }
-    chunkedEqDelete(dels, "doc_id", Seq(digRoot, bandRoot))
-  }
-
-  private def finalizeWindow(bandRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(bandRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(CdcPendingProp)))
-
-  private[sources] def recoverPendingCdc(s: SparkSession, catalog: String,
-      srcIdent: String, digIdent: String, bandIdent: String): Boolean = {
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    ManifestSink.readHeader(bandRoot).props.get(CdcPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(bandRoot, CdcPendingProp, p, vA)
-        applyWindowCdc(s, catalog, tableRoot(s, catalog, srcIdent),
-          digIdent, bandIdent, pf, pt, scrub = true)
-        finalizeWindow(bandRoot, pt)
-        true
-    }
+    PendingWindow.chunkedEqDelete(dels.select("doc_id"), "doc_id", roots)
   }
 
   /** Refresh both tables from the rows changed since the last refresh
     * (inserts appended, merge-on-read deletes retired as equality
     * deletes). Returns the source version the index now reflects. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      digIdent: String, bandIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    recoverPendingCdc(s, catalog, srcIdent, digIdent, bandIdent)
-    val from = lastSourceVersion(s, catalog, bandIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(bandRoot, CdcPendingProp, from, to)
-    applyWindowCdc(s, catalog, srcRoot, digIdent, bandIdent, from, to)
-    finalizeWindow(bandRoot, to)
-    to
-  }
+      digIdent: String, bandIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, bandIdent, Cdc)(w =>
+      applyWindowCdc(s, catalog, w.src, digIdent, bandIdent, w.from, w.to,
+        w.scrub))
 }

@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.MultimodalOps
@@ -25,28 +24,23 @@ import graft.operators.MultimodalOps
   * there is NO corpus statistic: a doc's hash and band rows depend on
   * its own pixels alone, so appends are pure insertion, deletes are
   * equality deletes keyed by doc_id, and a rebuilt index is
-  * bit-identical to a maintained one. EXACTLY-ONCE via the
-  * [[PendingWindow]] pivot on the bands table with the q208 scrub rule
-  * (recovery equality-deletes the window's insert keys from both
-  * tables, then re-applies). Key lists stream through
-  * [[MinHashIndexMaintenance.chunkedEqDelete]].
+  * bit-identical to a maintained one. Exactly-once by
+  * [[PendingWindow]]'s scrub-and-re-apply rule with the marker on the
+  * bands table: both tables key their rows by the doc's own doc_id, so
+  * scrubbing the window's insert keys erases exactly what a partial
+  * apply appended. Key lists stream through
+  * [[PendingWindow.chunkedEqDelete]].
   *
   * Scale shape: refresh I/O is delta-only; the index is 4 longs + 4
   * short strings per doc — orders of magnitude smaller than the media
   * it indexes; probes are band-key equi-joins against bloomed,
   * sort-clustered files. */
 object PhashIndexMaintenance {
-  private val SourceVersionProp = "ph.source-version"
-  private val CdcPendingProp = "ph.pending-cdc"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Cdc = PendingWindow.Protocol("ph", "ph.pending-cdc",
+    PendingWindow.ScrubReapply)
 
   def lastSourceVersion(s: SparkSession, catalog: String, bandIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, bandIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, bandIdent, Cdc.kind)
 
   /** (doc_id, px) → one hash row per doc. */
   private[graft] def hashRows(media: DataFrame): DataFrame =
@@ -62,94 +56,41 @@ object PhashIndexMaintenance {
   /** Build both index tables on the media source's CURRENT snapshot,
     * record the consumed version. Returns it. */
   def createIndex(s: SparkSession, catalog: String, srcIdent: String,
-      hashIdent: String, bandIdent: String): Long = {
-    val v0 = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    s.sql(s"CREATE TABLE $catalog.$hashIdent (doc_id BIGINT, bands ARRAY<BIGINT>) " +
-      "TBLPROPERTIES ('write.sort-by' = 'doc_id')")
-    s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
-    val snap = s.table(s"$catalog.$srcIdent")
-      .select(col("doc_id"), col("px")).localCheckpoint()
-    hashRows(snap).writeTo(s"$catalog.$hashIdent").append()
-    bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, bandIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
-
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("doc_id"), col("px"), col("_change_type"))
+      hashIdent: String, bandIdent: String): Long =
+    PendingWindow.create(s, catalog, srcIdent, bandIdent, Cdc.kind) {
+      s.sql(s"CREATE TABLE $catalog.$hashIdent (doc_id BIGINT, bands ARRAY<BIGINT>) " +
+        "TBLPROPERTIES ('write.sort-by' = 'doc_id')")
+      s.sql(s"CREATE TABLE $catalog.$bandIdent (band STRING, doc_id BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'band', 'bloom.columns' = 'band')")
+      val snap = s.table(s"$catalog.$srcIdent")
+        .select(col("doc_id"), col("px")).localCheckpoint()
+      hashRows(snap).writeTo(s"$catalog.$hashIdent").append()
+      bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
+    }
 
   /** Apply one window (the q208 protocol: scrub erases the window's
     * partial inserts on recovery, appends land the inserts, equality
     * deletes retire the deletes from both arms — zero base-file
-    * reads). A key both inserted and deleted in one window is refused. */
+    * reads). */
   private[sources] def applyWindowCdc(s: SparkSession, catalog: String,
       srcRoot: Path, hashIdent: String, bandIdent: String,
       from: Long, to: Long, scrub: Boolean = false): Unit = {
-    val hashRoot = tableRoot(s, catalog, hashIdent)
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val dels = ch.filter(col("_change_type") === "delete").select("doc_id")
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("doc_id"), col("px")).localCheckpoint()
-    val insDel = ins.join(dels, Seq("doc_id"), "left_semi").limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes doc_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
-    if (scrub) {
-      MinHashIndexMaintenance.chunkedEqDelete(ins.select("doc_id"),
-        "doc_id", Seq(hashRoot, bandRoot))
-    }
+    val roots = Seq(hashIdent, bandIdent).map(PendingWindow.tableRoot(s, catalog, _))
+    val (ins, dels) = PendingWindow.split(s, srcRoot, from, to, "doc_id",
+      Seq("px"))((i, d) => (i.localCheckpoint(), d))
+    if (scrub) PendingWindow.chunkedEqDelete(ins.select("doc_id"), "doc_id", roots)
     if (!ins.isEmpty) {
       hashRows(ins).writeTo(s"$catalog.$hashIdent").append()
       bandRows(ins).writeTo(s"$catalog.$bandIdent").append()
     }
-    MinHashIndexMaintenance.chunkedEqDelete(dels, "doc_id",
-      Seq(hashRoot, bandRoot))
-  }
-
-  private def finalizeWindow(bandRoot: Path, to: Long): Unit =
-    ManifestSink.alterSchema(bandRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(CdcPendingProp)))
-
-  private[sources] def recoverPendingCdc(s: SparkSession, catalog: String,
-      srcIdent: String, hashIdent: String, bandIdent: String): Boolean = {
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    ManifestSink.readHeader(bandRoot).props.get(CdcPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(bandRoot, CdcPendingProp, p, vA)
-        applyWindowCdc(s, catalog, tableRoot(s, catalog, srcIdent),
-          hashIdent, bandIdent, pf, pt, scrub = true)
-        finalizeWindow(bandRoot, pt)
-        true
-    }
+    PendingWindow.chunkedEqDelete(dels.select("doc_id"), "doc_id", roots)
   }
 
   /** Refresh both tables from the rows changed since the last refresh.
     * Returns the source version the index now reflects. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      hashIdent: String, bandIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val bandRoot = tableRoot(s, catalog, bandIdent)
-    recoverPendingCdc(s, catalog, srcIdent, hashIdent, bandIdent)
-    val from = lastSourceVersion(s, catalog, bandIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(bandRoot, CdcPendingProp, from, to)
-    applyWindowCdc(s, catalog, srcRoot, hashIdent, bandIdent, from, to)
-    finalizeWindow(bandRoot, to)
-    to
-  }
+      hashIdent: String, bandIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, bandIdent, Cdc)(w =>
+      applyWindowCdc(s, catalog, w.src, hashIdent, bandIdent, w.from, w.to,
+        w.scrub))
 }

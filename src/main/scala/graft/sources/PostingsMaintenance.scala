@@ -1,14 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the BM25 inverted index AT REST — the
-  * production search-ingest loop, composed from the same durable-state
-  * protocol as [[IncrementalMv]]:
+  * production search-ingest loop:
   *
   *   - the DOCUMENT table's change feed yields exactly the docs appended
   *     since the last refresh (append-only enforced; a CoW rewrite or
@@ -22,15 +21,10 @@ import org.apache.spark.sql.functions._
   *     additively in the same finalize commit that advances the
   *     consumed-version pointer and clears the in-flight marker.
   *
-  * EXACTLY-ONCE under the single-refresher contract, by the identical
-  * three-step pending protocol as [[IncrementalMv]]: (1) durably stake
-  * out the window (`postings.pending` records the version its own
-  * commit occupies), (2) append the delta postings, (3) one commit
-  * advances pointer + constants + clears the marker. Crash recovery
-  * pivots on whether the postings table advanced past the marker's
-  * version; the window's constants re-derive deterministically from the
-  * still-readable change feed, so no partial fold is ever applied
-  * twice.
+  * Exactly-once by [[PendingWindow]]'s single-commit pivot on the
+  * postings table (`postings.pending`); the window's constants
+  * re-derive deterministically from the still-readable change feed, so
+  * no partial fold is ever applied twice.
   *
   * Scale shape: refresh I/O is proportional to the DELTA — only the
   * docs appended in the window are read (the spec proves it by deleting
@@ -38,19 +32,13 @@ import org.apache.spark.sql.functions._
   * cost keeps following |query terms| (per-delta term clustering; an
   * occasional OPTIMIZE re-clusters across deltas). */
 object PostingsMaintenance {
-  private val SourceVersionProp = "postings.source-version"
-  private val PendingProp = "postings.pending"
+  private val Refresh = PendingWindow.Protocol("postings", "postings.pending",
+    PendingWindow.SinglePivot)
   private val NDocsProp = "bm25.n-docs"
   private val SumDlProp = "bm25.sum-dl"
 
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
-
   def lastSourceVersion(s: SparkSession, catalog: String, postingsIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, postingsIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, postingsIdent, Refresh.kind)
 
   /** Create the postings table in the q148 at-rest layout. */
   def createPostingsTable(s: SparkSession, catalog: String, ident: String): Unit =
@@ -62,21 +50,18 @@ object PostingsMaintenance {
     * CHANGE FEED, so only delta files are ever opened. */
   private def windowDelta(s: SparkSession, srcRoot: Path,
       from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .load()
+    PendingWindow.changes(s, srcRoot, from, to, cdc = false)
       .select(col("doc_id"),
         expr("filter(split(text, ' '), t -> t != '')").as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"), col("toks"))
 
   private[sources] def stagePending(postRoot: Path, from: Long, to: Long): Unit =
-    PendingWindow.stage(postRoot, PendingProp, from, to): Unit
+    PendingWindow.stage(postRoot, Refresh.pending, from, to): Unit
 
   /** Returns the window's (docs, Σdl) observed in the SAME pass that
     * wrote the postings — the happy path pays one delta read, not two;
-    * crash recovery re-derives them from the feed instead. */
+    * a recovery that finds the append landed re-derives them from the
+    * feed instead. */
   private[sources] def applyWindow(s: SparkSession, catalog: String,
       srcRoot: Path, postingsIdent: String, from: Long,
       to: Long): Option[(Long, Long)] = {
@@ -109,54 +94,28 @@ object PostingsMaintenance {
     } catch { case _: Exception => None }
   }
 
-  private[sources] def finalizeWindow(s: SparkSession, catalog: String,
-      srcRoot: Path, postRoot: Path, from: Long, to: Long,
-      observed: Option[(Long, Long)] = None): Unit = {
-    // window constants re-derive deterministically from the feed — the
-    // happy path hands them over from applyWindow's observation; crash
-    // recovery recomputes
-    val (dn, dsum) = observed.getOrElse(windowDelta(s, srcRoot, from, to)
+  /** The finalize commit's constants: the totals folded with the
+    * window's (docs, Σdl) — handed over from applyWindow's observation,
+    * or re-derived from the feed when there is none (recovery). */
+  private def constants(s: SparkSession, w: PendingWindow.Window,
+      observed: Option[(Long, Long)]): Seq[TableChange] = {
+    val (dn, dsum) = observed.getOrElse(windowDelta(s, w.src, w.from, w.to)
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).head)
-    val props = ManifestSink.readHeader(postRoot).props
+    val props = ManifestSink.readHeader(w.state).props
     val n0 = props.getOrElse(NDocsProp, "0").toLong
     val s0 = props.getOrElse(SumDlProp, "0").toLong
-    ManifestSink.alterSchema(postRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.setProperty(NDocsProp, (n0 + dn).toString),
-      TableChange.setProperty(SumDlProp, (s0 + dsum).toString),
-      TableChange.removeProperty(PendingProp)))
-  }
-
-  private[sources] def recoverPending(s: SparkSession, catalog: String,
-      srcIdent: String, postingsIdent: String): Boolean = {
-    val postRoot = tableRoot(s, catalog, postingsIdent)
-    ManifestSink.readHeader(postRoot).props.get(PendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(postRoot, PendingProp, p, vA)
-        val srcRoot = tableRoot(s, catalog, srcIdent)
-        if (ManifestSink.currentVersion(postRoot) == vA)
-          applyWindow(s, catalog, srcRoot, postingsIdent, pf, pt): Unit
-        finalizeWindow(s, catalog, srcRoot, postRoot, pf, pt)
-        true
-    }
+    Seq(TableChange.setProperty(NDocsProp, (n0 + dn).toString),
+      TableChange.setProperty(SumDlProp, (s0 + dsum).toString))
   }
 
   /** Refresh the postings table from the docs appended since the last
     * refresh. Returns the source version the index now reflects. */
   def refresh(s: SparkSession, catalog: String, srcIdent: String,
       postingsIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val postRoot = tableRoot(s, catalog, postingsIdent)
-    recoverPending(s, catalog, srcIdent, postingsIdent)
-    val from = lastSourceVersion(s, catalog, postingsIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    stagePending(postRoot, from, to)
-    val observed = applyWindow(s, catalog, srcRoot, postingsIdent, from, to)
-    finalizeWindow(s, catalog, srcRoot, postRoot, from, to, observed)
-    to
+    var observed: Option[(Long, Long)] = None
+    PendingWindow.refresh(s, catalog, srcIdent, postingsIdent, Refresh,
+      finish = w => constants(s, w, observed))(w =>
+      observed = applyWindow(s, catalog, w.src, postingsIdent, w.from, w.to))
   }
 }

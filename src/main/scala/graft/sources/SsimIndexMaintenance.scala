@@ -1,17 +1,15 @@
 package graft.sources
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.TableChange
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
 
 /** Incremental maintenance of the exact set-similarity PREFIX index AT
   * REST — the set-sim analogue of [[PostingsMaintenance]] (BM25) and
-  * [[AnnIndexMaintenance]] (IVFPQ), sharing the same durable-state
-  * protocol:
+  * [[AnnIndexMaintenance]] (IVFPQ):
   *
   *   - CREATE computes the document-frequency statistic on the source
   *     SNAPSHOT — the index's FROZEN total order — plus every doc's
@@ -44,26 +42,23 @@ import graft.operators.DedupOps
   * upstream when clone folding is wanted; that is the same contract as
   * the postings and ANN indexes, which key on vec_id/doc_id verbatim.
   *
-  * EXACTLY-ONCE under the single-refresher contract via the
-  * [[PendingWindow]] three-step pivot. Scale shape: refresh I/O is
+  * Exactly-once by [[PendingWindow]]: `refresh` by the single-commit
+  * pivot, `refreshCdc` by commit counting (append, then delete), and
+  * `reindex` by idempotent overwrite. Scale shape: refresh I/O is
   * proportional to the delta (only window files are read — the spec
   * deletes consumed files to prove it); deletes are metadata-sized;
   * reindex is the only corpus-proportional operation and is an explicit
   * scheduled repair, exactly like ANN codebook re-creates. */
 object SsimIndexMaintenance {
-  private val SourceVersionProp = "ssim.source-version"
-  private val PendingProp = "ssim.pending"
-  private val CdcPendingProp = "ssim.pending-cdc"
-  private val ReindexPendingProp = "ssim.pending-reindex"
-
-  private def warehouse(s: SparkSession, catalog: String): Path =
-    Paths.get(s.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-  private def tableRoot(s: SparkSession, catalog: String, ident: String): Path =
-    ident.split('.').foldLeft(warehouse(s, catalog))(_.resolve(_))
+  private val Append = PendingWindow.Protocol("ssim", "ssim.pending",
+    PendingWindow.SinglePivot)
+  private val Cdc = PendingWindow.Protocol("ssim", "ssim.pending-cdc",
+    PendingWindow.CommitCount)
+  private val Reindex = PendingWindow.Protocol("ssim", "ssim.pending-reindex",
+    PendingWindow.Overwrite)
 
   def lastSourceVersion(s: SparkSession, catalog: String, preIdent: String): Long =
-    ManifestSink.readHeader(tableRoot(s, catalog, preIdent))
-      .props.getOrElse(SourceVersionProp, "0").toLong
+    PendingWindow.sourceVersion(s, catalog, preIdent, Append.kind)
 
   /** Non-canonicalizing doc → distinct-shingle tokens (see KEYING). */
   private[graft] def docTokens(docs: DataFrame): DataFrame =
@@ -104,166 +99,72 @@ object SsimIndexMaintenance {
   /** Build the index on the source's CURRENT snapshot, record the
     * consumed version. Returns it. */
   def createIndex(s: SparkSession, catalog: String, srcIdent: String,
-      dfIdent: String, preIdent: String): Long = {
-    val v0 = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    s.sql(s"CREATE TABLE $catalog.$dfIdent (token STRING, df BIGINT) " +
-      "TBLPROPERTIES ('bloom.columns' = 'token')")
-    s.sql(s"CREATE TABLE $catalog.$preIdent " +
-      "(token STRING, doc_id BIGINT, m BIGINT) " +
-      "TBLPROPERTIES ('write.sort-by' = 'token', 'bloom.columns' = 'token')")
-    val snap = s.table(s"$catalog.$srcIdent")
-    dfStats(snap).select(col("token"), col("df"))
-      .writeTo(s"$catalog.$dfIdent").append()
-    DedupOps.prefixTokens(
-        docTokens(snap).join(s.table(s"$catalog.$dfIdent"), "token"),
-        DedupOps.SsimIndexBuildTBp)
-      .select(col("token"), col("doc_id"), col("m"))
-      .writeTo(s"$catalog.$preIdent").append()
-    ManifestSink.alterSchema(tableRoot(s, catalog, preIdent),
-      Seq(TableChange.setProperty(SourceVersionProp, v0.toString)))
-    v0
-  }
-
-  /** The window's docs — from the CHANGE FEED, so only delta files are
-    * ever opened (append-only enforced by the feed itself). */
-  private def windowDelta(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .load()
-      .select(col("doc_id"), col("text"))
+      dfIdent: String, preIdent: String): Long =
+    PendingWindow.create(s, catalog, srcIdent, preIdent, Append.kind) {
+      s.sql(s"CREATE TABLE $catalog.$dfIdent (token STRING, df BIGINT) " +
+        "TBLPROPERTIES ('bloom.columns' = 'token')")
+      s.sql(s"CREATE TABLE $catalog.$preIdent " +
+        "(token STRING, doc_id BIGINT, m BIGINT) " +
+        "TBLPROPERTIES ('write.sort-by' = 'token', 'bloom.columns' = 'token')")
+      val snap = s.table(s"$catalog.$srcIdent")
+      dfStats(snap).select(col("token"), col("df"))
+        .writeTo(s"$catalog.$dfIdent").append()
+      DedupOps.prefixTokens(
+          docTokens(snap).join(s.table(s"$catalog.$dfIdent"), "token"),
+          DedupOps.SsimIndexBuildTBp)
+        .select(col("token"), col("doc_id"), col("m"))
+        .writeTo(s"$catalog.$preIdent").append()
+    }
 
   private[sources] def applyWindow(s: SparkSession, catalog: String,
       srcRoot: Path, dfIdent: String, preIdent: String,
       from: Long, to: Long): Unit =
-    frozenOrderPrefixes(s, catalog, dfIdent, windowDelta(s, srcRoot, from, to))
+    frozenOrderPrefixes(s, catalog, dfIdent,
+        PendingWindow.changes(s, srcRoot, from, to, cdc = false)
+          .select(col("doc_id"), col("text")))
       .writeTo(s"$catalog.$preIdent").append()
 
-  private def finalizeWindow(preRoot: Path, prop: String, to: Long): Unit =
-    ManifestSink.alterSchema(preRoot, Seq(
-      TableChange.setProperty(SourceVersionProp, to.toString),
-      TableChange.removeProperty(prop)))
-
-  private[sources] def recoverPending(s: SparkSession, catalog: String,
-      srcIdent: String, dfIdent: String, preIdent: String): Boolean = {
-    val preRoot = tableRoot(s, catalog, preIdent)
-    ManifestSink.readHeader(preRoot).props.get(PendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(preRoot, PendingProp, p, vA)
-        if (ManifestSink.currentVersion(preRoot) == vA)
-          applyWindow(s, catalog, tableRoot(s, catalog, srcIdent),
-            dfIdent, preIdent, pf, pt)
-        finalizeWindow(preRoot, PendingProp, pt)
-        true
-    }
-  }
+  private def appendApply(s: SparkSession, catalog: String, dfIdent: String,
+      preIdent: String)(w: PendingWindow.Window): Unit =
+    applyWindow(s, catalog, w.src, dfIdent, preIdent, w.from, w.to)
 
   /** Refresh from the docs appended since the last refresh. Returns the
     * source version the index now reflects. */
   def refresh(s: SparkSession, catalog: String, srcIdent: String,
-      dfIdent: String, preIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val preRoot = tableRoot(s, catalog, preIdent)
-    recoverPending(s, catalog, srcIdent, dfIdent, preIdent)
-    val from = lastSourceVersion(s, catalog, preIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(preRoot, PendingProp, from, to)
-    applyWindow(s, catalog, srcRoot, dfIdent, preIdent, from, to)
-    finalizeWindow(preRoot, PendingProp, to)
-    to
-  }
+      dfIdent: String, preIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, preIdent, Append)(
+      appendApply(s, catalog, dfIdent, preIdent))
 
   // ---- CDC-aware refresh: deletes propagate without reading anything ----
-
-  private def windowChanges(s: SparkSession, srcRoot: Path,
-      from: Long, to: Long): DataFrame =
-    s.read.format("graft.sources.ManifestSink")
-      .option("path", srcRoot.toString)
-      .option("changesFromVersion", from.toString)
-      .option("changesToVersion", to.toString)
-      .option("changeFeedMode", "cdc")
-      .load()
-      .select(col("doc_id"), col("text"), col("_change_type"))
 
   /** Deterministic two-commit apply: append the window's inserted docs'
     * prefixes (first commit), then retire its deletes as ONE EQUALITY
     * DELETE on the prefix table keyed by doc_id (second commit) — the
     * zero-read delete path: O(delete keys), no prefix base file is ever
-    * opened. A key both inserted and deleted inside one window is
-    * REFUSED (the feed carries no intra-window ordering); refresh more
-    * often than you churn a key. */
+    * opened. `skipInsert` (recovery) applies only the delete half. */
   private[sources] def applyWindowCdc(s: SparkSession, catalog: String,
       srcRoot: Path, preRoot: Path, dfIdent: String, preIdent: String,
-      from: Long, to: Long, skipInsert: Boolean = false): (Boolean, Boolean) = {
-    val ch = windowChanges(s, srcRoot, from, to).localCheckpoint()
-    val dels = ch.filter(col("_change_type") === "delete").select("doc_id")
-    val ins = ch.filter(col("_change_type") === "insert")
-      .select(col("doc_id"), col("text"))
-    val insDel = ins.join(dels, Seq("doc_id"), "left_semi").limit(1).collect()
-    require(insDel.isEmpty,
-      s"refresh window ($from, $to] both inserts and deletes doc_id " +
-        s"${insDel.headOption.map(_.getLong(0)).getOrElse(-1L)} — the change " +
-        "feed carries no intra-window ordering; refresh with a narrower window")
-    val hasIns = !ins.isEmpty
-    if (hasIns && !skipInsert)
+      from: Long, to: Long, skipInsert: Boolean = false): Unit = {
+    val (ins, dels) =
+      PendingWindow.split(s, srcRoot, from, to, "doc_id", Seq("text"))()
+    if (!ins.isEmpty && !skipInsert)
       frozenOrderPrefixes(s, catalog, dfIdent, ins)
         .writeTo(s"$catalog.$preIdent").append()
-    // delete keys stream through the 100k-key chunked path — the window's
-    // key list never materializes whole on the driver
-    val hasDel =
-      MinHashIndexMaintenance.chunkedEqDelete(dels, "doc_id", Seq(preRoot))
-    (hasIns, hasDel)
+    PendingWindow.chunkedEqDelete(dels.select("doc_id"), "doc_id", Seq(preRoot))
   }
 
-  private[sources] def recoverPendingCdc(s: SparkSession, catalog: String,
-      srcIdent: String, dfIdent: String, preIdent: String): Boolean = {
-    val preRoot = tableRoot(s, catalog, preIdent)
-    ManifestSink.readHeader(preRoot).props.get(CdcPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (pf, pt, vA) = PendingWindow.parse(p)
-        PendingWindow.verifyPivot(preRoot, CdcPendingProp, p, vA)
-        val srcRoot = tableRoot(s, catalog, srcIdent)
-        val cur = ManifestSink.currentVersion(preRoot)
-        // apply order is deterministic (append, then delete), so the
-        // landed-commit count disambiguates exactly which half remains
-        if (cur == vA)
-          applyWindowCdc(s, catalog, srcRoot, preRoot, dfIdent, preIdent, pf, pt)
-        else {
-          val ch = windowChanges(s, srcRoot, pf, pt)
-          val hasIns = !ch.filter(col("_change_type") === "insert").isEmpty
-          val hasDel = !ch.filter(col("_change_type") === "delete").isEmpty
-          val expected = vA + (if (hasIns) 1L else 0L) + (if (hasDel) 1L else 0L)
-          if (cur < expected && hasIns && hasDel && cur == vA + 1L)
-            applyWindowCdc(s, catalog, srcRoot, preRoot, dfIdent, preIdent,
-              pf, pt, skipInsert = true)
-        }
-        finalizeWindow(preRoot, CdcPendingProp, pt)
-        true
-    }
-  }
+  private def cdcApply(s: SparkSession, catalog: String, dfIdent: String,
+      preIdent: String)(w: PendingWindow.Window): Unit =
+    applyWindowCdc(s, catalog, w.src, w.state, dfIdent, preIdent, w.from,
+      w.to, w.skipInsert)
 
   /** [[refresh]] for sources that DELETE: consumes the row change feed,
     * so merge-on-read deletes in the window retire prefix rows through
     * the equality-delete path instead of failing the refresh. */
   def refreshCdc(s: SparkSession, catalog: String, srcIdent: String,
-      dfIdent: String, preIdent: String): Long = {
-    val srcRoot = tableRoot(s, catalog, srcIdent)
-    val preRoot = tableRoot(s, catalog, preIdent)
-    recoverPendingCdc(s, catalog, srcIdent, dfIdent, preIdent)
-    val from = lastSourceVersion(s, catalog, preIdent)
-    val to = ManifestSink.currentVersion(srcRoot)
-    if (to <= from) return from
-    PendingWindow.stage(preRoot, CdcPendingProp, from, to)
-    applyWindowCdc(s, catalog, srcRoot, preRoot, dfIdent, preIdent, from, to)
-    finalizeWindow(preRoot, CdcPendingProp, to)
-    to
-  }
+      dfIdent: String, preIdent: String): Long =
+    PendingWindow.refresh(s, catalog, srcIdent, preIdent, Cdc)(
+      cdcApply(s, catalog, dfIdent, preIdent))
 
   // ---- REINDEX: the drift repair ------------------------------------------
 
@@ -271,10 +172,10 @@ object SsimIndexMaintenance {
     * (idempotent: a replay recomputes identical content from the pinned
     * version, and each overwrite is one truncate+append commit). */
   private def applyReindex(s: SparkSession, catalog: String,
-      srcIdent: String, dfIdent: String, preIdent: String, to: Long): Unit = {
+      dfIdent: String, preIdent: String)(w: PendingWindow.Window): Unit = {
     val snap = s.read.format("graft.sources.ManifestSink")
-      .option("path", tableRoot(s, catalog, srcIdent).toString)
-      .option("versionAsOf", to.toString)
+      .option("path", w.src.toString)
+      .option("versionAsOf", w.to.toString)
       .load()
       .select(col("doc_id"), col("text"))
     // write-then-read-back, same as createIndex (see the build-shape
@@ -289,21 +190,6 @@ object SsimIndexMaintenance {
       .writeTo(s"$catalog.$preIdent").overwrite(lit(true))
   }
 
-  private[sources] def recoverReindex(s: SparkSession, catalog: String,
-      srcIdent: String, dfIdent: String, preIdent: String): Boolean = {
-    val preRoot = tableRoot(s, catalog, preIdent)
-    ManifestSink.readHeader(preRoot).props.get(ReindexPendingProp) match {
-      case None => false
-      case Some(p) =>
-        val (_, pt, _) = PendingWindow.parse(p)
-        // overwrites are idempotent against the pinned snapshot: redo
-        // both unconditionally, then finalize
-        applyReindex(s, catalog, srcIdent, dfIdent, preIdent, pt)
-        finalizeWindow(preRoot, ReindexPendingProp, pt)
-        true
-    }
-  }
-
   /** Rebuild the frozen-df order and every prefix from the source's
     * CURRENT snapshot — the scheduled repair for df drift. Probe
     * RESULTS are invariant (the order only steers candidate pruning;
@@ -316,17 +202,15 @@ object SsimIndexMaintenance {
     * index readable). Returns the source version reindexed to. */
   def reindex(s: SparkSession, catalog: String, srcIdent: String,
       dfIdent: String, preIdent: String): Long = {
-    val preRoot = tableRoot(s, catalog, preIdent)
-    recoverReindex(s, catalog, srcIdent, dfIdent, preIdent)
+    val src = PendingWindow.tableRoot(s, catalog, srcIdent)
+    val pre = PendingWindow.tableRoot(s, catalog, preIdent)
+    val rebuild = applyReindex(s, catalog, dfIdent, preIdent) _
+    PendingWindow.recover(s, src, pre, Reindex)(rebuild)
     // fold in any un-refreshed appends first so the rebuild consumes
     // the same windows a refresh would (keeps the version pointer
     // monotone and the pending protocols disjoint)
-    recoverPending(s, catalog, srcIdent, dfIdent, preIdent)
-    recoverPendingCdc(s, catalog, srcIdent, dfIdent, preIdent)
-    val to = ManifestSink.currentVersion(tableRoot(s, catalog, srcIdent))
-    PendingWindow.stage(preRoot, ReindexPendingProp, 0L, to)
-    applyReindex(s, catalog, srcIdent, dfIdent, preIdent, to)
-    finalizeWindow(preRoot, ReindexPendingProp, to)
-    to
+    PendingWindow.recover(s, src, pre, Append)(appendApply(s, catalog, dfIdent, preIdent))
+    PendingWindow.recover(s, src, pre, Cdc)(cdcApply(s, catalog, dfIdent, preIdent))
+    PendingWindow.fold(src, pre, Reindex, 0L, ManifestSink.currentVersion(src))(rebuild)
   }
 }

@@ -35,6 +35,27 @@ object GraftBridge {
     * matched: a derived frame (filter/join over a checkpoint) is a
     * guaranteed no-op, so shared or session-memoized checkpoints buried
     * inside a caller's plan can never be freed by accident. */
+  /** A locally-checkpointed frame whose size estimate is capped at
+    * Long.MaxValue (Spark's "unknown size"). A checkpoint carries its
+    * source plan's estimate, and a join's estimate is the PRODUCT of its
+    * inputs', so a loop that joins each round's checkpoint with itself
+    * multiplies the estimate's digit count every round: past ~20 rounds
+    * the BigInt arithmetic alone took minutes per round. Any estimate
+    * above the cap already loses every size-based planning choice, so
+    * the cap changes no plan. Frames whose root is not a checkpoint are
+    * returned as they are. */
+  def boundStats(df: DataFrame): DataFrame =
+    plan(df) match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+        if lr.computeStats().sizeInBytes > Long.MaxValue =>
+        dataFrame(df.sparkSession, lr.copy()(
+          df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+            sizeInBytes = BigInt(Long.MaxValue))),
+          Some(lr.constraints)))
+      case _ => df
+    }
+
   def freeCheckpoint(df: DataFrame): Unit =
     plan(df) match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
