@@ -3,24 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE headroom: start shuffles fine-grained (8x cores) and let
-      // coalescing shrink the small ones — a fixed 1-partition-per-core
-      // count makes the heavy set-sim verification shuffles spill at
-      // sf3+ (the r15 sf10 spot-check's q190 5.2x reading; one bench
-      // session recorded q190/q196 OOM at sf3 under accumulated state).
-      // At cluster scale this IS the documented knob; adaptive initial
-      // sizing is its data-proportional form.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm the JVM, codegen and parquet footers once so per-query numbers
     // measure the plan, not first-touch session costs.
     graft.engine.Tables.all.foreach(t =>
@@ -37,7 +20,8 @@ object Bench {
     // built for concurrent consumers. Pool size scales with the session
     // core count so the driver's low-core bench run keeps per-job
     // parallelism (32 cores → 6 builders, 8 → 2).
-    val buildThreads = math.max(1, math.min(6, cpus.toInt / 4))
+    val buildThreads =
+      math.max(1, math.min(6, spark.sparkContext.defaultParallelism / 4))
     def runPhase(phase: String, items: Seq[(String, () => Unit)]): Double = {
       val t0 = System.nanoTime()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(buildThreads)

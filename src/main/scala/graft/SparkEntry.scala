@@ -27,6 +27,14 @@ object SparkEntry {
       BpeOps.queries ++ PqOps.queries ++ PcaOps.queries ++ CoresetOps.queries ++
       IvfPqOps.queries ++ ScriptDedupOps.queries ++ UnigramOps.queries
 
+  /** Rejects the whole request if any name is not a registered query, so
+    * a typo fails before the names ahead of it have run. */
+  def requireKnown(names: Iterable[String], source: String): Unit = {
+    val unknown = names.toSet.diff(queries.keySet)
+    require(unknown.isEmpty,
+      s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CompletableFuture, TimeUnit, TimeoutException}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -20,24 +19,7 @@ import java.util.concurrent.{CompletableFuture, TimeUnit, TimeoutException}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE headroom: start shuffles fine-grained (8x cores) and let
-      // coalescing shrink the small ones — a fixed 1-partition-per-core
-      // count makes the heavy set-sim verification shuffles spill at
-      // sf3+ (the r15 sf10 spot-check's q190 5.2x reading; one bench
-      // session recorded q190/q196 OOM at sf3 under accumulated state).
-      // At cluster scale this IS the documented knob; adaptive initial
-      // sizing is its data-proportional form.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -58,10 +40,7 @@ object Verify {
     // those queries (the driver never sets it, so its sweep stays full).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: $unknown")
-    }
+    only.foreach(SparkEntry.requireKnown(_, "SPARK_GRAFT_ONLY"))
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "600").toLong
     // Concurrent sweep: Spark sessions are thread-safe and the staged
     // fixtures build once-per-key with BLOCKING guards
@@ -132,7 +111,9 @@ object Verify {
     pool.shutdown()
     // generous hard stop: the per-query watchdogs bound each unit, so
     // this only fires if the pool itself wedges
-    pool.awaitTermination(todo.size.toLong * timeoutSec + 60L, TimeUnit.SECONDS)
+    val hardStopSec = todo.size.toLong * timeoutSec + 60L
+    if (!pool.awaitTermination(hardStopSec, TimeUnit.SECONDS))
+      System.err.println(s"VERIFY WARN sweep pool still running after $hardStopSec s")
     // second sweep over the timed-out stragglers: cancel whatever jobs
     // they started since and give each worker a bounded join so the
     // common case (a straggler that dies promptly once cancelled)

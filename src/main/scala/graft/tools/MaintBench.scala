@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -42,24 +42,7 @@ object MaintBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE headroom: start shuffles fine-grained (8x cores) and let
-      // coalescing shrink the small ones — a fixed 1-partition-per-core
-      // count makes the heavy set-sim verification shuffles spill at
-      // sf3+ (the r15 sf10 spot-check's q190 5.2x reading; one bench
-      // session recorded q190/q196 OOM at sf3 under accumulated state).
-      // At cluster scale this IS the documented knob; adaptive initial
-      // sizing is its data-proportional form.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val ns = DedupOps.graftNs(spark, sfDir)
 
     val docs = Tables.documents(spark, sfDir)

@@ -1,18 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the driver's t1 smoke exactly: SparkEntry.entry on sf0.001 must
   * return >0 rows. Prints the row count and the first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n")

@@ -4,31 +4,19 @@ import org.apache.spark.sql.SparkSession
 
 /** Time individual queries: runMain graft.tools.TimeQ <sfDir> <q1> [q2 ...]
   * Prints one `name seconds rows` line per query — the per-query dev loop
-  * behind Bench's full sweep. */
+  * behind Bench's full sweep. SPARK_GRAFT_EXPLAIN=1 also prints each
+  * query's formatted plan. */
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE headroom: start shuffles fine-grained (8x cores) and let
-      // coalescing shrink the small ones — a fixed 1-partition-per-core
-      // count makes the heavy set-sim verification shuffles spill at
-      // sf3+ (the r15 sf10 spot-check's q190 5.2x reading; one bench
-      // session recorded q190/q196 OOM at sf3 under accumulated state).
-      // At cluster scale this IS the documented knob; adaptive initial
-      // sizing is its data-proportional form.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // product-session parity (q193's views need the analyzer wiring)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    val spark = graft.GraftSession.local()
+    run(spark, args(0), args.drop(1).toSeq,
+      explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
+    spark.stop()
+  }
+
+  /** Checks every name before running any, then times each query. */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String], explain: Boolean): Unit = {
+    graft.SparkEntry.requireKnown(names, "TimeQ")
     names.foreach { n =>
       // time construction + count, exactly like Bench.once: queries with
       // eager staging (localCheckpoint loops — q107, the staged index
@@ -43,6 +31,5 @@ object TimeQ {
         println(f"TIMEQ $n ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$rows")
       } finally graft.engine.Staging.releaseTransient()
     }
-    spark.stop()
   }
 }

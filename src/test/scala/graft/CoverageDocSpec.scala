@@ -47,6 +47,20 @@ class CoverageDocSpec extends AnyFunSuite {
       "'graft' is the operators' staged-table catalog — tests must not rebind it")
   }
 
+  test("GraftSession is the only SparkSession builder in main code") {
+    // every entry point runs on the product session; a hand-rolled
+    // builder drifts from it (missing extensions, AQE sizing, UTC)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val builders = files(new java.io.File("src/main/scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .contains("SparkSession.builder"))
+      .map(_.getPath).sorted
+    assert(builders == Seq("src/main/scala/graft/GraftSession.scala"),
+      s"SparkSession.builder outside GraftSession: ${builders.mkString(", ")}")
+  }
+
   test("no COVERAGE.md query reference is stale") {
     // bare `qNN`/`qNNN` shorthands (q30–q33 style ranges) are prose;
     // only full `qN*_name` identifiers are checked against the registry
