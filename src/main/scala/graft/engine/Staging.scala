@@ -1,36 +1,70 @@
 package graft.engine
 
-/** Process-wide once-per-key staging with BLOCKING semantics.
+import java.util.concurrent.{CancellationException, CompletableFuture, CompletionException,
+  ConcurrentHashMap, ConcurrentLinkedQueue, ExecutionException, Executors, TimeUnit}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graft.GraftBridge
+
+/** Process-wide once-per-key staging with BLOCKING semantics, and the
+  * query-scoped transient-checkpoint scope that job overlap runs in.
   *
-  * The per-module `set.add(key)` guards this replaces had a race: the
-  * LOSER of the add returned immediately and read a table the winner
-  * was still building. Harmless under a sequential Verify sweep, wrong
-  * the moment queries run concurrently (parallel Verify, sbt's
+  * ONCE. The per-module `set.add(key)` guards [[once]] replaces had a
+  * race: the LOSER of the add returned immediately and read a table the
+  * winner was still building. Harmless under a sequential Verify sweep,
+  * wrong the moment queries run concurrently (parallel Verify, sbt's
   * parallel suites).
   *
   * The build runs OUTSIDE any map lock: `putIfAbsent` claims the key
   * with an incomplete CompletableFuture, the winner builds and
-  * completes it, losers block on `join()`. The earlier
-  * `computeIfAbsent` form held the ConcurrentHashMap BIN lock for the
-  * whole build, so a build that (even transitively) staged another key
-  * in the same bin could hit the map's recursive-update
-  * IllegalStateException or livelock — hash-dependent and
-  * nondeterministic. With the future form, unrelated keys never
-  * serialize and a nested `once` for a DIFFERENT key is always safe.
-  * (A build that re-enters `once` for its OWN key is a programming
-  * error and self-deadlocks on join — same as any once-guard.)
+  * completes it with the build's value, losers block on `join()` and
+  * return that value. The earlier `computeIfAbsent` form held the
+  * ConcurrentHashMap BIN lock for the whole build, so a build that (even
+  * transitively) staged another key in the same bin could hit the map's
+  * recursive-update IllegalStateException or livelock — hash-dependent
+  * and nondeterministic. With the future form, unrelated keys never
+  * serialize and a nested `once` for a DIFFERENT key is always safe
+  * (the ivfpq fit nests the k-means fit this way). A build that
+  * re-enters `once` for its OWN key is a programming error and
+  * self-deadlocks on join — same as any once-guard.
   *
-  * A build that throws removes its claim and completes the future
-  * exceptionally, so every caller — the winner, anyone blocked on it,
-  * and anyone arriving later — retries instead of consuming a
-  * half-built table forever (the un-poisoning contract the old guards
-  * had).
+  * A build that throws — or returns null, which no caller can use —
+  * removes its claim and completes the future exceptionally, so every
+  * caller — the winner, anyone blocked on it, and anyone arriving
+  * later — retries instead of consuming a half-built table forever (the
+  * un-poisoning contract the old guards had).
   *
-  * Keys are namespaced by the OWNER — the guard-set instance each call
-  * site already passes — compared by reference identity: several
-  * staging features key on the same (applicationId, dir) tuple, and a
-  * value-equality owner (an empty Set equals every other empty Set)
-  * would silently fuse them into one build.
+  * Keys are namespaced by the OWNER — a plain object each call site
+  * holds — compared by reference identity: several staging features
+  * key on the same (applicationId, dir) tuple, and a value-equality
+  * owner (an empty Set equals every other empty Set) would silently
+  * fuse them into one build.
+  *
+  * SCOPE AND FORK. A query's scope is opened by its harness (Bench.once,
+  * Verify's per-query worker, TimeQ, perfbench) with [[beginTransient]]
+  * on the query thread and closed in a `finally` with
+  * [[releaseTransient]]. [[fork]] is the one way engine code overlaps
+  * independent jobs (the reference's `asyncio.gather`):
+  *  - the body runs on one daemon pool through Spark's own thread-local
+  *    capture (the helper behind broadcast and subquery futures), so its
+  *    jobs carry the caller's local properties — job group,
+  *    interruptOnCancel, job tags, description, any span property — and
+  *    the caller's active session; a job-group cancel of the caller
+  *    reaches the fork's jobs;
+  *  - the body runs with the caller's innermost scope as its own: its
+  *    `trackCp` registers there, and its jobs also carry the scope's job
+  *    tag;
+  *  - calling the returned thunk joins the fork and rethrows the body's
+  *    own exception, unwrapped;
+  *  - `releaseTransient` first settles the scope's unjoined forks — it
+  *    cancels their jobs by the scope's tag, interrupts them and waits
+  *    until each has ended — and only then frees the scope's
+  *    checkpoints. A fork the caller joined leaves nothing to settle.
+  * Outside any scope (Bench's build phase, a spec calling a query
+  * directly) a fork still carries the caller's properties, but nothing
+  * cancels it when the caller fails.
   */
 object Staging {
   private final class IdKey(val owner: AnyRef, val k: Any) {
@@ -41,33 +75,32 @@ object Staging {
     }
   }
 
-  private val done = new java.util.concurrent.ConcurrentHashMap[
-    IdKey, java.util.concurrent.CompletableFuture[Unit]]()
+  private val done = new ConcurrentHashMap[IdKey, CompletableFuture[Any]]()
 
-  @annotation.tailrec
-  def once(owner: AnyRef, key: Any)(build: => Unit): Unit = {
+  /** Build once per (owner, key); every caller returns the build's value. */
+  def once[T](owner: AnyRef, key: Any)(build: => T): T = {
     val k = new IdKey(owner, key)
-    val fresh = new java.util.concurrent.CompletableFuture[Unit]()
+    val fresh = new CompletableFuture[Any]()
     val existing = done.putIfAbsent(k, fresh)
-    if (existing == null) {
-      try { build; fresh.complete(()); () }
+    if (existing != null)
+      try existing.join().asInstanceOf[T]
       catch {
+        // the claimant's build failed (it already removed the claim);
+        // retry — this caller may become the new builder
+        case _: CompletionException | _: CancellationException => once(owner, key)(build)
+      }
+    else
+      try {
+        val out = build
+        require(out != null, s"Staging.once build for $key returned null")
+        fresh.complete(out)
+        out
+      } catch {
         case t: Throwable =>
           done.remove(k, fresh)
           fresh.completeExceptionally(t)
           throw t
       }
-    } else {
-      val ok =
-        try { existing.join(); true }
-        catch {
-          // the claimant's build failed (it already removed the claim);
-          // retry — this caller may become the new builder
-          case _: java.util.concurrent.CompletionException |
-               _: java.util.concurrent.CancellationException => false
-        }
-      if (!ok) once(owner, key)(build)
-    }
   }
 
   // ---- transient-checkpoint scope ---------------------------------------
@@ -79,57 +112,111 @@ object Staging {
   // Under a bench/verify loop that lag bills one query's residue to the
   // NEXT query's eviction pressure (measured at sf3: q117's checkpoints
   // inflated q118/q136/q141 2-6x while the same lines stayed flat at
-  // sf0.1/sf1). The harnesses (Bench.once, Verify's per-query worker,
-  // TimeQ) open a scope on their query thread and release it after the
-  // consuming action; call sites that stage PER-CALL frames register
-  // them via trackCp. SESSION-staged memos (verifiedNearDupPairs,
+  // sf0.1/sf1). Call sites that stage PER-CALL frames register them via
+  // trackCp. SESSION-staged memos (verifiedNearDupPairs,
   // stagedSetSimTokens, stagedClusterState, the index fixtures) must
   // NEVER be tracked — a freed local checkpoint cannot recompute — so
   // shared helpers take an explicit `transient` flag defaulting to
   // false, and trackCp outside any scope degrades to a plain
   // localCheckpoint (spec code keeps today's GC-driven lifecycle).
-  private val cpScope =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.DataFrame]]] {
-      override def initialValue = Nil
-    }
+
+  /** One scope: its checkpoints and forks (both filled from the query
+    * thread and its forks at once), and the job tag its forks run under. */
+  private final class Scope {
+    val tag = s"graft-scope-${java.util.UUID.randomUUID}"
+    val cps = new ConcurrentLinkedQueue[DataFrame]()
+    val forks = new ConcurrentLinkedQueue[Fork]()
+  }
+
+  /** A fork's result, and its thread while the body runs — interrupted
+    * only then, so no pool thread carries an interrupt into its next
+    * fork. */
+  private final class Fork(val sc: SparkContext) {
+    val result = new CompletableFuture[Any]()
+    private var runner: Thread = _
+    def enter(): Unit = synchronized { runner = Thread.currentThread() }
+    def exit(): Unit = synchronized { runner = null; Thread.interrupted(); () }
+    def interrupt(): Unit = synchronized { if (runner != null) runner.interrupt() }
+  }
+
+  private val cpScope = new ThreadLocal[List[Scope]] {
+    override def initialValue = Nil
+  }
+  private val forkPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-fork"); t.setDaemon(true); t
+  }
 
   /** Open a transient-checkpoint scope on this thread. Scopes NEST:
-    * each begin pushes a fresh registration buffer and the matching
-    * releaseTransient frees only that buffer, so a helper that opens
-    * its own scope inside a harness scope cannot free the harness's
-    * checkpoints mid-query. Every begin must be paired with exactly
-    * one release (all callers are try/finally). */
-  def beginTransient(): Unit =
-    cpScope.set(scala.collection.mutable.ArrayBuffer.empty[
-      org.apache.spark.sql.DataFrame] :: cpScope.get())
+    * each begin pushes a fresh scope and the matching releaseTransient
+    * settles and frees only that one, so a helper that opens its own
+    * scope inside a harness scope cannot free the harness's checkpoints
+    * mid-query. Every begin must be paired with exactly one release
+    * (all callers are try/finally). */
+  def beginTransient(): Unit = cpScope.set(new Scope :: cpScope.get())
 
   /** localCheckpoint `df`; if a scope is open on this thread, register
     * the result for release at the INNERMOST scope's end. */
-  def trackCp(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val c = df.localCheckpoint()
-    track(c)
-  }
+  def trackCp(df: DataFrame): DataFrame = track(df.localCheckpoint())
 
   /** Register an ALREADY-checkpointed frame with this thread's innermost
-    * scope (no-op when none is open) — for checkpoints built on helper
-    * threads under guide §2.6 job overlap: the worker thread sees no
-    * scope (scopes are thread-local), so the harness thread registers
-    * the joined result itself. */
-  def track(c: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    cpScope.get() match {
-      case b :: _ => b += c
-      case Nil    => ()
-    }
+    * scope (no-op when none is open). */
+  def track(c: DataFrame): DataFrame = {
+    cpScope.get().headOption.foreach(_.cps.add(c))
     c
   }
 
-  /** Free every checkpoint registered on this thread's innermost scope
-    * and close it. Safe when no scope is open. */
+  /** Start `body` now, overlapping the caller; the returned thunk joins
+    * it (see the object doc for the scope and cancel contract). */
+  def fork[T](s: SparkSession)(body: => T): () => T = {
+    val scope = cpScope.get().headOption
+    val f = new Fork(s.sparkContext)
+    SQLExecution.withThreadLocalCaptured(s.asInstanceOf[classic.SparkSession], forkPool) {
+      f.enter()
+      scope.foreach { sc => cpScope.set(sc :: Nil); s.sparkContext.addJobTag(sc.tag) }
+      try f.result.complete(body)
+      catch { case t: Throwable => f.result.completeExceptionally(t) }
+      finally { cpScope.remove(); f.exit() }
+    }
+    scope.foreach(_.forks.add(f))
+    () => try f.result.get().asInstanceOf[T]
+      catch { case e: ExecutionException => throw e.getCause }
+  }
+
+  /** Cancel, interrupt and wait out every fork of `sc` still running. */
+  private def settle(sc: Scope): Unit = {
+    var interrupted = false
+    def attempt(step: => Unit): Unit =
+      try step catch {
+        case _: InterruptedException => interrupted = true
+        case _: Exception => ()
+      }
+    var cut: SparkContext = null
+    var f = sc.forks.poll()
+    while (f != null) {
+      while (!f.result.isDone) {
+        cut = f.sc
+        attempt {
+          GraftBridge.cancelJobsWithTag(cut, sc.tag)
+          f.interrupt()
+          f.result.get(100, TimeUnit.MILLISECONDS)
+        }
+      }
+      f = sc.forks.poll()
+    }
+    // a fork cut short may have launched a job (or a broadcast future)
+    // after the last cancel; none can start once every fork has ended
+    if (cut != null) attempt(GraftBridge.cancelJobsWithTag(cut, sc.tag))
+    if (interrupted) Thread.currentThread().interrupt()
+  }
+
+  /** Settle this thread's innermost scope's forks, then free every
+    * checkpoint registered on it and close it. Safe when no scope is
+    * open. */
   def releaseTransient(): Unit = cpScope.get() match {
-    case b :: rest =>
-      b.foreach { c =>
-        try org.apache.spark.sql.graft.GraftBridge.freeCheckpoint(c)
+    case sc :: rest =>
+      settle(sc)
+      sc.cps.forEach { c =>
+        try GraftBridge.freeCheckpoint(c)
         catch { case _: Throwable => () }
       }
       if (rest.isEmpty) cpScope.remove() else cpScope.set(rest)

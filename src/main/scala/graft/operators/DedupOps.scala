@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 import graft.functions.GraftFunctions._
 import graft.functions.HashFunctions._
 
@@ -553,11 +553,7 @@ object DedupOps {
     setSimVerify(cand, btk, ctk, t)
   }
 
-  private[graft] def buildOnce[K](set: java.util.Set[K], key: K)(build: => Unit): Unit =
-    graft.engine.Staging.once(set, key)(build)
-
-  private val ssimBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val ssimBuilt = new Object
 
   /** Session-staged set-sim prelude: ONE canonicalize + shingle + df
     * pass per (session, sf-dir, slice), shared by every consumer of
@@ -590,8 +586,7 @@ object DedupOps {
     }
   }
 
-  private val nsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val nsBuilt = new Object
 
   /** Configure the session-scoped `graft` catalog and ensure this
     * sf-dir's namespace exists — shared by every staged index builder
@@ -602,7 +597,7 @@ object DedupOps {
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(nsBuilt, (s.sparkContext.applicationId, ns)) {
+    Staging.once[Unit](nsBuilt, (s.sparkContext.applicationId, ns)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
     }
     ns
@@ -616,7 +611,7 @@ object DedupOps {
     * can PRUNE. */
   private[graft] def ssimIndexTables(s: SparkSession, dir: String): (String, String) = {
     val ns = graftNs(s, dir)
-    buildOnce(ssimBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](ssimBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$ns.ssim_df (token STRING, df BIGINT) " +
         "TBLPROPERTIES ('bloom.columns' = 'token')")
       s.sql(s"CREATE TABLE graft.$ns.ssim_prefix " +
@@ -628,8 +623,7 @@ object DedupOps {
     (s"graft.$ns.ssim_df", s"graft.$ns.ssim_prefix")
   }
 
-  private val ssimMaintBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val ssimMaintBuilt = new Object
 
   /** Once-per-(application, sf-dir) MAINTAINED set-sim index — the full
     * ingest+churn loop of [[graft.sources.SsimIndexMaintenance]], staged
@@ -647,7 +641,7 @@ object DedupOps {
     val ns = graftNs(s, dir)
     val (src, dfT, preT) =
       (s"$ns.ssimm_src", s"$ns.ssimm_df", s"$ns.ssimm_prefix")
-    buildOnce(ssimMaintBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](ssimMaintBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$src (doc_id BIGINT, text STRING) " +
         "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
       val corpus = Tables.documents(s, dir)
@@ -663,8 +657,7 @@ object DedupOps {
     (s"graft.$src", s"graft.$dfT", s"graft.$preT")
   }
 
-  private val lineMaintBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val lineMaintBuilt = new Object
 
   /** Staged MAINTAINED line table over a two-arrival + CDC-delete source
     * history (the [[ssimMaintainedTables]] shape): CREATE on arrival 1's
@@ -682,7 +675,7 @@ object DedupOps {
   private[graft] def lineMaintainedTables(s: SparkSession, dir: String): (String, String) = {
     val ns = graftNs(s, dir)
     val (src, lines) = (s"$ns.linem_src", s"$ns.linem_lines")
-    buildOnce(lineMaintBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](lineMaintBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$src (doc_id BIGINT, text STRING) " +
         "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
       val corpus = Tables.documents(s, dir)
@@ -698,8 +691,7 @@ object DedupOps {
     (s"graft.$src", s"graft.$lines")
   }
 
-  private val mhBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val mhBuilt = new Object
 
   /** Once-per-(application, sf-dir) MinHash/LSH index AT REST over the
     * fixture's corpus side (doc_id%10≠7, q119's split): two manifest
@@ -711,7 +703,7 @@ object DedupOps {
     * session; here it is data at rest. */
   private[graft] def mhIndexTables(s: SparkSession, dir: String): (String, String) = {
     val ns = graftNs(s, dir)
-    buildOnce(mhBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](mhBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$ns.mh_digest (h STRING, doc_id BIGINT) " +
         "TBLPROPERTIES ('write.sort-by' = 'h', 'bloom.columns' = 'h')")
       s.sql(s"CREATE TABLE graft.$ns.mh_bands (band STRING, doc_id BIGINT) " +
@@ -727,8 +719,7 @@ object DedupOps {
     (s"graft.$ns.mh_digest", s"graft.$ns.mh_bands")
   }
 
-  private val mhMaintBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val mhMaintBuilt = new Object
 
   /** Once-per-(application, sf-dir) MAINTAINED MinHash index — the full
     * ingest+churn loop of [[graft.sources.MinHashIndexMaintenance]]: the
@@ -752,7 +743,7 @@ object DedupOps {
     val ns = graftNs(s, dir)
     val (src, digT, bandT) =
       (s"$ns.mhm_src", s"$ns.mhm_digest", s"$ns.mhm_bands")
-    buildOnce(mhMaintBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](mhMaintBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$src (doc_id BIGINT, text STRING) " +
         "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
       val corpus = Tables.documents(s, dir)
@@ -920,8 +911,7 @@ object DedupOps {
     }
   }
 
-  private val clMaintBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val clMaintBuilt = new Object
 
   /** Once-per-(application, sf-dir) MAINTAINED cluster index — the full
     * churn loop of [[graft.sources.ClusterIndexMaintenance]]: the corpus
@@ -941,7 +931,7 @@ object DedupOps {
     val ns = graftNs(s, dir)
     val (src, lab, edg, bnd) =
       (s"$ns.clm_src", s"$ns.clm_labels", s"$ns.clm_edges", s"$ns.clm_bands")
-    buildOnce(clMaintBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](clMaintBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$src (doc_id BIGINT, text STRING) " +
         "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
@@ -950,8 +940,7 @@ object DedupOps {
       // `documents` — independent of the index create, so its jobs
       // overlap the create's (guide §2.6); joined before the arrival-2
       // append that consumes it
-      val chainF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-        bridgeChainDocs(s, dir))
+      val chainF = Staging.fork(s)(bridgeChainDocs(s, dir))
       // the arrival-1 snapshot's verified pair set is the session-staged
       // full-corpus pair table restricted to arrival-1 ids (band keys
       // are doc-local, verification pairwise, so pairs restrict
@@ -962,7 +951,7 @@ object DedupOps {
         .select("doc_a", "doc_b")
       graft.sources.ClusterIndexMaintenance.createIndex(s, "graft", src, lab,
         edg, bnd, knownEdges = Some(arrival1Edges))
-      val chain = chainF.join()
+      val chain = chainF()
       val chainDf = {
         import s.implicits._
         chain.toDF("doc_id", "text")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 import graft.functions.GraftFunctions._
 
 /** The reference's ingest/extract operator set (rws_data_ingester
@@ -26,15 +26,8 @@ import graft.functions.GraftFunctions._
 object IngestOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** (applicationId, sfDir) pairs whose q85 ORC copy is already written. */
-
-  /** Once-per-key staging that UN-POISONS on failure (see
-    * SimilarityOps.buildOnce — same contract). */
-  private def buildOnce[K](set: java.util.Set[K], key: K)(build: => Unit): Unit =
-    graft.engine.Staging.once(set, key)(build)
-
-  private val orcWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  /** [[Staging.once]] owner of this module's (applicationId, key) stagings. */
+  private val orcWritten = new Object
 
   /** Shared staging for the row-lineage queries (q178/q180): the
     * deterministically-numbered orders_rl table — v1 CREATE, v2
@@ -47,7 +40,7 @@ object IngestOps {
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(orcWritten, (s.sparkContext.applicationId, s"rl:$dir")) {
+    Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"rl:$dir")) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.orders_rl " +
         "(o_orderkey BIGINT, o_custkey BIGINT, o_orderpriority STRING)") // v1
@@ -323,7 +316,7 @@ object IngestOps {
       // write job on every construction.
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_" +
         s"${s.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, dir)) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, dir)) {
         Tables.events(s, dir)
           .select("event_id", "user_id", "event_type", "value", "ts_us")
           .write.mode("overwrite").orc(out)
@@ -347,7 +340,7 @@ object IngestOps {
     "q124_manifest_optimize" -> ((s, dir) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_opt_" +
         s"${s.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"opt:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"opt:$dir")) {
         val o = Tables.orders(s, dir).select(
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"))
@@ -396,7 +389,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"qs:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"qs:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_qs " +
           "(o_orderkey BIGINT, o_custkey BIGINT) " +
@@ -430,7 +423,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"view:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"view:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_v " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)")
@@ -458,7 +451,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"cat:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"cat:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.customer_t " +
           "(c_custkey BIGINT, c_nationkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE)")
@@ -486,7 +479,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"del:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"del:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_t " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -520,7 +513,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"upd:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"upd:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_u " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -554,7 +547,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"mrg:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"mrg:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_m " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -596,7 +589,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"part:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"part:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_p " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING) " +
@@ -643,7 +636,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"alt:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"alt:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_a (o_orderkey BIGINT, o_totalprice DOUBLE)")
         val src = Tables.orders(s, dir)
@@ -680,7 +673,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"mor:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"mor:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_mor " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING) " +
@@ -713,7 +706,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"hist:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"hist:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_h " +
           "(o_orderkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -789,7 +782,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"hp:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"hp:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.events_d " +
           "(event_id BIGINT, user_id BIGINT, ts_us BIGINT, value DOUBLE) " +
@@ -823,7 +816,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"eqd:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"eqd:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_e " +
           "(o_orderkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -860,7 +853,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"wid:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"wid:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_tw (o_orderkey BIGINT, qty INT)")
         s.sql(s"CREATE TEMPORARY VIEW orders_tw_src AS " +
@@ -896,7 +889,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"bkt:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"bkt:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.customer_b " +
           "(c_custkey BIGINT, c_nationkey BIGINT, c_mktsegment STRING, " +
@@ -928,7 +921,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"evs:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"evs:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.events_ev " +
           "(event_id BIGINT, user_id BIGINT, ts_us BIGINT, value DOUBLE)")
@@ -966,7 +959,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"dft:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"dft:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_df " +
           "(o_orderkey BIGINT, o_totalprice DOUBLE)")
@@ -1007,7 +1000,7 @@ object IngestOps {
     "q101_schema_evolution" -> ((s, dir) => {
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_evo_" +
         s"${s.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"evo:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"evo:$dir")) {
         val o = Tables.orders(s, dir)
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -1060,7 +1053,7 @@ object IngestOps {
       // manifest-table scan in the session
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"spj:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"spj:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.customer_sp " +
           "(c_custkey BIGINT, c_acctbal DOUBLE, c_nationkey BIGINT) " +
@@ -1098,7 +1091,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"wap:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"wap:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_w " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING)")
@@ -1139,7 +1132,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"mv:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"mv:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_mvsrc (prio STRING, cents BIGINT)")
         s.sql(s"CREATE TABLE graft.$ns.orders_mv " +
@@ -1175,7 +1168,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"pdim:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"pdim:$dir")) {
         s.sql(s"CREATE TABLE graft.$ns.prio_dim (o_orderpriority STRING, urgency BIGINT)")
         Tables.orders(s, dir).select(col("o_orderpriority")).distinct()
           .withColumn("urgency", substring(col("o_orderpriority"), 1, 1).cast("long"))
@@ -1207,7 +1200,7 @@ object IngestOps {
       s.conf.set("spark.sql.catalog.graft.warehouse", wh)
       val ns = s"db${Integer.toHexString(dir.hashCode)}"
       val root = s"$wh/$ns/orders_cdc"
-      buildOnce(orcWritten, (s.sparkContext.applicationId, s"cdc:$dir")) {
+      Staging.once[Unit](orcWritten, (s.sparkContext.applicationId, s"cdc:$dir")) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
         s.sql(s"CREATE TABLE graft.$ns.orders_cdc " +
           "(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT, o_orderpriority STRING) " +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 import graft.functions.HashFunctions.md5Code60Sql
 
 /** IVFADC — the inverted-file + product-quantization index (Jégou et al.
@@ -203,15 +203,14 @@ object IvfPqOps {
     * raw floats). The residual codebooks land in a second, k-row table:
     * index and codebooks both at rest, no side-channel between build
     * and query. */
-  private val atRestBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val atRestBuilt = new Object
   private[graft] def codesTables(s: SparkSession, dir: String): (String, String) = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
       s.sparkContext.applicationId
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(atRestBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](atRestBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.ivfpq_codes " +
         "(vec_id BIGINT, cell BIGINT, codes ARRAY<BIGINT>) " +
@@ -237,15 +236,14 @@ object IvfPqOps {
     * frozen; the oracle replays that training and a from-scratch
     * re-encode of the full corpus, so a double-applied window, missed
     * vector, or silently retrained codebook all hash-fail. */
-  private val annmBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val annmBuilt = new Object
   private[graft] def maintainedAnnIndex(s: SparkSession, dir: String): String = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
       s.sparkContext.applicationId
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(annmBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](annmBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.emb_m (vec_id BIGINT, embedding ARRAY<FLOAT>)")
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
@@ -260,10 +258,6 @@ object IvfPqOps {
     }
     s"graft.$ns.annidx_m"
   }
-
-  /** [[SimilarityOps.buildOnce]]'s blocking un-poisoning contract. */
-  private def buildOnce[K](set: java.util.Set[K], key: K)(build: => Unit): Unit =
-    graft.engine.Staging.once(set, key)(build)
 
   /** Integer coarse codebook for the fixture corpus: the q139-trained
     * codebook manifest table — the SAME table q106/q48/q134 consume. */

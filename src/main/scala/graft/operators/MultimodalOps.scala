@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 
 /** Multimodal columns: media as opaque `binary` with typed metadata
   * (SURVEY.md §2.2). The fixture corpus has no real image/audio bytes, so
@@ -278,8 +278,7 @@ object MultimodalOps {
     px.select(col("doc_id"),
       graft.plans.PhashBandsExpr.bandsNative(col("px")).as("bands"))
 
-  private val mediaGridBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val mediaGridBuilt = new Object
 
   /** Once-per-(application, sf-dir) MEDIA TABLE at rest: the rendered
     * pixel grid as a doc_id-sorted manifest table — the storage shape a
@@ -288,7 +287,7 @@ object MultimodalOps {
     * rendering. */
   private[graft] def mediaGridTable(s: SparkSession, dir: String): String = {
     val ns = DedupOps.graftNs(s, dir)
-    DedupOps.buildOnce(mediaGridBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](mediaGridBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$ns.media_px (doc_id BIGINT, px ARRAY<BIGINT>) " +
         "TBLPROPERTIES ('write.sort-by' = 'doc_id')")
       phashPixelsOf(Tables.documents(s, dir))
@@ -329,14 +328,13 @@ object MultimodalOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  private val phIndexBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val phIndexBuilt = new Object
 
   /** Once-per-(application, sf-dir) phash index AT REST over the staged
     * media table's snapshot (q214). */
   private[graft] def phashIndexTables(s: SparkSession, dir: String): (String, String) = {
     val ns = DedupOps.graftNs(s, dir)
-    DedupOps.buildOnce(phIndexBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](phIndexBuilt, (s.sparkContext.applicationId, dir)) {
       graft.sources.PhashIndexMaintenance.createIndex(s, "graft",
         mediaGridTable(s, dir).stripPrefix("graft."),
         s"$ns.ph_hash", s"$ns.ph_bands")
@@ -344,8 +342,7 @@ object MultimodalOps {
     (s"graft.$ns.ph_hash", s"graft.$ns.ph_bands")
   }
 
-  private val phMaintBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val phMaintBuilt = new Object
 
   /** Once-per-(application, sf-dir) MAINTAINED phash index (q215): the
     * media grid arrives in TWO appends to a merge-on-read source; CREATE
@@ -362,7 +359,7 @@ object MultimodalOps {
       dir: String): (String, String) = {
     val ns = DedupOps.graftNs(s, dir)
     val (src, hashT, bandT) = (s"$ns.phm_src", s"$ns.phm_hash", s"$ns.phm_bands")
-    DedupOps.buildOnce(phMaintBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](phMaintBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE TABLE graft.$src (doc_id BIGINT, px ARRAY<BIGINT>) " +
         "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
       val media = s.table(mediaGridTable(s, dir))

@@ -294,24 +294,24 @@ object PipelineOps {
       // the BPE merge training share NO input with the S1→S3 text chain
       // — launched here, their jobs back-fill the chain's stragglers
       // instead of serializing after it. Joined exactly where consumed.
-      val stopsF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val stopsF = graft.engine.Staging.fork(s)(
         docs.select(explode(tokens(col("text"))).as("t"))
           .filter(length(col("t")) >= 1)
           .groupBy("t").agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("t")).limit(8)
           .collect().map(_.getString(0)).toSeq)
-      val sLeaksF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val sLeaksF = graft.engine.Staging.fork(s)(graft.engine.Staging.trackCp(
         SimilarityOps.semanticContam(s, Tables.embeddings(s, dir),
             col("vec_id") % 10 === 0, SimilarityOps.SemContamBp)
-          .select(col("train_id").as("doc_id")).localCheckpoint())
-      val mergesF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+          .select(col("train_id").as("doc_id"))))
+      val mergesF = graft.engine.Staging.fork(s)(
         BpeOps.trainedMerges(s, dir).map(m => (m._2, m._3)))
       // S1: line dedup — cleaned text, staged once for its many readers
       val cleaned = graft.engine.Staging.trackCp(DedupOps.cleanedDocs(docs))
       // S2: Gopher pack + repetition rules on cleaned text; the stop
       // list is the raw corpus's top-8 tokens (tiny, deterministic,
       // bounded driver collect — the trainedMerges pattern)
-      val stops = stopsF.join()
+      val stops = stopsF()
       // both gates are per-document verdicts, so the stage is ONE
       // map-side filter over the cleaned checkpoint (guide §2.4): the
       // old shape re-scanned `cleaned` twice to build two keep-id
@@ -332,11 +332,9 @@ object PipelineOps {
       val evalC = cleaned.filter(col("doc_id") % 5 === 0)
       // vLeaks stays LAZY: its one consumer is the surv anti-join, so a
       // checkpoint here only added a blocking job (the candidate frames
-      // inside verbatimLeakIds are still staged); sLeaks' checkpoint was
-      // built on the §2.6 helper thread — register it with this thread's
-      // transient scope so its blocks free when the query's action ends
+      // inside verbatimLeakIds are still staged)
       val vLeaks = DedupOps.verbatimLeakIds(train, evalC)
-      val sLeaks = graft.engine.Staging.track(sLeaksF.join())
+      val sLeaks = sLeaksF()
       val surv = train.join(vLeaks, Seq("doc_id"), "left_anti")
         .join(sLeaks, Seq("doc_id"), "left_anti")
         // observe(): funnel counters collected DURING the single final
@@ -344,7 +342,7 @@ object PipelineOps {
         // live in the output plan) — PipelineObservabilitySpec reconciles
         .observe("pipeline_decontam", count(lit(1)).as("docs_surviving"))
       // S5: BPE sequence packing under the raw-corpus merge table
-      PipelineOps.packedSpansOf(surv, mergesF.join())
+      PipelineOps.packedSpansOf(surv, mergesF())
         .observe("pipeline_pack",
           count(lit(1)).as("span_rows"),
           sum(col("tok")).as("tokens_packed"))

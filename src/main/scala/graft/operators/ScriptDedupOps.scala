@@ -352,14 +352,13 @@ object ScriptDedupOps {
       val mixed = TextOps.scriptMixed(Tables.documents(s, dir))
       // §2.6: the two canon checkpoints are independent (disjoint
       // strata of the same scan) — build them concurrently so the
-      // small batch-side exchange back-fills the corpus-side job's
-      // tail; both register with THIS thread's transient scope
-      val cCanonF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-        scriptCanon(mixed.filter(col("doc_id") % 10 =!= 7)).localCheckpoint())
-      val bCanonF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-        scriptCanon(mixed.filter(col("doc_id") % 10 === 7)).localCheckpoint())
-      val cCanon = graft.engine.Staging.track(cCanonF.join())
-      val bCanon = graft.engine.Staging.track(bCanonF.join())
+      // small batch-side exchange back-fills the corpus-side job's tail
+      val cCanonF = graft.engine.Staging.fork(s)(graft.engine.Staging.trackCp(
+        scriptCanon(mixed.filter(col("doc_id") % 10 =!= 7))))
+      val bCanonF = graft.engine.Staging.fork(s)(graft.engine.Staging.trackCp(
+        scriptCanon(mixed.filter(col("doc_id") % 10 === 7))))
+      val cCanon = cCanonF()
+      val bCanon = bCanonF()
       val ctk = scriptSetSimTk(cCanon)
       val dfreq = ctk.groupBy("token").agg(count(lit(1)).as("df"))
       val btk = scriptSetSimTk(bCanon)
@@ -400,25 +399,25 @@ object ScriptDedupOps {
       // (embeddings only) and the BPE merge training share no input
       // with the S1→S3 text chain — launched here, their jobs back-fill
       // the chain's stragglers instead of serializing after it.
-      val lstopsF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val lstopsF = graft.engine.Staging.fork(s)(
         mixed.filter(col("script") === "latin")
           .select(explode(tokens(col("text"))).as("t"))
           .filter(length(col("t")) >= 1)
           .groupBy("t").agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("t")).limit(8)
           .collect().map(_.getString(0)).toSeq)
-      val cstopsF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val cstopsF = graft.engine.Staging.fork(s)(
         mixed.filter(col("script") === "cjk")
           .select(explode(graft.plans.CharNgramsExpr.charNgrams(col("text"), 2))
             .as("t"))
           .groupBy("t").agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("t")).limit(8)
           .collect().map(_.getString(0)).toSeq)
-      val sLeaksF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      val sLeaksF = graft.engine.Staging.fork(s)(graft.engine.Staging.trackCp(
         SimilarityOps.semanticContam(s, Tables.embeddings(s, dir),
             col("vec_id") % 10 === 0, SimilarityOps.SemContamBp)
-          .select(col("train_id").as("doc_id")).localCheckpoint())
-      val mergesF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
+          .select(col("train_id").as("doc_id"))))
+      val mergesF = graft.engine.Staging.fork(s)(
         BpeOps.trainedMerges(s, dir).map(m => (m._2, m._3)))
       // S1: script-aware line clean, staged once for its many readers
       val cleaned = graft.engine.Staging.trackCp(scriptCleanedDocs(mixed))
@@ -432,8 +431,8 @@ object ScriptDedupOps {
       // (a filter on the stats structs' fields leaves one stats-kernel
       // copy per field reference after pushdown); ExprPropertySpec pins
       // each against its relational keep.
-      val lstops = lstopsF.join()
-      val cstops = cstopsF.join()
+      val lstops = lstopsF()
+      val cstops = cstopsF()
       val gated = graft.engine.Staging.trackCp(cleaned.filter(
         when(col("script") === "cjk",
           graft.plans.CjkGateKeepExpr.cjkGateKeep(col("text"), cstops))
@@ -447,9 +446,7 @@ object ScriptDedupOps {
       // S4: decontamination — eval stratum out, per-script verbatim
       // leaks out, semantic leaks out. vLeaks stays LAZY (one consumer:
       // the surv anti-join — the candidate frames inside both leak
-      // helpers are still staged); sLeaks' checkpoint was built on the
-      // §2.6 helper thread — register it with this thread's transient
-      // scope so its blocks free when the query's action ends.
+      // helpers are still staged).
       val train = deduped.filter(col("doc_id") % 5 =!= 0)
       val evalC = cleaned.filter(col("doc_id") % 5 === 0)
       val vLat = DedupOps.verbatimLeakIds(
@@ -459,11 +456,11 @@ object ScriptDedupOps {
         train.filter(col("script") === "cjk").select("doc_id", "text"),
         evalC.filter(col("script") === "cjk").select("doc_id", "text"))
       val vLeaks = vLat.union(vCjk).distinct()
-      val sLeaks = graft.engine.Staging.track(sLeaksF.join())
+      val sLeaks = sLeaksF()
       val surv = train.join(vLeaks, Seq("doc_id"), "left_anti")
         .join(sLeaks, Seq("doc_id"), "left_anti")
       // S5: script-aware packing under the raw-corpus merge table
-      scriptPackedSpans(surv, mergesF.join())
+      scriptPackedSpans(surv, mergesF())
         .groupBy("stratum", "seq_id")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("tok")).as("n_tokens"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 import graft.functions.VectorFunctions.{norm, normSq}
 import graft.plans.FloatVectorDot.cosineNative
 
@@ -580,71 +580,29 @@ object SimilarityOps {
       .select("doc_id", "score_mb")
   }
 
-  /** Once-per-(application, sf-dir) build of the bucket-clustered
-    * embeddings manifest table behind q140 — the memo keeps plan-only
-    * inspection (PlanAudit) from re-running the write. Returns the
-    * table's three-part name. */
-
   /** Session-scoped memo for deterministic TRAINING artifacts: the
     * Lloyd/PQ fits are pure functions of (fixture dir, hyperparams), so
     * queries sharing one (q139 + the codebook consumers, q174/q175,
     * q181/q182/q183's build) pay the training ONCE per application —
     * the same "session-staged" contract as q90's LSH pairs. The fits
     * localCheckpoint their outputs, so reuse reads materialized blocks. */
-  private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), java.util.concurrent.CompletableFuture[AnyRef]]()
-  /** Claim-future memo (the [[graft.engine.Staging.once]] pattern): the
-    * build runs OUTSIDE any map lock. The earlier computeIfAbsent form
-    * held the ConcurrentHashMap bin lock for the whole build, so the
-    * ivfpq fit — whose build nests memoFit("kmfit:k") on this same map —
-    * threw "Recursive update" whenever the two keys landed in one bin
-    * (appId-dependent, a per-run lottery once Bench built the index
-    * fixtures concurrently). A failed build removes its claim so later
-    * callers retry instead of consuming a poisoned future. A build that
-    * returns null fails loudly: waiters treat a null result as "no
-    * result yet", so a null claim would rebuild forever. */
+  private val fits = new Object
   private[graft] def memoFit[T <: AnyRef](s: SparkSession, dir: String,
-      tag: String)(f: => T): T = {
-    val k = (s.sparkContext.applicationId, dir, tag)
-    var out: AnyRef = null
-    while (out == null) {
-      val fresh = new java.util.concurrent.CompletableFuture[AnyRef]()
-      val existing = fitMemo.putIfAbsent(k, fresh)
-      if (existing == null) {
-        try {
-          out = f
-          require(out != null, s"memoFit build '$tag' for $dir returned null")
-          fresh.complete(out)
-        }
-        catch { case t: Throwable =>
-          fitMemo.remove(k, fresh); fresh.completeExceptionally(t); throw t }
-      } else {
-        try out = existing.join()
-        catch {
-          // claimant failed (and removed its claim) — retry as builder
-          case _: java.util.concurrent.CompletionException |
-               _: java.util.concurrent.CancellationException => ()
-        }
-      }
-    }
-    out.asInstanceOf[T]
-  }
+      tag: String)(f: => T): T =
+    Staging.once(fits, (s.sparkContext.applicationId, dir, tag))(f)
 
-  /** Once-per-key staging — BLOCKING and un-poisoning via
-    * [[graft.engine.Staging]]: concurrent callers wait for the build,
-    * a failed build stores nothing and the next caller retries. */
-  private def buildOnce[K](set: java.util.Set[K], key: K)(build: => Unit): Unit =
-    graft.engine.Staging.once(set, key)(build)
-
-  private val annBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val annBuilt = new Object
+  /** Once-per-(application, sf-dir) build of the bucket-clustered
+    * embeddings manifest table behind q140 — the memo keeps plan-only
+    * inspection (PlanAudit) from re-running the write. Returns the
+    * table's three-part name. */
   private[graft] def annAtRestTable(s: SparkSession, dir: String): String = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
       s.sparkContext.applicationId
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(annBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](annBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.emb_ann " +
         "(vec_id BIGINT, embedding ARRAY<FLOAT>, bucket BIGINT) " +
@@ -663,15 +621,14 @@ object SimilarityOps {
     * equality pruning, plus the scorer's corpus constants recorded as
     * free-form TBLPROPERTIES in the same table — the index is
     * self-describing, no side-channel between build and query. */
-  private val postingsBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val postingsBuilt = new Object
   private[graft] def postingsTable(s: SparkSession, dir: String): String = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
       s.sparkContext.applicationId
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(postingsBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](postingsBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.postings " +
         "(term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT) " +
@@ -701,8 +658,7 @@ object SimilarityOps {
     * gate, not just in specs. Returns (postings table name, n_docs,
     * sum_dl) with the constants read back from the index's own
     * TBLPROPERTIES. */
-  private val maintainedBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+  private val maintainedBuilt = new Object
   private[graft] def maintainedPostingsTable(s: SparkSession,
       dir: String): (String, Long, Long) = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
@@ -710,7 +666,7 @@ object SimilarityOps {
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
-    buildOnce(maintainedBuilt, (s.sparkContext.applicationId, dir)) {
+    Staging.once[Unit](maintainedBuilt, (s.sparkContext.applicationId, dir)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.docs_m (doc_id BIGINT, text STRING)")
       graft.sources.PostingsMaintenance.createPostingsTable(
@@ -872,8 +828,7 @@ object SimilarityOps {
     * centroids instead of the "first k vectors" stand-in. The table is
     * the composition seam a production pipeline has anyway: train once,
     * publish the codebook, every downstream job reads it by name. */
-  private val codebookBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, Int)]()
+  private val codebookBuilt = new Object
   private[graft] def codebookTable(s: SparkSession, dir: String): String = {
     val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
       s.sparkContext.applicationId
@@ -882,7 +837,7 @@ object SimilarityOps {
     val ns = s"db${Integer.toHexString(dir.hashCode)}"
     val k = centroidsFor(s) // k in the memo key AND the name: a session
                             // retune trains a NEW codebook, never reuses
-    buildOnce(codebookBuilt, (s.sparkContext.applicationId, dir, k)) {
+    Staging.once[Unit](codebookBuilt, (s.sparkContext.applicationId, dir, k)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
       s.sql(s"CREATE TABLE graft.$ns.codebook_k$k (cluster BIGINT, cvec ARRAY<BIGINT>)")
       val (cents, _) = kmeansFitMemo(s, dir, k)

@@ -84,13 +84,10 @@ object PostingsMaintenance {
     // carrying the observation, fall back to the recovery-path
     // recompute instead of wedging or mis-folding
     try {
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration._
-      val m = Await.result(
-        Future(ob.get)(scala.concurrent.ExecutionContext.global), 30.seconds)
-      if (m.contains("n") && m.contains("sdl"))
-        Some((m("n").asInstanceOf[Long], m("sdl").asInstanceOf[Long]))
-      else None
+      val r = Await.result(ob.future, 30.seconds)
+      Some((r.getAs[Long]("n"), r.getAs[Long]("sdl")))
     } catch { case _: Exception => None }
   }
 

@@ -24,6 +24,14 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], p)
 
+  /** Cancel every active job carrying `tag`; returns once the scheduler
+    * has failed them (SparkContext.cancelJobsWithTag only posts the
+    * request). */
+  def cancelJobsWithTag(sc: org.apache.spark.SparkContext, tag: String): Unit =
+    scala.concurrent.Await.ready(
+      sc.cancelJobsWithTagWithFuture(tag, "transient scope released"),
+      scala.concurrent.duration.Duration.Inf)
+
   /** Unpersist the block-store data behind a locally-checkpointed
     * DataFrame (LogicalRDD). localCheckpoint truncates lineage, so its
     * blocks are otherwise freed only when the ContextCleaner notices

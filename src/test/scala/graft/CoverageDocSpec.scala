@@ -61,6 +61,21 @@ class CoverageDocSpec extends AnyFunSuite {
       s"SparkSession.builder outside GraftSession: ${builders.mkString(", ")}")
   }
 
+  test("Staging.fork is the only helper thread in main code") {
+    // a common-pool or global-context thread runs without the caller's
+    // job group, span and transient scope, and nothing cancels it
+    val banned = Seq("supplyAsync", "ExecutionContext.global")
+    val src = java.nio.file.Paths.get("src/main/scala")
+    val hits = java.nio.file.Files.walk(src).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        banned.filter(text.contains).map(b => s"$p: $b")
+      }.sorted
+    assert(hits.isEmpty, s"ad-hoc helper threads: ${hits.mkString(", ")}")
+  }
+
   test("no COVERAGE.md query reference is stale") {
     // bare `qNN`/`qNNN` shorthands (q30–q33 style ranges) are prose;
     // only full `qN*_name` identifiers are checked against the registry
