@@ -88,10 +88,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   private def nsPath(ns: Array[String]): Path = ns.foldLeft(warehouse)(_.resolve(_))
   private def tablePath(ident: Identifier): Path =
     nsPath(ident.namespace()).resolve(ident.name())
-  /** A directory is a table iff the commit protocol has state in it. */
-  private def isTable(p: Path): Boolean =
-    ManifestSink.currentVersion(p) > 0L ||
-      Files.exists(ManifestSink.manifest(p)) || Files.exists(ManifestSink.schemaFile(p))
+  /** A directory is a table iff the commit protocol has published a
+    * version in it. */
+  private def isTable(p: Path): Boolean = ManifestSink.currentVersion(p) > 0L
 
   // ---- tables -----------------------------------------------------------
 

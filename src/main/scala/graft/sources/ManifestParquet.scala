@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.StructType
   *
   * The manifest table's commit protocol (versioned-manifest CAS, see
   * [[ManifestSink]]) is format-agnostic; this object supplies the
-  * production data-file format the protocol publishes:
+  * data-file format the protocol publishes, the only one manifest
+  * tables hold:
   *
   *   - '''write''': each DSv2 task opens a plain parquet-hadoop
   *     [[ParquetWriter]] whose `WriteSupport` is Spark's own
@@ -29,16 +30,12 @@ import org.apache.spark.sql.types.StructType
   *   - '''read''': scans go through Spark's
   *     [[VectorizedParquetRecordReader]] — the same columnar decoder
   *     behind native parquet scans — handing whole [[org.apache.spark
-  *     .sql.vectorized.ColumnarBatch]]es to DSv2 when every file in the
-  *     scan is parquet, and per-row views otherwise. Column pruning is
+  *     .sql.vectorized.ColumnarBatch]]es to DSv2 when the scan allows
+  *     it, and per-row views otherwise. Column pruning is
   *     applied at the reader (`initialize(path, columns)`), so a
   *     2-column projection of a 20-column table decodes 2 columns.
   *   - '''compact''': bins merge via [[ParquetFileWriter#appendFile]] —
-  *     raw row-group copy, no decode/re-encode — preserving the
-  *     byte-exactness the TSV format got from concatenation.
-  *
-  * Legacy `.tsv` data files (the pre-round-6 demo encoding) remain
-  * readable; only the extension dispatches the decoder.
+  *     raw row-group copy, no decode/re-encode, byte-exact.
   */
 object ManifestParquet {
 

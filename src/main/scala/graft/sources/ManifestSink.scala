@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -37,13 +37,24 @@ import scala.jdk.CollectionConverters._
   *     concurrent publish by another job fails LOUDLY (the losing
   *     commit throws) instead of silently dropping the winner's files
   *
-  * Data files are PARQUET, written with Spark's own row encoding
+  * Every metadata commit — appends, overwrites, deletes, ALTERs, tags,
+  * OPTIMIZE, rollback — goes through ONE driver ([[ManifestSink.commit]])
+  * that renders the version, CAS-publishes it and applies the site's
+  * loss policy: rebase (re-read the table and re-apply, backing off
+  * briefly so contending committers de-synchronize) or single shot
+  * (delete the files this commit wrote and rethrow). Retention GC runs
+  * only after a win and is best-effort: the table is already
+  * consistent, so a cleanup failure is logged and never fails the
+  * commit.
+  *
+  * On-disk format, the only one: versioned manifests
+  * `manifest-v<N>.txt` (schema line, header lines, entries — see the
+  * format note in the companion object) naming PARQUET data files,
+  * written with Spark's own row encoding
   * ([[graft.sources.ManifestParquet]]) and read through Spark's
   * vectorized columnar decoder with column pruning — a manifest-table
-  * scan pays what a native parquet scan pays. Legacy `.tsv` data files
-  * (the pre-round-6 demo encoding) stay readable; the extension picks
-  * the decoder per file. Supported field types: long, int, double,
-  * boolean, string.
+  * scan pays what a native parquet scan pays. Supported field types:
+  * long, int, double, boolean, string.
   *
   * Usage:
   *   df.write.format("graft.sources.ManifestSink")
@@ -83,9 +94,6 @@ object ManifestSink {
     Paths.get(p)
   }
 
-  private[sources] def manifest(root: Path): Path = root.resolve("manifest.txt")
-  private[sources] def schemaFile(root: Path): Path = root.resolve("schema.json")
-
   /** Time travel: `.option("versionAsOf", N)` pins reads to manifest
     * version N — versions are immutable and carry their own schema, so a
     * pinned read is a fully consistent historical snapshot (the Iceberg
@@ -110,9 +118,9 @@ object ManifestSink {
       require(from >= 0, s"changesFromVersion must be >= 0, got $from")
       val to = Option(properties.get("changesToVersion")).map(_.toLong).getOrElse(-1L)
       // an explicit upper bound must name a real version: 0 would
-      // silently resolve to the CURRENT snapshot (version 0 means "the
-      // empty/legacy state" internally), turning an empty delta into the
-      // whole table
+      // silently resolve to the CURRENT snapshot (version 0 means "no
+      // table yet" internally), turning an empty delta into the whole
+      // table
       require(to == -1L || to >= 1, s"changesToVersion must be >= 1, got $to")
       (from, to)
     }
@@ -158,14 +166,11 @@ object ManifestSink {
     * the window, fails loudly on retention gaps, treats `#rewrite`
     * versions as contributing nothing after checking they preserved the
     * live row count, and hands every other (prev, after, v) step to the
-    * caller. `from` = 0 with `to` = 0 is the legacy single-manifest
-    * table: the whole snapshot, via `legacy`. */
+    * caller. */
   private def versionWalk[A](root: Path, from: Long, to0: Long)(
-      legacy: Seq[FileEntry] => Seq[A])(
       step: (Seq[FileEntry], Seq[FileEntry], Long) => Seq[A]): Seq[A] = {
     val to = if (to0 < 0) currentVersion(root) else to0
     require(from <= to, s"changesFromVersion $from is past changesToVersion $to")
-    if (to == 0L) return legacy(committedEntries(root, None))
     require(from == 0L || Files.exists(manifestAt(root, from)),
       s"changesFromVersion $from does not exist for manifest table $root " +
         "(expired by retention GC?) — cannot compute a change feed")
@@ -202,8 +207,7 @@ object ManifestSink {
   }
 
   private[sources] def cdcSlices(root: Path, from: Long, to0: Long): Seq[CdcSlice] =
-    versionWalk(root, from, to0)(
-      _.map(e => CdcSlice(e, "insert", None))) { (prev, after, v) =>
+    versionWalk(root, from, to0) { (prev, after, v) =>
       {
           val afterNames = after.map(_.name).toSet
           val prevByName = prev.map(e => e.name -> e).toMap
@@ -287,7 +291,7 @@ object ManifestSink {
     * pre-compaction files — which retention GC keeps alive exactly as
     * long as the versions that reference them. */
   private[sources] def addedEntries(root: Path, from: Long, to0: Long): Seq[FileEntry] =
-    versionWalk(root, from, to0)(identity) { (prev, after, v) =>
+    versionWalk(root, from, to0) { (prev, after, v) =>
       val afterNames = after.map(_.name).toSet
       val dropped = prev.map(_.name).filterNot(afterNames)
       require(dropped.isEmpty,
@@ -320,7 +324,8 @@ object ManifestSink {
   // v(N+1) name, and exactly one wins; the loser's commit throws instead
   // of silently dropping the winner's files (the reference's git-push
   // analog: generate.sh:13-17 fails loudly on a non-fast-forward).
-  // Legacy single-file `manifest.txt` tables read as version 0.
+  // CREATE TABLE and every save() publish v1, so version 0 means "no
+  // table here yet".
   //
   // A versioned manifest's FIRST line is the table schema (single-line
   // Spark DataType JSON); optional `#epoch<TAB>queryId<TAB>epochId`
@@ -333,8 +338,6 @@ object ManifestSink {
   // concurrent with a truncate-with-new-schema can never see the new
   // schema against the old file list or vice versa, and an epoch can
   // never be marked committed without its files being visible.
-  // `schema.json` is still written as a best-effort convenience/legacy
-  // artifact, but versioned readers never depend on it.
 
   private val ManifestVersionRe = "manifest-v([0-9]+)\\.txt".r
 
@@ -355,7 +358,7 @@ object ManifestSink {
 
   /** Compare-and-swap publish of manifest version `expectedVersion + 1`.
     * `content` must start with the schema line (see the format note
-    * above); `commit()` is the assembler.
+    * above); [[commit]] is the assembler and the only caller.
     *
     * `Files.createLink` is the atomic create-if-absent primitive:
     * ATOMIC_MOVE without REPLACE_EXISTING is NOT safe here because on
@@ -377,6 +380,81 @@ object ManifestSink {
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** What a [[commit]] does when another writer published first. */
+  private[sources] sealed trait OnLoss
+
+  /** Re-read the table and re-run the body on the new state, up to
+    * `attempts` tries in all, backing off 5 ms × attempt so contending
+    * committers de-synchronize. `when(lost, now)` — the state the losing
+    * attempt built on, and the winner's — false makes the loss final at
+    * once. The rule that makes a rebase sound is the site's: its effect
+    * must not depend on what the winner changed. */
+  private[sources] case class Rebase(attempts: Int,
+      when: (TableState, TableState) => Boolean = (_, _) => true) extends OnLoss
+
+  /** One attempt only: the body decided from a state that no longer
+    * holds, so the loss is the caller's to re-run. */
+  private[sources] case object SingleShot extends OnLoss
+
+  /** One attempt's outcome: `next` is the version to publish (schema,
+    * header, entries and the entry groups to re-reference), `result` is
+    * what the caller gets back, and `files` are the files this commit
+    * wrote — deleted when the commit loses for good. */
+  private[sources] case class Commit[A](next: TableState, result: A,
+      files: Seq[String] = Seq.empty)
+
+  /** A table's schema, or the one loud failure for a directory that
+    * holds no table. */
+  private def schemaOf(root: Path, st: TableState): StructType =
+    st.schema.getOrElse(throw new IllegalStateException(
+      s"manifest table $root has no schema"))
+
+  /** The commit driver: every manifest version is published here. The
+    * first attempt runs `body` on `first` (the state the caller already
+    * read) or on a fresh read; each attempt renders
+    * `schema +: [#rewrite] +: header ++ entries` from the body's `next`
+    * and CAS-publishes it against the state the body ran on. A lost CAS
+    * follows `onLoss`; a final loss deletes the attempt's `files` and
+    * rethrows the [[java.util.ConcurrentModificationException]]. After a
+    * win, `gc.retainVersions` expiry runs best-effort. `body` receives
+    * the attempt number (1-based). */
+  private[sources] def commit[A](root: Path, onLoss: OnLoss,
+      gc: GcPolicy = GcPolicy(None, 0L), rewrite: Boolean = false,
+      first: Option[TableState] = None)(
+      body: (TableState, Int) => Commit[A]): A = {
+    var st = first.getOrElse(readState(root))
+    var attempt = 1
+    var won: Option[A] = None
+    while (won.isEmpty) {
+      val c = body(st, attempt)
+      val head = schemaOf(root, c.next).json +: (if (rewrite) Seq(RewriteMarker) else Nil)
+      try {
+        publish(root, st.version, ((head ++ c.next.metaLines) ++
+          renderEntrySection(root, c.next.entries, c.next.groups)).mkString("\n"))
+        won = Some(c.result)
+      } catch { case e: java.util.ConcurrentModificationException =>
+        val now = onLoss match {
+          case Rebase(n, when) if attempt < n =>
+            Thread.sleep(5L * attempt)
+            Some(readState(root)).filter(when(st, _))
+          case _ => None
+        }
+        st = now.getOrElse {
+          c.files.foreach(f => Files.deleteIfExists(root.resolve(f)))
+          throw e
+        }
+        attempt += 1
+      }
+    }
+    gc.retainVersions.foreach { k =>
+      try expireVersions(root, k, gc.orphanGraceMs)
+      catch { case e: Exception =>
+        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
+      }
+    }
+    won.get
+  }
+
   /** Write-option parser for [[GcPolicy]]. */
   private[sources] def gcPolicy(options: util.Map[String, String]): GcPolicy = {
     val retain = Option(options.get("retainVersions")).map { s =>
@@ -390,8 +468,8 @@ object ManifestSink {
 
   /** One file the retention sweep would remove. `kind` is `manifest`
     * (an expired versioned manifest), `data` (a data file no retained
-    * version references), `tmp` (an orphaned staging file), or `legacy`
-    * (the pre-v1 side-car manifest). */
+    * version references), `dv`, `eqdel` or `lineage` (an unreferenced
+    * sidecar), or `tmp` (an orphaned staging file). */
   case class GcCandidate(kind: String, name: String, bytes: Long)
 
   /** What a [[vacuum]] pass found (and, when not a dry run, removed). */
@@ -466,15 +544,14 @@ object ManifestSink {
         // staging leftovers of writers that died between writeString and
         // link/move accumulate forever without this sweep; the same grace
         // window that protects an in-flight writer's data files protects
-        // its staged manifest
+        // its staged manifest (`schema.json.tmp-` files are orphans of
+        // the schema side-car that older writers also kept)
         case n if (n.startsWith("manifest.tmp-") || n.startsWith("schema.json.tmp-")) &&
             pastGrace(p) =>
           buf += cand(p, "tmp")
         case _ => ()
       }
     } finally s.close()
-    val legacy = manifest(root) // legacy file is pre-v1 state
-    if (Files.exists(legacy)) buf += cand(legacy, "legacy")
     buf.result()
   }
 
@@ -495,9 +572,7 @@ object ManifestSink {
 
   /** Expire manifest versions older than the `retain` most recent ones
     * and sweep unreferenced data / orphaned tmp files (see [[gcPlan]]).
-    * Runs after a successful publish; failures here must not fail the
-    * commit (the table is already consistent), so callers best-effort
-    * it. */
+    * [[commit]] runs it after a won publish and only logs its failures. */
   private[sources] def expireVersions(root: Path, retain: Int, orphanGraceMs: Long): Unit =
     vacuum(root, retain, orphanGraceMs, dryRun = false)
 
@@ -543,10 +618,7 @@ object ManifestSink {
     val root = Paths.get(tablePath)
     require(name.matches("[A-Za-z0-9_-]{1,64}"),
       s"tag name '$name' must match [A-Za-z0-9_-]{1,64}")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val st = readState(root)
+    commit(root, Rebase(5)) { (st, _) =>
       val v = at.getOrElse(st.version)
       require(v >= 1L && v <= st.version,
         s"tag target v$v does not exist (table is at v${st.version})")
@@ -557,51 +629,22 @@ object ManifestSink {
       require(!listBranches(root).contains(name),
         s"'$name' is a live branch — tags and branches share the " +
           "VERSION AS OF namespace")
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"manifest table $tablePath has no schema"))
-      val meta = st.copy(props = st.props + (TagPropPrefix + name -> v.toString)).metaLines
-      try {
-        publish(root, st.version,
-          ((schema.json +: meta) ++
-            renderEntrySection(root, st.entries, st.groups)).mkString("\n"))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) throw e
-          Thread.sleep(5L * attempt)
-      }
+      Commit(st.copy(props = st.props + (TagPropPrefix + name -> v.toString)), v)
     }
-    0L // unreachable
   }
 
   /** Drop tag `name` (metadata-only); returns the version it pinned.
     * The snapshot ages into ordinary retention from the next vacuum. */
   def dropTag(tablePath: String, name: String): Long = {
     val root = Paths.get(tablePath)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val st = readState(root)
+    commit(root, Rebase(5)) { (st, _) =>
       val key = TagPropPrefix + name
       val v = st.props.getOrElse(key,
         throw new IllegalArgumentException(s"no tag '$name' on $tablePath " +
           s"(tags: ${st.props.keys.filter(_.startsWith(TagPropPrefix))
             .map(_.stripPrefix(TagPropPrefix)).mkString(", ")})")).toLong
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"manifest table $tablePath has no schema"))
-      val meta = st.copy(props = st.props - key).metaLines
-      try {
-        publish(root, st.version,
-          ((schema.json +: meta) ++
-            renderEntrySection(root, st.entries, st.groups)).mkString("\n"))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) throw e
-          Thread.sleep(5L * attempt)
-      }
+      Commit(st.copy(props = st.props - key), v)
     }
-    0L // unreachable
   }
 
   // ---- WAP branches ------------------------------------------------------
@@ -799,9 +842,9 @@ object ManifestSink {
     // WAP rows enter MAIN history here: lineage assignment happens at
     // the fast-forward (the branch's own counter never touched main's)
     val (staged, nextRid) = assignLineage(staged0, st.nextRowId, base + 1L)
-    publish(root, base,
-      ((st.schema.get.json +: st.copy(nextRowId = nextRid).metaLines) ++
-        renderEntrySection(root, st.entries ++ staged, st.groups)).mkString("\n"))
+    commit(root, SingleShot, first = Some(st)) { (st, _) =>
+      Commit(st.copy(nextRowId = nextRid, entries = st.entries ++ staged), ())
+    }
     dropBranch(root, name)
     base + 1L
   }
@@ -907,24 +950,18 @@ object ManifestSink {
     }
 
   /** Schema resolves from the (pinned or current) versioned manifest's
-    * first line (atomic with the file list); legacy tables fall back to
-    * the side-car schema.json. */
+    * first line (atomic with the file list). */
   private[sources] def readSchema(root: Path, pinned: Option[Long] = None): StructType = {
     val v = resolveVersion(root, pinned)
-    if (v > 0L)
-      DataType.fromJson(Files.readString(manifestAt(root, v)).linesIterator.next())
-        .asInstanceOf[StructType]
-    else {
-      require(Files.exists(schemaFile(root)),
-        s"no manifest table at $root (missing schema.json)")
-      DataType.fromJson(Files.readString(schemaFile(root))).asInstanceOf[StructType]
-    }
+    require(v > 0L, s"no manifest table at $root")
+    DataType.fromJson(Files.readString(manifestAt(root, v)).linesIterator.next())
+      .asInstanceOf[StructType]
   }
 
   private val EpochMarkerPrefix = "#epoch\t"
 
   /** Per-streaming-query high-water epoch markers in the (pinned or
-    * current) manifest version. Empty for legacy/absent tables. */
+    * current) manifest version. Empty for absent tables. */
   private[sources] def epochMarkers(root: Path,
       pinned: Option[Long] = None): Map[String, Long] = {
     val v = resolveVersion(root, pinned)
@@ -1500,19 +1537,11 @@ object ManifestSink {
     require(keys.nonEmpty, "equality delete needs at least one key tuple")
     keys.foreach(k => require(k.length == cols.length,
       s"key tuple $k does not match the ${cols.length}-column key $cols"))
-    var attempt = 0
-    var published = -1L
     val name = writeEqDelFile(root, keys)
-    while (published < 0L) {
-      attempt += 1
-      val st = readState(root)
+    commit(root, Rebase(5), gc) { (st, _) =>
       require(st.version > 0L,
         s"equality delete requires a versioned manifest table at $tablePath")
-      require(st.entries.forall(_.name.endsWith(".parquet")),
-        "equality deletes are not supported on tables holding legacy .tsv " +
-          "files — the tsv reader has no position pass; OPTIMIZE first")
-      val schema = st.schema.getOrElse(throw new IllegalStateException(
-        s"manifest table $tablePath has no schema"))
+      val schema = schemaOf(root, st)
       cols.zipWithIndex.foreach { case (col, ci) =>
         val f = schema.fields.find(_.name == col).getOrElse(
           throw new IllegalArgumentException(s"no column $col in $tablePath"))
@@ -1528,25 +1557,8 @@ object ManifestSink {
         }
       }
       val next = st.version + 1L
-      val meta = st.copy(eqDels = st.eqDels :+ EqDelRec(name, cols, next)).metaLines
-      try {
-        publish(root, st.version,
-          ((schema.json +: meta) ++
-            renderEntrySection(root, st.entries, st.groups)).mkString("\n"))
-        published = next
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) { Files.deleteIfExists(root.resolve(name)); throw e }
-          Thread.sleep(5L * attempt)
-      }
+      Commit(st.copy(eqDels = st.eqDels :+ EqDelRec(name, cols, next)), next, Seq(name))
     }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
-    }
-    published
   }
 
   /** Deletion-vector sidecar files (merge-on-read deletes): one
@@ -2501,21 +2513,15 @@ object ManifestSink {
     expanded.filter(e => filters.forall(f => mayMatchEntry(e, f, tfOfSpec(e.specId))))
   }
 
-  /** Entry line: `fileName<TAB>rowCount<TAB>mins<TAB>maxs`. In a
-    * versioned manifest the first line is the schema and is skipped, as
-    * are `#`-prefixed marker lines; legacy manifest.txt holds entries
-    * only. */
+  /** Entry line: `fileName<TAB>rowCount<TAB>mins<TAB>maxs`. The first
+    * line of a manifest is the schema and is skipped, as are
+    * `#`-prefixed marker lines. */
   private[sources] def committedEntries(root: Path,
       pinned: Option[Long] = None, withBlooms: Boolean = true): Seq[FileEntry] = {
     val v = resolveVersion(root, pinned)
     if (v > 0L) {
       val (inline, refs) = versionSections(root, v)
       inline ++ refs.flatMap(readGroupEntries(root, _, withBlooms))
-    } else if (Files.exists(manifest(root))) {
-      val lines = Files.readString(manifest(root)).split("\n").toSeq
-      checkMinReader(lines, root)
-      lines.filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntryLine)
     } else Seq.empty
   }
 
@@ -2735,7 +2741,7 @@ object ManifestSink {
   private[sources] val ReaderFormatVersion = 2L
   private[sources] val MinReaderPrefix = "#minreader\t"
 
-  private[sources] def checkMinReader(lines: Iterable[String], where: Any): Unit =
+  private[sources] def checkMinReader(lines: Iterable[String], where: String): Unit =
     lines.foreach { l =>
       if (l.startsWith(MinReaderPrefix)) {
         val need = l.stripPrefix(MinReaderPrefix).trim.toLong
@@ -3127,14 +3133,6 @@ object ManifestSink {
     }
   }
 
-  /** Assemble and CAS-publish one new manifest version: stored-schema
-    * compat + nullability merge, entry union (or replacement on
-    * truncate), epoch-marker carry-forward, legacy side-car, retention
-    * GC. The single commit path shared by [[ManifestBatchWrite]] and
-    * [[ManifestStreamingWrite]] — batch and streaming writes to the same
-    * table therefore interleave safely under the same CAS.
-    * Throws [[java.util.ConcurrentModificationException]] if another
-    * writer published first. */
   /** Fully parsed state of the CURRENT manifest version — version
     * number, stored schema, epoch markers and file entries resolved from
     * ONE directory listing + ONE file read, so a commit's read-point is
@@ -3171,8 +3169,9 @@ object ManifestSink {
       // ROW-LINEAGE high-water mark (Iceberg v3 next-row-id): the next
       // unassigned row id. Publishers that add fresh data files assign
       // [nextRowId, nextRowId + rows) per file and bump this; every
-      // publisher carries it forward. 0 on legacy tables — the first
-      // lineage-assigning commit starts numbering there.
+      // publisher carries it forward. 0 on tables written before row
+      // lineage — the first lineage-assigning commit starts numbering
+      // there.
       nextRowId: Long = 0L) {
     /** The spec with the all-identity fallback applied — what metaLines
       * renders and decision sites consume. */
@@ -3257,7 +3256,7 @@ object ManifestSink {
           .map(parsePastSpecLine).toMap,
         lines.tail.find(_.startsWith(NextRowIdPrefix))
           .map(_.stripPrefix(NextRowIdPrefix).trim.toLong).getOrElse(0L))
-    } else legacyState(root)
+    } else TableState(0L, None, Map.empty, Seq.empty)
   }
 
   /** Fully-resolved state: [[readHeader]] plus every group expanded
@@ -3269,19 +3268,6 @@ object ManifestSink {
       h.copy(entries = h.entries ++
         h.groups.flatMap(readGroupEntries(root, _, withBlooms = true)))
     }
-  }
-
-  private def legacyState(root: Path): TableState = {
-      val schema =
-        if (Files.exists(schemaFile(root)))
-          Some(DataType.fromJson(Files.readString(schemaFile(root))).asInstanceOf[StructType])
-        else None
-      val entries =
-        if (Files.exists(manifest(root)))
-          Files.readString(manifest(root)).split("\n").toSeq
-            .filter(_.nonEmpty).map(parseEntryLine)
-        else Seq.empty
-      TableState(0L, schema, Map.empty, entries)
   }
 
   /** Inline segment-count cap: past this the segments live in a
@@ -3393,6 +3379,14 @@ object ManifestSink {
     (out, nid)
   }
 
+  /** Assemble and commit one new manifest version: stored-schema
+    * compat + nullability merge, entry union (or replacement on
+    * truncate), epoch-marker carry-forward. The single commit path
+    * shared by [[ManifestBatchWrite]] and [[ManifestStreamingWrite]] —
+    * batch and streaming writes to the same table therefore interleave
+    * safely under the same CAS. Throws
+    * [[java.util.ConcurrentModificationException]] if another writer
+    * published first and the commit may not rebase. */
   private[sources] def publishCommit(root: Path, schema: StructType,
       truncateFirst: Boolean, newEntries: Seq[FileEntry],
       markerUpdate: Option[(String, Long)], gc: GcPolicy,
@@ -3413,14 +3407,9 @@ object ManifestSink {
     // A TRUNCATE read the table state to decide what to destroy; its
     // loss stays loud (attempts = 1), as does a compaction's (see
     // [[compact]]).
-    val maxAttempts = if (truncateFirst) 1 else 20
-    var attempt = 0
-    var published: Option[StructType] = None
-    while (published.isEmpty) {
-      attempt += 1
-      // ONE consistent snapshot per attempt: version, schema, markers and
-      // entries all come from the same manifest read (see TableState)
-      val st = readState(root)
+    // ONE consistent snapshot per attempt: version, schema, markers and
+    // entries all come from the same manifest read (see TableState)
+    commit(root, Rebase(if (truncateFirst) 1 else 20), gc) { (st, _) =>
       val existingSchema = st.schema
       existingSchema.foreach { s =>
         // name+type compatibility; nullability flags may legitimately
@@ -3448,8 +3437,8 @@ object ManifestSink {
         case _ => schema
       }
       // Read-point for the CAS: the version whose entries this commit
-      // extends. If another job publishes v(base+1) first, our publish
-      // below fails — loudly past maxAttempts, else into a rebase.
+      // extends. If another job publishes v(base+1) first, the publish
+      // fails — loudly past the attempt bound, else into a rebase.
       val base = st.version
       // data sequence: new files carry the version this commit publishes,
       // so later equality deletes can govern exactly the files that
@@ -3464,7 +3453,8 @@ object ManifestSink {
       // partitioning/column-mapping are table STRUCTURE: an existing
       // table's persist across every commit (truncate included);
       // createPartSpec only seeds a brand-new table's first version
-      val meta = st.copy(markers = st.markers ++ markerUpdate,
+      Commit(st.copy(schema = Some(schemaToStore), entries = all,
+        markers = st.markers ++ markerUpdate,
         partCols = if (st.version > 0L) st.partCols else createPartSpec.map(_.col),
         partSpec = if (st.version > 0L) st.partSpec else createPartSpec,
         // a truncate leaves no governed files: dropping the records here
@@ -3475,33 +3465,7 @@ object ManifestSink {
         bloomCols = if (st.version > 0L) st.bloomCols else createBloomCols,
         sortCols = if (st.version > 0L) st.sortCols else createSortCols,
         props = if (st.version > 0L) st.props else createProps,
-        nextRowId = nextRid).metaLines
-      // schema line + meta + entries publish as ONE atomic unit
-      try {
-        publish(root, base,
-          ((schemaToStore.json +: meta) ++
-            renderEntrySection(root, all, st.groups)).mkString("\n"))
-        published = Some(schemaToStore)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          // brief backoff: contending committers de-synchronize
-          Thread.sleep(5L * attempt)
-      }
-    }
-    // best-effort legacy/debug side-car, written only after the CAS wins
-    // so a losing writer can't leave its schema behind
-    val schemaTmp = root.resolve(s"schema.json.tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(schemaTmp, published.get.json)
-    Files.move(schemaTmp, schemaFile(root),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // retention GC is best-effort: the table is already consistent, so a
-    // cleanup failure must not fail the committed write
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
+        nextRowId = nextRid), ())
     }
   }
 
@@ -3521,28 +3485,16 @@ object ManifestSink {
     // row-level rewrites read through the scan (equality deletes already
     // applied), so replacement files start a fresh sequence
     val newEntries1 = newEntries0.map(_.copy(seq = baseVersion + 1L))
-    val st = readState(root, Some(baseVersion))
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"manifest table $root has no schema"))
-    val kept = st.entries.filterNot(e => replaced(e.name))
-    // rewrite outputs whose lineage the caller preserved (a bin-merge's
-    // member segments) pass through; anything else is spec-fallback NEW
-    // rows — fresh ids, last-updated = this version
-    val (newEntries, nextRid) =
-      assignLineage(newEntries1, st.nextRowId, baseVersion + 1L)
-    try publish(root, baseVersion,
-      ((schema.json +: st.copy(nextRowId = nextRid).metaLines) ++
-        renderEntrySection(root, kept ++ newEntries, st.groups))
-        .mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      newEntries.foreach(n => Files.deleteIfExists(root.resolve(n.name)))
-      throw e
-    }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
+    commit(root, SingleShot, gc, first = Some(readState(root, Some(baseVersion)))) {
+      (st, _) =>
+        val kept = st.entries.filterNot(e => replaced(e.name))
+        // rewrite outputs whose lineage the caller preserved (a
+        // bin-merge's member segments) pass through; anything else is
+        // spec-fallback NEW rows — fresh ids, last-updated = this version
+        val (newEntries, nextRid) =
+          assignLineage(newEntries1, st.nextRowId, baseVersion + 1L)
+        Commit(st.copy(nextRowId = nextRid, entries = kept ++ newEntries), (),
+          newEntries.map(_.name))
     }
   }
 
@@ -3578,11 +3530,7 @@ object ManifestSink {
             "on partition columns, or dynamic overwrite mode"))
       }
     }
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val st = readState(root)
+    commit(root, Rebase(5), gc) { (st, _) =>
       require(st.version > 0L,
         s"partition overwrite requires a versioned manifest table at $root")
       // DYNAMIC overwrite matches victims by tuple EQUALITY, which is
@@ -3613,22 +3561,7 @@ object ManifestSink {
             s"file ${e.name} was written under unknown partition spec " +
               s"${e.specId} — overwrite victim selection is undecidable")))) ++
           assignedNew
-      try {
-        publish(root, st.version,
-          ((schema.json +: st.copy(nextRowId = nextRid).metaLines) ++
-            renderEntrySection(root, entries, st.groups)).mkString("\n"))
-        done = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) throw e
-          Thread.sleep(5L * attempt)
-      }
-    }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
+      Commit(st.copy(schema = Some(schema), nextRowId = nextRid, entries = entries), ())
     }
   }
 
@@ -3654,17 +3587,10 @@ object ManifestSink {
   def alterSchema(root: Path,
       changes: Seq[org.apache.spark.sql.connector.catalog.TableChange]): Unit = {
     import org.apache.spark.sql.connector.catalog.TableChange
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      val st = readState(root)
+    commit(root, Rebase(5)) { (st, attempt) =>
       require(st.version > 0L,
         s"ALTER TABLE requires a versioned manifest table at $root")
-      require(st.entries.forall(_.name.endsWith(".parquet")),
-        "ALTER TABLE is not supported on tables holding legacy .tsv files")
-      var schema = st.schema.getOrElse(
-        throw new IllegalStateException(s"manifest table $root has no schema"))
+      var schema = schemaOf(root, st)
       var colMap = st.colMap
       var partCols = st.partCols
       var partSpec0 = st.effectiveSpec
@@ -3902,8 +3828,8 @@ object ManifestSink {
             // the scan and this publish could hold violating rows the
             // scan never saw — refuse instead of persisting a
             // constraint whose VALID status would be a lie. The same
-            // guard refuses the CAS rebase below (attempt > 1 implies
-            // the table advanced mid-ALTER).
+            // guard refuses a CAS rebase (attempt > 1 implies the table
+            // advanced mid-ALTER).
             Option(ac.validatedTableVersion()).foreach { v =>
               require(v == st.version.toString,
                 s"table advanced from version $v to ${st.version} since " +
@@ -3944,21 +3870,11 @@ object ManifestSink {
             "(CHECK), SET/UNSET TBLPROPERTIES)")
       }
       colMap = colMap.filter { case (k, v) => k != v }
-      val meta = st.copy(schema = Some(schema), partCols = partCols,
+      Commit(st.copy(schema = Some(schema), partCols = partCols,
         partSpec = partSpec0, pastSpecs = pastSpecs0, eqDels = eqDels0,
         colMap = colMap, schemaEpoch = newEpoch, entries = entries,
         bloomCols = bloomCols, sortCols = sortCols,
-        deleteMode = deleteMode0, props = props0).metaLines
-      try {
-        publish(root, st.version,
-          ((schema.json +: meta) ++
-            renderEntrySection(root, entries, st.groups)).mkString("\n"))
-        done = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) throw e
-          Thread.sleep(5L * attempt)
-      }
+        deleteMode = deleteMode0, props = props0), ())
     }
   }
 
@@ -4005,16 +3921,15 @@ object ManifestSink {
     *    the compaction deletes its merged files and throws, and the
     *    caller can re-run against the new state.
     *
-    * The rewrite never decodes a row in either format: parquet bins
-    * merge by RAW ROW-GROUP APPEND ([[ManifestParquet.appendMerge]] —
-    * the parquet-level analog of file concatenation), legacy TSV bins
-    * by exact byte concatenation. Per-file stats merge losslessly (min
-    * of mins, max of maxs; a column's merged range is published only
-    * when every member file carried stats for it, since absence is
-    * indistinguishable from "not collected"). Formats never mix inside
-    * a bin. Bins are independent, so a distributed rewrite of a
-    * petabyte table would fan each bin out as one task; driver-side
-    * sequential I/O is the local[*] degenerate case of the same plan. */
+    * The rewrite never decodes a row: bins merge by RAW ROW-GROUP APPEND
+    * ([[ManifestParquet.appendMerge]] — the parquet-level analog of file
+    * concatenation). Per-file stats merge losslessly (min of mins, max
+    * of maxs; a column's merged range is published only when every
+    * member file carried stats for it, since absence is
+    * indistinguishable from "not collected"). Bins are independent, so
+    * a distributed rewrite of a petabyte table would fan each bin out
+    * as one task; driver-side sequential I/O is the local[*] degenerate
+    * case of the same plan. */
   /** Materialize outstanding equality deletes: rewrite every governed
     * file the key stats/blooms cannot rule out (dropping matching rows
     * and any DV'd positions in the same pass) and publish ONE commit
@@ -4030,8 +3945,7 @@ object ManifestSink {
     val root = Paths.get(tablePath)
     val st = readState(root)
     if (st.eqDels.isEmpty) return 0
-    val schema = st.schema.getOrElse(throw new IllegalStateException(
-      s"manifest table $tablePath has no schema"))
+    val schema = schemaOf(root, st)
     // typed kill sets once, per record
     val applied = st.eqDels.map { r =>
       EqDelApplied(r.cols,
@@ -4083,21 +3997,10 @@ object ManifestSink {
           ndvSk = stats.ndvSketches, qsk = stats.quantSketches)
       }
     }.filter(_.rows > 0L)
-    try publish(root, st.version,
-      ((schema.json +: st.copy(eqDels = Seq.empty).metaLines) ++
-        renderEntrySection(root, newEntries, st.groups)).mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      newEntries.filterNot(st.entries.contains)
-        .foreach(m => Files.deleteIfExists(root.resolve(m.name)))
-      throw e
+    commit(root, SingleShot, gc, first = Some(st)) { (st, _) =>
+      Commit(st.copy(eqDels = Seq.empty, entries = newEntries), rewritten,
+        newEntries.filterNot(st.entries.contains).map(_.name))
     }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case ex: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${ex.getMessage}")
-      }
-    }
-    rewritten
   }
 
   def compact(tablePath: String, targetRows: Long): CompactionResult =
@@ -4115,13 +4018,7 @@ object ManifestSink {
     // commit) so the bin merge below never raw-appends governed rows
     materializeEqDeletes(tablePath)
     val st = readState(root)
-    // a legacy manifest.txt table reads as version 0, and the change
-    // feed models version 0 as "the empty table" — a v1 rewrite of
-    // legacy entries would break that model's row-preservation check.
-    // Any append upgrades a legacy table to v1; compact after that.
-    require(st.version > 0L,
-      s"compact requires a versioned manifest table at $tablePath " +
-        "(legacy manifest.txt tables upgrade on their next append)")
+    require(st.version > 0L, s"compact requires a versioned manifest table at $tablePath")
     // Files carrying a deletion vector are NEVER raw-row-group-appended
     // (that would resurrect the deleted positions); OPTIMIZE instead
     // PURGES them — live rows decode into a fresh file with fresh stats,
@@ -4129,15 +4026,12 @@ object ManifestSink {
     // paths. Purged replacements are dataChange=false like every other
     // rewrite here: the LIVE row set is untouched.
     val (dvEntries, plain) = st.entries.partition(_.dvRows > 0L)
-    val purged = dvEntries.map(e => purgeDvEntry(root, e,
-      st.schema.getOrElse(throw new IllegalStateException(
-        s"manifest table $tablePath has no schema")),
+    val purged = dvEntries.map(e => purgeDvEntry(root, e, schemaOf(root, st),
       st.colMap, st.schemaEpoch > 0L, st.bloomCols, st.sortCols,
       quantColsOf(st.props)))
     val small = plain.filter(_.rows < targetRows)
     // first-fit in manifest order keeps neighboring appends together,
-    // which preserves any time-locality the write order had; binning is
-    // per format so a bin merges homogeneously
+    // which preserves any time-locality the write order had
     def packBins(entries: Seq[FileEntry]): List[List[FileEntry]] =
       entries.foldLeft(List.empty[List[FileEntry]]) { (acc, e) =>
         acc match {
@@ -4151,14 +4045,11 @@ object ManifestSink {
     // they must not span PHYSICAL schemas either — raw row-group append
     // requires byte-identical file schemas, so bins additionally group
     // by footer schema (one footer read per small file, driver-local).
-    val (tsvSmall, parquetSmall) = small.partition(_.name.endsWith(".tsv"))
     val schemaKey: FileEntry => String =
       if (st.schemaEpoch == 0L) _ => ""
       else e => ManifestParquet.footerSchemaString(root.resolve(e.name).toString)
     val bins =
-      parquetSmall.groupBy(e => (e.specId, e.parts, schemaKey(e))).values.toSeq
-        .flatMap(packBins) ++
-        tsvSmall.groupBy(e => (e.specId, e.parts)).values.toSeq.flatMap(packBins)
+      small.groupBy(e => (e.specId, e.parts, schemaKey(e))).values.toSeq.flatMap(packBins)
     if (bins.isEmpty && purged.isEmpty)
       return CompactionResult(st.version, st.entries.size, st.entries.size, 0, 0L)
     val merged = bins.map { bin0 =>
@@ -4186,13 +4077,8 @@ object ManifestSink {
           }
           if (disjoint) (ordered, lists.head) else (bin0, Seq.empty[String])
         } else (bin0, Seq.empty[String])
-      val tsv = bin.head.name.endsWith(".tsv")
-      val name = s"data-compact-${java.util.UUID.randomUUID()}.${if (tsv) "tsv" else "parquet"}"
-      if (tsv) {
-        val out = Files.newOutputStream(root.resolve(name))
-        try bin.foreach(e => Files.copy(root.resolve(e.name), out))
-        finally out.close()
-      } else ManifestParquet.appendMerge(root.resolve(name), bin.map(e => root.resolve(e.name)))
+      val name = s"data-compact-${java.util.UUID.randomUUID()}.parquet"
+      ManifestParquet.appendMerge(root.resolve(name), bin.map(e => root.resolve(e.name)))
       val statKeys = bin.map(_.mins.keySet).reduce(_ intersect _)
       // blooms merge losslessly by bitwise OR, published only when every
       // member carried one (same absence rule as the min/max stats) AND
@@ -4234,8 +4120,6 @@ object ManifestSink {
         sorted = mergedSorted, lineage = concatLineage(root, bin))
     }
     val rewrittenNames = bins.flatten.map(_.name).toSet ++ dvEntries.map(_.name)
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"manifest table $tablePath has no schema"))
     // CAS with APPEND-ONLY REBASE (the Iceberg commit.retry shape for
     // rewrites): a compaction only replaces the files it READ, so a
     // concurrent commit that merely ADDED files cannot conflict with it
@@ -4249,38 +4133,25 @@ object ManifestSink {
     // therefore interleave without retry loops in the operator's cron.
     def structural(ts: TableState): Seq[String] = ts.metaLines.filterNot(l =>
       l.startsWith(EpochMarkerPrefix) || l.startsWith(NextRowIdPrefix))
-    var attempt = 0
-    var base = st
-    var result: Option[CompactionResult] = None
-    while (result.isEmpty) {
-      attempt += 1
+    def appendOnly(base: TableState, st2: TableState): Boolean = {
+      val byName = st2.entries.map(x => x.name -> x).toMap
+      val inputsIntact = (rewrittenNames ++
+        base.entries.filterNot(x => rewrittenNames(x.name)).map(_.name))
+        .forall(n => base.entries.find(_.name == n)
+          .exists(old => byName.get(n).exists(now => entryLine(now) == entryLine(old))))
+      inputsIntact &&
+        st2.schema.map(_.json) == base.schema.map(_.json) &&
+        structural(st2) == structural(base)
+    }
+    commit(root, Rebase(4, appendOnly), rewrite = true, first = Some(st)) { (base, attempt) =>
       if (attempt == 1) beforePublish()
       val entries = base.entries.filterNot(e => rewrittenNames(e.name)) ++ merged ++ purged
-      try {
-        publish(root, base.version,
-          ((schema.json +: RewriteMarker +: base.metaLines) ++
-            renderEntrySection(root, entries, base.groups)).mkString("\n"))
-        result = Some(CompactionResult(base.version + 1, base.entries.size,
+      Commit(base.copy(entries = entries),
+        CompactionResult(base.version + 1, base.entries.size,
           entries.size, rewrittenNames.size,
-          merged.map(_.rows).sum + purged.map(_.rows).sum))
-      } catch { case e: java.util.ConcurrentModificationException =>
-        val st2 = readState(root)
-        val byName = st2.entries.map(x => x.name -> x).toMap
-        val inputsIntact = (rewrittenNames ++
-          base.entries.filterNot(x => rewrittenNames(x.name)).map(_.name))
-          .forall(n => base.entries.find(_.name == n)
-            .exists(old => byName.get(n).exists(now => entryLine(now) == entryLine(old))))
-        val appendOnly = inputsIntact &&
-          st2.schema.map(_.json) == base.schema.map(_.json) &&
-          structural(st2) == structural(base)
-        if (attempt >= 4 || !appendOnly) {
-          (merged ++ purged).foreach(m => Files.deleteIfExists(root.resolve(m.name)))
-          throw e
-        }
-        base = st2
-      }
+          merged.map(_.rows).sum + purged.map(_.rows).sum),
+        (merged ++ purged).map(_.name))
     }
-    result.get
   }
 
   /** Rewrite one DV'd entry's LIVE rows into a fresh parquet file with
@@ -4415,35 +4286,21 @@ object ManifestSink {
     val st = readState(root)
     require(st.version > 0L,
       s"spec evolution requires a versioned manifest table at $tablePath")
-    val schema = st.schema.getOrElse(throw new IllegalStateException(
-      s"manifest table $tablePath has no schema"))
-    requireSpecValid(newSpec, schema)
+    requireSpecValid(newSpec, schemaOf(root, st))
     // rebase on a lost CAS like every metadata-only commit: a spec
     // change commutes with concurrent appends/deletes (their entries
     // carry their own spec ids), so re-reading and re-applying is
-    // always semantics-preserving
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = readState(root)
+    // always semantics-preserving. dataChange=false: no row is added or
+    // removed by a spec change.
+    commit(root, Rebase(5), rewrite = true, first = Some(st)) { (cur, _) =>
+      // already in place (possibly by the writer that won the CAS):
+      // nothing to publish
       if (newSpec == cur.effectiveSpec) return cur.specId
       val newId = cur.specId + 1L
-      val meta = cur.copy(partCols = newSpec.map(_.col), partSpec = newSpec,
+      Commit(cur.copy(partCols = newSpec.map(_.col), partSpec = newSpec,
         specId = newId,
-        pastSpecs = cur.pastSpecs + (cur.specId -> cur.effectiveSpec)).metaLines
-      // dataChange=false: no row is added or removed by a spec change
-      try {
-        publish(root, cur.version,
-          ((schema.json +: RewriteMarker +: meta) ++
-            renderEntrySection(root, cur.entries, cur.groups)).mkString("\n"))
-        return newId
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= 5) throw e
-          Thread.sleep(5L * attempt)
-      }
+        pastSpecs = cur.pastSpecs + (cur.specId -> cur.effectiveSpec)), newId)
     }
-    st.specId // unreachable
   }
 
   /** Rewrite every file still laid out under an ARCHIVED spec through
@@ -4461,8 +4318,7 @@ object ManifestSink {
     val st = readState(root)
     require(st.version > 0L,
       s"spec migration requires a versioned manifest table at $tablePath")
-    val schema = st.schema.getOrElse(throw new IllegalStateException(
-      s"manifest table $tablePath has no schema"))
+    val schema = schemaOf(root, st)
     val (stale, fresh) = st.entries.partition(_.specId != st.specId)
     if (stale.isEmpty)
       return CompactionResult(st.version, st.entries.size, st.entries.size, 0, 0L)
@@ -4495,15 +4351,12 @@ object ManifestSink {
     // rewrite, so migrated rows are NEW rows to lineage (fresh ids)
     val (migrated, nextRid) =
       assignLineage(migrated0, st.nextRowId, st.version + 1L)
-    try publish(root, st.version,
-      ((schema.json +: RewriteMarker +: st.copy(nextRowId = nextRid).metaLines) ++
-        renderEntrySection(root, fresh ++ migrated, st.groups)).mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      migrated.foreach(m => Files.deleteIfExists(root.resolve(m.name)))
-      throw e
+    commit(root, SingleShot, rewrite = true, first = Some(st)) { (st, _) =>
+      Commit(st.copy(nextRowId = nextRid, entries = fresh ++ migrated),
+        CompactionResult(st.version + 1L, st.entries.size,
+          fresh.size + migrated.size, stale.size, moved),
+        migrated.map(_.name))
     }
-    CompactionResult(st.version + 1L, st.entries.size,
-      fresh.size + migrated.size, stale.size, moved)
   }
 
   /** OPTIMIZE ... ZORDER BY: rewrite the ENTIRE table (or each table
@@ -4558,8 +4411,7 @@ object ManifestSink {
         st.entries.forall(_.specId == st.specId),
       "OPTIMIZE ZORDER supports identity-partitioned tables with no " +
         "partition-spec evolution outstanding (run migrateToCurrentSpec first)")
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"manifest table $tablePath has no schema"))
+    val schema = schemaOf(root, st)
     zorderBy.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(s"ZORDER BY column $c is not in the table schema"))
@@ -4648,31 +4500,13 @@ object ManifestSink {
     // the rewritten rows are NEW rows to lineage (fresh ids)
     val (newAssigned, nextRid) =
       assignLineage(newEntries, st.nextRowId, st.version + 1L)
-    try publish(root, st.version,
-      ((schema.json +: RewriteMarker +: st.copy(nextRowId = nextRid).metaLines) ++
-        renderEntrySection(root, newAssigned, st.groups)).mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      newEntries.foreach(n => Files.deleteIfExists(root.resolve(n.name)))
-      throw e
+    commit(root, SingleShot, rewrite = true, first = Some(st)) { (st, _) =>
+      Commit(st.copy(nextRowId = nextRid, entries = newAssigned),
+        CompactionResult(st.version + 1, st.entries.size, newEntries.size,
+          st.entries.size, newEntries.map(_.rows).sum),
+        newEntries.map(_.name))
     }
-    CompactionResult(st.version + 1, st.entries.size, newEntries.size,
-      st.entries.size, newEntries.map(_.rows).sum)
   }
-
-  private[sources] def encode(row: InternalRow, schema: StructType): String =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      if (row.isNullAt(i)) "\u0000"
-      else f.dataType match {
-        case LongType    => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case DoubleType  => java.lang.Double.toString(row.getDouble(i))
-        case BooleanType => row.getBoolean(i).toString
-        case StringType  => java.util.Base64.getEncoder.encodeToString(
-          row.getUTF8String(i).getBytes)
-        case other => throw new IllegalArgumentException(
-          s"ManifestSink does not support field type $other")
-      }
-    }.mkString("\t")
 
   /** RESTORE the table to an earlier version — published as a NEW
     * version whose content (schema, structure headers, file entries,
@@ -4696,24 +4530,20 @@ object ManifestSink {
     require(missing.isEmpty,
       s"cannot roll back $tablePath to v$toVersion: retention GC removed " +
         s"${missing.take(3).mkString(", ")}…")
-    val schema = target.schema.getOrElse(
-      throw new IllegalStateException(s"version $toVersion of $tablePath has no schema"))
     // TAGS are REFS, not table state: a rollback restores the target's
     // DATA and schema but must carry the CURRENT tag set — restoring
     // the target's tag props would silently drop tags created since
     // (vacuum would then expire their pinned snapshots) and resurrect
     // tags deliberately dropped. Streaming markers carry for the same
     // reason (they describe consumers, not the table).
-    val meta = target.copy(markers = cur.markers,
-      props = target.props.filterNot(_._1.startsWith(TagPropPrefix)) ++
-        cur.props.filter(_._1.startsWith(TagPropPrefix))).metaLines
-    // rollback re-references the target version's groups: entries are
+    // Rollback re-references the target version's groups: entries are
     // byte-identical, so this publishes a manifest list with ZERO group
-    // writes no matter how large the table is
-    publish(root, cur.version,
-      ((schema.json +: meta) ++
-        renderEntrySection(root, target.entries, target.groups)).mkString("\n"))
-    cur.version + 1
+    // writes no matter how large the table is.
+    commit(root, SingleShot, first = Some(cur)) { (cur, _) =>
+      Commit(target.copy(markers = cur.markers,
+        props = target.props.filterNot(_._1.startsWith(TagPropPrefix)) ++
+          cur.props.filter(_._1.startsWith(TagPropPrefix))), cur.version + 1)
+    }
   }
 
   /** What a [[deleteWhere]] call did. `candidateFiles` is how many files
@@ -4960,11 +4790,8 @@ object ManifestSink {
       fileProven: FileEntry => Boolean): DeleteResult = {
     val root = Paths.get(tablePath)
     val st = readState(root)
-    require(st.version > 0L,
-      s"delete requires a versioned manifest table at $tablePath " +
-        "(legacy manifest.txt tables upgrade on their next append)")
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"manifest table $tablePath has no schema"))
+    require(st.version > 0L, s"delete requires a versioned manifest table at $tablePath")
+    val schema = schemaOf(root, st)
     validate(schema)
     val (candidates, untouched) = st.entries.partition(filePrune)
     var deletedRows = 0L
@@ -5011,23 +4838,14 @@ object ManifestSink {
     if (deletedRows == 0L)
       return DeleteResult(st.version, candidates.size, 0, 0L)
     val entries = untouched ++ replacements.flatten
-    try publish(root, st.version,
-      ((schema.json +: st.metaLines) ++
-        renderEntrySection(root, entries, st.groups)).mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      newDvFiles.foreach(n => Files.deleteIfExists(root.resolve(n)))
-      throw e
+    commit(root, SingleShot, gc, first = Some(st)) { (st, _) =>
+      // "rewritten" files here are the entries that gained/extended a DV
+      Commit(st.copy(entries = entries),
+        DeleteResult(st.version + 1, candidates.size,
+          candidates.zip(replacements).count { case (e, r) => !r.contains(e) },
+          deletedRows, provenFiles),
+        newDvFiles.toSeq)
     }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
-    }
-    // "rewritten" files here are the entries that gained/extended a DV
-    DeleteResult(st.version + 1, candidates.size,
-      candidates.zip(replacements).count { case (e, r) => !r.contains(e) }, deletedRows,
-      provenFiles)
   }
 
   private def deleteCore(tablePath: String, gc: GcPolicy,
@@ -5037,11 +4855,8 @@ object ManifestSink {
       fileProven: FileEntry => Boolean = _ => false): DeleteResult = {
     val root = Paths.get(tablePath)
     val st = readState(root)
-    require(st.version > 0L,
-      s"delete requires a versioned manifest table at $tablePath " +
-        "(legacy manifest.txt tables upgrade on their next append)")
-    val schema = st.schema.getOrElse(
-      throw new IllegalStateException(s"manifest table $tablePath has no schema"))
+    require(st.version > 0L, s"delete requires a versioned manifest table at $tablePath")
+    val schema = schemaOf(root, st)
     validate(schema)
     val (candidates, untouched) = st.entries.partition(filePrune)
     var deletedRows = 0L
@@ -5100,38 +4915,16 @@ object ManifestSink {
     if (deletedRows == 0L)
       return DeleteResult(st.version, candidates.size, 0, 0L)
     val entries = untouched ++ replacements.flatten
-    try publish(root, st.version,
-      ((schema.json +: st.metaLines) ++
-        renderEntrySection(root, entries, st.groups)).mkString("\n"))
-    catch { case e: java.util.ConcurrentModificationException =>
-      replacements.flatten.filterNot(candidates.contains)
-        .foreach(r => Files.deleteIfExists(root.resolve(r.name)))
-      throw e
+    commit(root, SingleShot, gc, first = Some(st)) { (st, _) =>
+      Commit(st.copy(entries = entries),
+        DeleteResult(st.version + 1, candidates.size, rewritten, deletedRows, provenFiles),
+        replacements.flatten.filterNot(candidates.contains).map(_.name))
     }
-    gc.retainVersions.foreach { k =>
-      try expireVersions(root, k, gc.orphanGraceMs)
-      catch { case e: Exception =>
-        System.err.println(s"manifest GC for $root failed (table unaffected): ${e.getMessage}")
-      }
-    }
-    DeleteResult(st.version + 1, candidates.size, rewritten, deletedRows, provenFiles)
-  }
-
-  /** Iterate every row of one committed data file (either format) with
-    * the FULL table schema — physical-name mapped and null-filled for
-    * files predating a schema change (same reconciliation as the scan).
-    * The callback receives the row's 0-based PHYSICAL position in the
-    * file (the coordinate a deletion vector indexes). */
-  private def foreachRowPos(file: Path, schema: StructType,
-      colMap: Map[String, String], evolved: Boolean)(
-      f: (InternalRow, Long) => Unit): Unit = {
-    var pos = -1L
-    foreachRow(file, schema, colMap, evolved) { row => pos += 1; f(row, pos) }
   }
 
   /** Parquet primitive a TABLE type stores as (manifest tables carry
     * exactly these) — shared by the scan factory's widening probe and
-    * [[foreachRow]]'s. */
+    * [[foreachRowPos]]'s. */
   private[sources] def expectedPrimitiveOf(dt: DataType): String = dt match {
     case LongType => "INT64"
     case IntegerType => "INT32"
@@ -5142,55 +4935,59 @@ object ManifestSink {
     case _ => "GROUP"
   }
 
-  private def foreachRow(file: Path, schema: StructType,
-      colMap: Map[String, String] = Map.empty, evolved: Boolean = false)(
-      f: InternalRow => Unit): Unit =
-    if (file.toString.endsWith(".tsv")) {
-      Files.readAllLines(file).forEach(l => f(decode(l, schema)))
-    } else {
-      val phys = schema.fieldNames.map(c => colMap.getOrElse(c, c))
-      // evolved tables probe the footer for BOTH presence and physical
-      // primitive: a file written before ALTER COLUMN TYPE stores the
-      // NARROW primitive, and the table-typed accessors the callers use
-      // (evalFilter, the rewrite writer) would read garbage off
-      // file-typed vectors — such files must decode through the
-      // widening reader, exactly like the scan path
-      val types: Map[String, String] =
-        if (evolved || colMap.nonEmpty)
-          ManifestParquet.footerPrimitiveTypes(file.toString)
-        else phys.map(p => p -> "").toMap // "" = skip the widening check
-      def widened: Boolean = schema.fields.exists(fd =>
-        types.get(colMap.getOrElse(fd.name, fd.name)).exists(t =>
-          t.nonEmpty && t != "GROUP" && t != expectedPrimitiveOf(fd.dataType)))
-      def physSchemaOf(present: Seq[String]): StructType = {
-        val byPhys = schema.fields.map(fd =>
-          (colMap.getOrElse(fd.name, fd.name), fd)).toMap
-        StructType(present.map(p => byPhys(p).copy(name = p)))
-      }
-      if (phys.forall(types.contains)) {
-        val r =
-          if (widened) ManifestParquet.openReadWidened(file.toString,
-            physSchemaOf(phys.toSeq), returnBatches = false)
-          else ManifestParquet.openRead(file.toString, phys.toSeq,
-            returnBatches = false)
-        try while (r.nextKeyValue()) f(r.getCurrentValue.asInstanceOf[InternalRow])
-        finally r.close()
-      } else {
-        val present = phys.filter(types.contains)
-        val posOf = present.zipWithIndex.toMap
-        val mapping = phys.map(p => posOf.getOrElse(p, -1))
-        val view = new MappedInternalRow(mapping, schema.fields.map(_.dataType),
-          existenceDefaults(schema))
-        val r =
-          if (widened) ManifestParquet.openReadWidened(file.toString,
-            physSchemaOf(present.toSeq), returnBatches = false)
-          else ManifestParquet.openRead(file.toString, present.toSeq,
-            returnBatches = false)
-        try while (r.nextKeyValue()) {
-          view.row = r.getCurrentValue.asInstanceOf[InternalRow]; f(view)
-        } finally r.close()
-      }
+  /** Iterate every row of one committed data file with the FULL table
+    * schema — physical-name mapped and null-filled for files predating a
+    * schema change (same reconciliation as the scan). The callback
+    * receives the row's 0-based PHYSICAL position in the file (the
+    * coordinate a deletion vector indexes). */
+  private def foreachRowPos(file: Path, schema: StructType,
+      colMap: Map[String, String], evolved: Boolean)(
+      f: (InternalRow, Long) => Unit): Unit = {
+    var pos = -1L
+    val phys = schema.fieldNames.map(c => colMap.getOrElse(c, c))
+    // evolved tables probe the footer for BOTH presence and physical
+    // primitive: a file written before ALTER COLUMN TYPE stores the
+    // NARROW primitive, and the table-typed accessors the callers use
+    // (evalFilter, the rewrite writer) would read garbage off
+    // file-typed vectors — such files must decode through the
+    // widening reader, exactly like the scan path
+    val types: Map[String, String] =
+      if (evolved || colMap.nonEmpty)
+        ManifestParquet.footerPrimitiveTypes(file.toString)
+      else phys.map(p => p -> "").toMap // "" = skip the widening check
+    def widened: Boolean = schema.fields.exists(fd =>
+      types.get(colMap.getOrElse(fd.name, fd.name)).exists(t =>
+        t.nonEmpty && t != "GROUP" && t != expectedPrimitiveOf(fd.dataType)))
+    def physSchemaOf(present: Seq[String]): StructType = {
+      val byPhys = schema.fields.map(fd =>
+        (colMap.getOrElse(fd.name, fd.name), fd)).toMap
+      StructType(present.map(p => byPhys(p).copy(name = p)))
     }
+    if (phys.forall(types.contains)) {
+      val r =
+        if (widened) ManifestParquet.openReadWidened(file.toString,
+          physSchemaOf(phys.toSeq), returnBatches = false)
+        else ManifestParquet.openRead(file.toString, phys.toSeq,
+          returnBatches = false)
+      try while (r.nextKeyValue()) {
+        pos += 1; f(r.getCurrentValue.asInstanceOf[InternalRow], pos)
+      } finally r.close()
+    } else {
+      val present = phys.filter(types.contains)
+      val posOf = present.zipWithIndex.toMap
+      val mapping = phys.map(p => posOf.getOrElse(p, -1))
+      val view = new MappedInternalRow(mapping, schema.fields.map(_.dataType),
+        existenceDefaults(schema))
+      val r =
+        if (widened) ManifestParquet.openReadWidened(file.toString,
+          physSchemaOf(present.toSeq), returnBatches = false)
+        else ManifestParquet.openRead(file.toString, present.toSeq,
+          returnBatches = false)
+      try while (r.nextKeyValue()) {
+        view.row = r.getCurrentValue.asInstanceOf[InternalRow]; pos += 1; f(view, pos)
+      } finally r.close()
+    }
+  }
 
   /** The delete-filter dialect: equality/range/in/null tests on table
     * columns plus AND/OR/NOT. Everything else is rejected loudly BEFORE
@@ -5528,38 +5325,6 @@ object ManifestSink {
       case _ => true
     }
   }
-
-  /** Decode the PROJECTED fields of one legacy-TSV line: `indices(j)` is
-    * the file-schema position of output field j, so a pruned read decodes
-    * only what the query needs. Null sentinels: NUL (current), plus ""
-    * for NON-string columns — files written before the NUL sentinel
-    * encoded null as the empty string, which is unambiguous for numeric/
-    * boolean fields (they never serialize empty) and would otherwise
-    * throw NumberFormatException on a legacy null. A legacy STRING null
-    * still decodes as "" — base64 cannot distinguish them; acceptable for
-    * the demo-era files this path exists to keep readable. */
-  private[sources] def decode(line: String, fields: Array[StructField],
-      indices: Array[Int]): InternalRow = {
-    val parts = line.split("\t", -1)
-    InternalRow.fromSeq(indices.indices.map { j =>
-      val f = fields(j)
-      val v = parts(indices(j))
-      if (v == "\u0000") null
-      else f.dataType match {
-        case StringType  => UTF8String.fromBytes(
-          java.util.Base64.getDecoder.decode(v))
-        case _ if v.isEmpty => null
-        case LongType    => v.toLong
-        case IntegerType => v.toInt
-        case DoubleType  => v.toDouble
-        case BooleanType => v.toBoolean
-        case other => throw new IllegalArgumentException(s"unsupported $other")
-      }
-    })
-  }
-
-  private[sources] def decode(line: String, schema: StructType): InternalRow =
-    decode(line, schema.fields, schema.fields.indices.toArray)
 }
 
 class ManifestTable(root: Path, schema0: StructType, pinned: Option[Long] = None,
@@ -6007,8 +5772,7 @@ class ManifestRowLevelOperation(root: Path, cmd: RowLevelOperation.Command,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val v = ManifestSink.currentVersion(root)
     require(v > 0L,
-      "row-level operations require a versioned manifest table " +
-        "(legacy manifest.txt tables upgrade on their next append)")
+      "row-level operations require a versioned manifest table")
     // pinned to v: the scan and the commit's carried-over entries must
     // describe the SAME snapshot even if the table moves mid-operation
     // (the CAS at publish then loses loudly instead of mixing states)
@@ -6637,11 +6401,10 @@ class ManifestScanBuilder(root: Path, pinned: Option[Long] = None,
   private lazy val evolved: Boolean = tableState.schemaEpoch > 0L
 
   /** Column pruning: the scan decodes ONLY the requested columns — at
-    * the parquet reader for data files (requested-schema projection, so
-    * a 2-column read of a 20-column table touches 2 column chunks) and
-    * at the TSV decoder for legacy files. Names are kept, positions are
-    * re-resolved against the table schema, so the output order is the
-    * table's regardless of the order Spark requested. */
+    * the parquet reader (requested-schema projection, so a 2-column read
+    * of a 20-column table touches 2 column chunks). Names are kept,
+    * positions are re-resolved against the table schema, so the output
+    * order is the table's regardless of the order Spark requested. */
   override def pruneColumns(requiredSchema: StructType): Unit =
     prunedNames = Some(requiredSchema.fieldNames.toSet)
 
@@ -7436,12 +7199,10 @@ class ManifestScan(root: Path, fileSchema: StructType, schema: StructType,
     bins.result()
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    // whole-batch columnar handoff only when EVERY file in the scan is
-    // parquet (Spark requires a uniform row/columnar answer across the
-    // batch) AND none carries a deletion vector — DV positions apply
-    // row-by-row, so a DV'd scan hands rows off until OPTIMIZE purges
-    // the vectors; a legacy-mixed table still decodes parquet files
-    // through the vectorized reader, handing rows off one at a time
+    // whole-batch columnar handoff only when NO file in the scan
+    // carries a deletion vector (Spark requires a uniform row/columnar
+    // answer across the batch) — DV positions apply row-by-row, so a
+    // DV'd scan hands rows off until OPTIMIZE purges the vectors
     new ManifestReaderFactory(fileSchema, schema,
       // `_file` rows pass through the row-based appender — rewrite
       // scans feed row-consuming writers anyway, so columnar buys
@@ -7452,7 +7213,7 @@ class ManifestScan(root: Path, fileSchema: StructType, schema: StructType,
         // row-based handoff, like `_file`
         !schema.fieldNames.contains(ManifestSink.RowIdColumn) &&
         !schema.fieldNames.contains(ManifestSink.LastUpdatedColumn) &&
-        resolved.forall(e => e.name.endsWith(".parquet") && e.dvName.isEmpty &&
+        resolved.forall(e => e.dvName.isEmpty &&
           // equality-delete positions apply row-by-row, like DVs
           !eqDels.exists(_.seq > e.seq)),
       colMap = colMap, evolved = evolved,
@@ -7644,13 +7405,12 @@ case class ManifestFilePartition(file: String, rows: Long = 0L,
 case class ManifestBinPartition(members: Seq[ManifestFilePartition])
     extends InputPartition
 
-/** Per-file readers. Parquet files decode through Spark's vectorized
-  * reader — as whole ColumnarBatches when the scan is uniformly parquet
-  * (`columnar`), else as row views over the same batches; legacy `.tsv`
-  * files decode line-by-line. Only the PRUNED columns are materialized
-  * in either format. A zero-column projection (e.g. `SELECT lit(1)`)
-  * opens no file at all: the manifest's per-file row count drives an
-  * empty-row emitter.
+/** Per-file readers. Data files decode through Spark's vectorized
+  * parquet reader — as whole ColumnarBatches when the scan allows it
+  * (`columnar`), else as row views over the same batches. Only the
+  * PRUNED columns are materialized. A zero-column projection (e.g.
+  * `SELECT lit(1)`) opens no file at all: the manifest's per-file row
+  * count drives an empty-row emitter.
   *
   * Schema evolution: columns are requested from parquet by their
   * PHYSICAL names (`colMap` — identity unless the table was ALTERed),
@@ -7690,7 +7450,7 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     * skipped groups would shift. */
   private def rgFilterFor(p: ManifestFilePartition)
       : Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
-    if (p.dvFile.isEmpty && p.emit == null && p.file.endsWith(".parquet") &&
+    if (p.dvFile.isEmpty && p.emit == null &&
         governingFor(p).isEmpty && rgFilterFileOk(p.file) &&
         // lineage columns derive from physical positions, which skipped
         // row groups would shift
@@ -7726,7 +7486,7 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     * deletion vector uses. NULL keys never match (SQL equality). */
   private def eqDeletePositions(p: ManifestFilePartition): Array[Long] = {
     val gov = governingFor(p)
-    if (gov.isEmpty || !p.file.endsWith(".parquet")) return Array.empty
+    if (gov.isEmpty) return Array.empty
     // schema evolution of KEY columns: a governed file may predate an
     // ADD COLUMN (that key component is NULL there — equality never
     // matches, the record contributes nothing to this file) or an ALTER
@@ -7915,18 +7675,6 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
       }
       override def next(): Boolean = remaining > 0 && { remaining -= 1; true }
       override def get(): InternalRow = InternalRow.empty
-      override def close(): Unit = ()
-    }
-    else if (p.file.endsWith(".tsv")) new PartitionReader[InternalRow] {
-      private val fields = dataSchema.fields
-      private val indices = fields.map(f => fileSchema.fieldIndex(f.name))
-      private val lines = Files.readAllLines(Paths.get(p.file)).iterator()
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (lines.hasNext) {
-          current = ManifestSink.decode(lines.next(), fields, indices); true
-        } else false
-      override def get(): InternalRow = current
       override def close(): Unit = ()
     }
     else filePlan(p.file) match {

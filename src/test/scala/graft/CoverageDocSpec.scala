@@ -76,6 +76,25 @@ class CoverageDocSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"ad-hoc helper threads: ${hits.mkString(", ")}")
   }
 
+  test("manifest tables commit through one driver and read one format") {
+    // every manifest version is published by ManifestSink.commit: a
+    // hand-rolled publish site drifts from its retry, cleanup and GC
+    // policy; and the legacy TSV / manifest.txt formats stay deleted
+    val src = java.nio.file.Paths.get("src/main/scala")
+    val text = java.nio.file.Files.walk(src).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).sorted
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .mkString("\n")
+    def count(s: String): Int = s.r.findAllMatchIn(text).size
+    assert(count("""(?<!def )publish\(root""") == 1,
+      "publish(root must have exactly one call site, the commit driver's")
+    Seq("has no schema", "manifest GC for").foreach(s =>
+      assert(count(java.util.regex.Pattern.quote(s)) == 1, s"'$s' must occur once"))
+    Seq(".tsv", "manifest.txt", "legacyState", "schemaFile").foreach(s =>
+      assert(count(java.util.regex.Pattern.quote(s)) == 0, s"'$s' must not occur"))
+  }
+
   test("no COVERAGE.md query reference is stale") {
     // bare `qNN`/`qNNN` shorthands (q30–q33 style ranges) are prose;
     // only full `qN*_name` identifiers are checked against the registry

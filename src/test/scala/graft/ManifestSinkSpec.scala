@@ -71,7 +71,7 @@ class ManifestSinkSpec extends AnyFunSuite {
     spark.range(42).select(col("id"), lit("v").as("s"), lit(1.0).as("x"))
       .repartition(4)
       .write.format(fmt).option("path", dir.toString).mode("overwrite").save()
-    // destroy the data files; only manifest.txt + schema.json survive
+    // destroy the data files; only the versioned manifests survive
     Files.list(dir).filter(_.getFileName.toString.startsWith("data-"))
       .forEach(p => Files.delete(p))
     val n = spark.read.format(fmt).option("path", dir.toString).load().count()

@@ -171,23 +171,6 @@ class EqualityDeleteSpec extends AnyFunSuite {
       In("c", Array[Any]("x", null)), Map("c" -> "x"), Map.empty).contains(true))
   }
 
-  test("equality deletes refuse legacy .tsv tables loudly") {
-    // the tsv reader has no position pass — a record would be silently
-    // ignored at scan; refusing the COMMIT keeps semantics honest
-    val dir = Files.createTempDirectory("eqdel-tsv")
-    dir.toFile.deleteOnExit()
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", org.apache.spark.sql.types.LongType)
-    Files.writeString(dir.resolve("d1.tsv"), "1\n2\n3\n")
-    ManifestSink.publishCommit(dir, schema, truncateFirst = true,
-      Seq(ManifestSink.FileEntry("d1.tsv", 3L, Map.empty, Map.empty)),
-      markerUpdate = None, GcPolicy(None, 3600000L))
-    val e = intercept[Exception] {
-      ManifestSink.deleteWhereEq(dir.toString, "id", Seq("1"))
-    }
-    assert(e.getMessage.contains("tsv"), e.getMessage)
-  }
-
   test("COMPOSITE keys: tuples delete exactly, components alone never match") {
     // the real CDC shape — tombstones on a multi-column key. The tuple
     // (1,'a') must die; rows sharing only ONE component (1,'b') and

@@ -120,8 +120,8 @@ class ManifestCasSpec extends AnyFunSuite {
     val root = tmp()
     Seq((1L, Some("a"), 0.5)).toDF("id", "s", "x")
       .write.format(fmt).option("path", root.toString).mode("overwrite").save()
-    // kill the legacy side-car: versioned readers must not miss it
-    Files.delete(root.resolve("schema.json"))
+    // no schema side-car is written: versioned readers never need one
+    assert(!Files.exists(root.resolve("schema.json")))
     val read = spark.read.format(fmt).option("path", root.toString).load()
     assert(read.schema.fieldNames.toSeq == Seq("id", "s", "x"))
     assert(read.count() == 1)
@@ -485,40 +485,6 @@ class ManifestCasSpec extends AnyFunSuite {
     // mixed pushable + unpushable aggregates must not half-push
     val r = t.agg(min("id"), min("x")).collect().head
     assert((r.getLong(0), r.getDouble(1)) == ((1L, 2.5)))
-  }
-
-  test("legacy single-file manifest.txt tables read as version 0 and upgrade on append") {
-    val root = tmp()
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("s", StringType), StructField("x", DoubleType)))
-    Files.writeString(root.resolve("schema.json"), schema.json)
-    Files.writeString(root.resolve("data-legacy.tsv"), "1\tYQ==\t0.5\n")
-    Files.writeString(root.resolve("manifest.txt"), "data-legacy.tsv\t1\tid:1\tid:1")
-    val legacy = spark.read.format(fmt).option("path", root.toString).load()
-    assert(legacy.count() == 1)
-    // an append publishes manifest-v000001.txt, carrying the legacy file along
-    Seq((2L, Some("b"), 1.0)).toDF("id", "s", "x")
-      .write.format(fmt).option("path", root.toString).mode("append").save()
-    assert(ManifestSink.currentVersion(root) == 1L)
-    assert(spark.read.format(fmt).option("path", root.toString).load().count() == 2)
-    assert(ManifestSink.committedEntries(root).map(_.name).contains("data-legacy.tsv"))
-  }
-
-  test("pre-NUL-sentinel TSV files decode '' as null for non-string columns") {
-    val root = tmp()
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("s", StringType), StructField("x", DoubleType)))
-    Files.writeString(root.resolve("schema.json"), schema.json)
-    // demo-era encoding: null was the EMPTY string; a numeric null would
-    // throw NumberFormatException without the legacy decode rule, and a
-    // string null is indistinguishable from "" (decodes as "")
-    Files.writeString(root.resolve("data-legacy.tsv"), "1\t\t\n\tYQ==\t2.5\n")
-    Files.writeString(root.resolve("manifest.txt"), "data-legacy.tsv\t2\t\t")
-    val rows = spark.read.format(fmt).option("path", root.toString).load()
-      .orderBy(asc_nulls_last("id")).collect()
-    assert(rows.length == 2)
-    assert(rows(0).getLong(0) == 1L && rows(0).getString(1) == "" && rows(0).isNullAt(2))
-    assert(rows(1).isNullAt(0) && rows(1).getString(1) == "a" && rows(1).getDouble(2) == 2.5)
   }
 
   test("append commits rebase and retry on a lost CAS: N concurrent appenders ALL land") {
