@@ -1635,7 +1635,7 @@ object ManifestSink {
   // EXACTLY. `bucket(N)` is admitted PRUNE-ONLY: a hash bucket decides
   // equality/IN to FALSE when the literal hashes elsewhere but never
   // proves TRUE and never answers a range, so every consumer of a
-  // decided TRUE (metadata-only DELETE via [[partProven]], static
+  // decided TRUE (metadata-only DELETE via [[partProvenV2]], static
   // overwrite victim selection) automatically falls back to its
   // always-correct read/rewrite path — the Option contract, not a new
   // mode. The source column
@@ -2069,7 +2069,7 @@ object ManifestSink {
     // Some(false) exactly — no row passes, the file may be pruned or
     // kept out of an overwrite's victim set. Under an odd number of
     // NOTs the same collapse would flip into a WRONG "every row TRUE"
-    // proof (partProven metadata-deletes on Some(true); NOT (c IN ...)
+    // proof (partProvenV2 metadata-deletes on Some(true); NOT (c IN ...)
     // over null rows is UNKNOWN, not TRUE), so there the answer stays
     // None. IsNull / IsNotNull / null-safe equality are never UNKNOWN
     // and decide regardless of polarity.
@@ -3947,12 +3947,7 @@ object ManifestSink {
     if (st.eqDels.isEmpty) return 0
     val schema = schemaOf(root, st)
     // typed kill sets once, per record
-    val applied = st.eqDels.map { r =>
-      EqDelApplied(r.cols,
-        r.cols.map(c => schema.fields.find(_.name == c)
-          .map(_.dataType).getOrElse(StringType)),
-        readEqDelKeys(root, r.name), r.seq)
-    }
+    val applied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
     def governed(e: FileEntry): Seq[EqDelApplied] = applied.filter(_.seq > e.seq)
     def mayHold(e: FileEntry, a: EqDelApplied): Boolean =
       // a key tuple may live in the file iff EVERY component may match
@@ -4556,40 +4551,30 @@ object ManifestSink {
       rewrittenFiles: Int, deletedRows: Long, provenFiles: Int = 0)
 
   /** Does the partition tuple alone prove EVERY row of `e` matches the
-    * conjunction? Partition columns are constant per file, so a filter
-    * conjunction decidable TRUE from the tuple holds for every row —
-    * the file can be dropped from the manifest without being opened.
-    * At 100 TB this is THE delete that matters operationally: `DELETE
+    * conjunction? Partition columns are constant per file, so a
+    * predicate decidable TRUE from the tuple holds for every row — the
+    * file can be dropped from the manifest without being opened. At
+    * 100 TB this is THE delete that matters operationally: `DELETE
     * WHERE day = '2024-01-01'` retires a partition as a metadata commit
     * instead of a partition-sized rewrite (Delta's metadata-only
-    * delete). Undecidable (non-partition references, unknown shapes)
-    * conservatively answers false and falls through to the row path. */
-  private def partProven(filters: Seq[org.apache.spark.sql.sources.Filter],
-      tf: Map[String, PartTransform])(e: FileEntry): Boolean =
-    filters.forall(f => evalPartFilter(f, e.parts, tf).contains(true))
-
-  /** V2 twin of [[partProven]]: legal only when every referenced column
-    * is a partition column; evaluated over a synthetic row carrying the
-    * file's (typed) partition values — a NULL partition value is a real
-    * SQL NULL for every row of the file, so three-valued evaluation is
-    * exact, and only a decided TRUE proves the drop. */
+    * delete). Either of two exact rules proves a predicate: its V1
+    * translation ([[v2ToV1]]) decided TRUE by the transform-aware
+    * [[evalPartFilter]], which also decides `OR`s whose other side
+    * names a data column; or, when every referenced column is an
+    * identity partition column, [[evalPredicate]] over a synthetic row
+    * of the file's typed partition values, which covers shapes with no
+    * V1 form (`p % 2 = 0`). A NULL partition value is a real SQL NULL
+    * for every row of the file, so three-valued evaluation is exact.
+    * A transformed partition VALUE is not the column's value, so the
+    * second rule never applies to one. Anything undecided answers false
+    * and falls through to the row path. */
   private def partProvenV2(
       preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      schema: StructType, partCols: Set[String],
-      tf: Map[String, PartTransform] = Map.empty)(e: FileEntry): Boolean =
+      schema: StructType, tf: Map[String, PartTransform])(e: FileEntry): Boolean =
     preds.forall { p =>
-      p.references().forall(r =>
-        r.fieldNames.length == 1 && partCols.contains(r.fieldNames.head)) && {
-        val refsTransformed = p.references().exists(r =>
-          tf.get(r.fieldNames.head).exists(t => !t.isInstanceOf[PIdentity]))
-        if (refsTransformed)
-          // a transformed partition VALUE is not the column's value, so
-          // the synthetic-row evaluation below would be WRONG; go through
-          // the transform-aware interval logic instead — common range /
-          // equality shapes translate to V1, anything else proves nothing
-          // (the delete falls back to a rewrite, which is always correct)
-          v2ToV1(p).exists(f => evalPartFilter(f, e.parts, tf).contains(true))
-        else {
+      v2ToV1(p).exists(f => evalPartFilter(f, e.parts, tf).contains(true)) ||
+        p.references().forall(r => r.fieldNames.length == 1 &&
+          tf.get(r.fieldNames.head).exists(_.isInstanceOf[PIdentity])) && {
           val vals = schema.fields.map { f =>
             e.parts.get(f.name) match {
               case None | Some(NullPartValue) => null
@@ -4600,13 +4585,18 @@ object ManifestSink {
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals),
             schema).contains(true)
         }
-      }
     }
 
-  /** Minimal V2-Predicate → V1-Filter translation for the shapes the
-    * transform-aware partition proof understands: single-column
-    * comparisons with a literal, IS (NOT) NULL, AND/OR/NOT. Anything
-    * richer returns None (no proof — never wrong, just slower). */
+  /** The one V2-Predicate → V1-Filter translation, feeding the V1
+    * pruning and proof machinery ([[entryMayMatch]], [[evalPartFilter]]):
+    * single-column comparisons with a literal on either side, IN over
+    * literals, IS (NOT) NULL, the string predicates, the constants and
+    * AND/OR/NOT. It inverts Spark's `Filter.toV2` on every shape, so a
+    * V1 caller converted at the edge loses no prune and no proof.
+    * Anything richer (arithmetic, casts) returns None — no prune, no
+    * proof, never wrong, just slower. Spark's `PredicateUtils.toV1`
+    * cannot stand in: it drops comparisons with the literal on the
+    * left. */
   private[sources] def v2ToV1(
       p: org.apache.spark.sql.connector.expressions.Expression)
       : Option[org.apache.spark.sql.sources.Filter] = {
@@ -4650,7 +4640,7 @@ object ManifestSink {
           case _ => None
         }
         case "IN" => q.children() match {
-          case arr if arr.length >= 2 => arr.head match {
+          case arr if arr.nonEmpty => arr.head match {
             case r: NamedReference if r.fieldNames.length == 1 &&
                 arr.tail.forall(_.isInstanceOf[V2Lit[_]]) =>
               Some(In(r.fieldNames()(0),
@@ -4659,104 +4649,19 @@ object ManifestSink {
           }
           case _ => None
         }
+        case "STARTS_WITH" => colLit(q.children()).collect {
+          case (c, v: String, false) => StringStartsWith(c, v) }
+        case "ENDS_WITH" => colLit(q.children()).collect {
+          case (c, v: String, false) => StringEndsWith(c, v) }
+        case "CONTAINS" => colLit(q.children()).collect {
+          case (c, v: String, false) => StringContains(c, v) }
+        case "ALWAYS_TRUE" => Some(AlwaysTrue())
+        case "ALWAYS_FALSE" => Some(AlwaysFalse())
         case _ => None
       }
       case _ => None
     }
   }
-
-  /** Row-level DELETE, copy-on-write: every file the manifest stats
-    * cannot rule out is re-read, its surviving rows are written to a NEW
-    * parquet file, and one manifest version publishes the swap — the
-    * Delta/Iceberg CoW shape. Untouched files are carried by reference;
-    * history (time travel) keeps the pre-delete files alive until
-    * retention GC expires their versions; a change feed across a delete
-    * version fails the pure-append check LOUDLY (a delete is not a
-    * delta). The CAS is single-attempt: a delete decided what to remove
-    * from a state that must still hold at publish — concurrent commits
-    * lose it loudly, and the caller re-runs against the new state.
-    *
-    * Candidates whose PARTITION TUPLE proves a full match drop
-    * metadata-only ([[partProven]]); per-file min/max stats never can —
-    * null counts aren't tracked, and a null never matches a range
-    * predicate, so a stats-proven range could still shelter a surviving
-    * null row. Rewrites are per-file independent, so a distributed
-    * engine would fan them out one task each; driver-side sequential is
-    * the local[*] degenerate case (same argument as [[compact]]).
-    *
-    * Filters compose as AND. Unsupported filter shapes are rejected by
-    * [[supportedDeleteFilter]] before any I/O. */
-  def deleteWhere(tablePath: String, filters: Seq[org.apache.spark.sql.sources.Filter],
-      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
-    val hdr = readHeader(Paths.get(tablePath))
-    deleteCore(tablePath, gc,
-      schema => filters.foreach(f => require(supportedDeleteFilter(f, schema),
-        s"unsupported delete filter: $f")),
-      (row, schema) => filters.forall(f => evalFilter(f, row, schema).contains(true)),
-      e => filters.forall(f => entryMayMatch(hdr, e, f)),
-      e => hdr.transformsForOpt(e).exists(tf => partProven(filters, tf)(e)))
-  }
-
-  /** SQL `DELETE FROM` arrives here as V2 [[V2Predicate]]s — evaluated
-    * DIRECTLY, never through Spark's `SupportsDelete` V2→V1 default
-    * bridge: that bridge drops a predicate whose shape has no V1
-    * `Filter` form (e.g. `c % 10 = 3`), and a dropped disjunct means a
-    * silent UNDER-delete — the worst possible failure for a DELETE.
-    * [[supportedDeletePredicate]] gates the dialect up front (in
-    * `canDeleteWhere`), so anything we cannot evaluate fails the
-    * statement loudly at analysis instead. */
-  def deleteWhereV2(tablePath: String,
-      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
-    val hdr = readHeader(Paths.get(tablePath))
-    val schema0 = readSchema(Paths.get(tablePath))
-    deleteCore(tablePath, gc,
-      schema => preds.foreach(p => require(supportedDeletePredicate(p, schema),
-        s"unsupported delete predicate: $p")),
-      (row, schema) => preds.forall(p => evalPredicate(p, row, schema).contains(true)),
-      e => preds.forall(p => mayMatchV2(e, p)),
-      e => hdr.transformsForOpt(e).exists(tf =>
-        partProvenV2(preds, schema0, tf.keySet, tf)(e)))
-  }
-
-  /** Row-level DELETE, merge-on-read: instead of rewriting every
-    * candidate file, record the matching ROW POSITIONS in a sidecar
-    * deletion-vector file and re-point the manifest entry — the
-    * Delta/Iceberg DV shape. A point delete against a 1 GB file costs
-    * one file READ and a kilobyte write, not a 1 GB rewrite; readers
-    * apply the vector at scan (positions are merged into every read
-    * path), and OPTIMIZE later purges vectors by rewriting live rows.
-    * The trade: scans of DV'd files drop out of the whole-batch
-    * columnar handoff and min/max aggregate pushdown (a deleted row may
-    * have held the extremum — count(*) stays metadata-exact via
-    * per-entry live counts). A file whose every live row matches drops
-    * from the manifest entirely — metadata-only, no DV needed.
-    * Same single-attempt CAS and same filter dialect as the CoW path. */
-  def deleteWhereMoR(tablePath: String, filters: Seq[org.apache.spark.sql.sources.Filter],
-      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
-    val hdr = readHeader(Paths.get(tablePath))
-    deleteCoreMoR(tablePath, gc,
-      schema => filters.foreach(f => require(supportedDeleteFilter(f, schema),
-        s"unsupported delete filter: $f")),
-      (row, schema) => filters.forall(f => evalFilter(f, row, schema).contains(true)),
-      e => filters.forall(f => entryMayMatch(hdr, e, f)),
-      e => hdr.transformsForOpt(e).exists(tf => partProven(filters, tf)(e)))
-  }
-
-  def deleteWhereMoRV2(tablePath: String,
-      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
-    val hdr = readHeader(Paths.get(tablePath))
-    val schema0 = readSchema(Paths.get(tablePath))
-    deleteCoreMoR(tablePath, gc,
-      schema => preds.foreach(p => require(supportedDeletePredicate(p, schema),
-        s"unsupported delete predicate: $p")),
-      (row, schema) => preds.forall(p => evalPredicate(p, row, schema).contains(true)),
-      e => preds.forall(p => mayMatchV2(e, p)),
-      e => hdr.transformsForOpt(e).exists(tf =>
-        partProvenV2(preds, schema0, tf.keySet, tf)(e)))
-  }
-
 
   /** Row-level kill test for ONE record against `schema`-shaped rows:
     * a row dies iff its key TUPLE (typed; any NULL component never
@@ -4783,43 +4688,73 @@ object ManifestSink {
     }
   }
 
-  private def deleteCoreMoR(tablePath: String, gc: GcPolicy,
-      validate: StructType => Unit,
-      rowMatches: (InternalRow, StructType) => Boolean,
-      filePrune: FileEntry => Boolean,
-      fileProven: FileEntry => Boolean): DeleteResult = {
+  /** Does an outstanding equality-delete record hide `row` of `e`? Only
+    * records sequenced after the entry govern it. */
+  private def eqHiddenTest(schema: StructType, applied: Seq[EqDelApplied],
+      e: FileEntry): InternalRow => Boolean = {
+    val tests = applied.filter(_.seq > e.seq).map(a => rowKillTest(schema, a))
+    row => tests.exists(t => t(row))
+  }
+
+  /** The delete predicates bound to one table state: an unsupported
+    * predicate is rejected before any I/O; then the file prune
+    * ([[mayMatchV2]]), the metadata-only proof ([[partProvenV2]]) and
+    * the row test, where a row is deleted iff the conjunction is TRUE. */
+  private final class DeleteMatch(st: TableState, schema: StructType,
+      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate]) {
+    preds.foreach(p => require(supportedDeletePredicate(p, schema),
+      s"unsupported delete predicate: $p"))
+    def mayMatch(e: FileEntry): Boolean = preds.forall(p => mayMatchV2(st, e, p))
+    def proven(e: FileEntry): Boolean =
+      st.transformsForOpt(e).exists(tf => partProvenV2(preds, schema, tf)(e))
+    def row(r: InternalRow): Boolean =
+      preds.forall(p => evalPredicate(p, r, schema).contains(true))
+  }
+
+  /** Row-level DELETE, merge-on-read: instead of rewriting every
+    * candidate file, record the matching ROW POSITIONS in a sidecar
+    * deletion-vector file and re-point the manifest entry — the
+    * Delta/Iceberg DV shape. A point delete against a 1 GB file costs
+    * one file READ and a kilobyte write, not a 1 GB rewrite; readers
+    * apply the vector at scan (positions are merged into every read
+    * path), and OPTIMIZE later purges vectors by rewriting live rows.
+    * The trade: scans of DV'd files drop out of the whole-batch
+    * columnar handoff and min/max aggregate pushdown (a deleted row may
+    * have held the extremum — count(*) stays metadata-exact via
+    * per-entry live counts). A file whose every live row matches drops
+    * from the manifest entirely — metadata-only, no DV needed.
+    * Same single-attempt CAS and same predicate dialect as the CoW path. */
+  def deleteWhereMoRV2(tablePath: String,
+      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
+      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
     val root = Paths.get(tablePath)
     val st = readState(root)
     require(st.version > 0L, s"delete requires a versioned manifest table at $tablePath")
     val schema = schemaOf(root, st)
-    validate(schema)
-    val (candidates, untouched) = st.entries.partition(filePrune)
+    val m = new DeleteMatch(st, schema, preds)
+    val (candidates, untouched) = st.entries.partition(m.mayMatch)
     var deletedRows = 0L
     var provenFiles = 0
     val newDvFiles = scala.collection.mutable.Buffer.empty[String]
     // records resolved ONCE (sidecar read + typed key set), filtered per
     // entry by sequence — not re-read per data file
-    val eqApplied = st.eqDels.map(r => EqDelApplied(r.cols,
-      r.cols.map(c => schema.fields.find(_.name == c)
-        .map(_.dataType).getOrElse(StringType)),
-      readEqDelKeys(root, r.name), r.seq))
+    val eqApplied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
     val replacements = candidates.map { e =>
-      if (fileProven(e)) {
+      if (m.proven(e)) {
         // partition tuple proves a full match: drop the entry without
-        // opening the file — no DV, no read (see partProven)
+        // opening the file — no DV, no read (see partProvenV2)
         provenFiles += 1; deletedRows += e.liveRows; None
       } else {
       val prior: Set[Long] =
         e.dvName.fold(Set.empty[Long])(n => readDvPositions(root.resolve(n)).toSet)
-      val eqTests = eqApplied.filter(_.seq > e.seq).map(a => rowKillTest(schema, a))
-      val eqHidden: InternalRow => Boolean = row => eqTests.exists(t => t(row))
+      val eqHidden = eqHiddenTest(schema, eqApplied, e)
       val matched = scala.collection.mutable.Buffer.empty[Long]
       foreachRowPos(root.resolve(e.name), schema, st.colMap, st.schemaEpoch > 0L) { (row, pos) =>
         // positions already deleted — by a prior DV or by an outstanding
         // equality-delete record — are invisible: never re-matched,
         // never re-counted, never re-vectored (a DV'd eq-hidden position
         // would otherwise leak into the cdc feed's DV diff)
-        if (!prior.contains(pos) && !eqHidden(row) && rowMatches(row, schema))
+        if (!prior.contains(pos) && !eqHidden(row) && m.row(row))
           matched += pos
       }
       if (matched.isEmpty) Some(e) // stats were only a may-match
@@ -4848,23 +4783,49 @@ object ManifestSink {
     }
   }
 
-  private def deleteCore(tablePath: String, gc: GcPolicy,
-      validate: StructType => Unit,
-      rowMatches: (InternalRow, StructType) => Boolean,
-      filePrune: FileEntry => Boolean,
-      fileProven: FileEntry => Boolean = _ => false): DeleteResult = {
+  /** Row-level DELETE, copy-on-write: every file the manifest cannot
+    * rule out is re-read, its surviving rows are written to a NEW
+    * parquet file, and one manifest version publishes the swap — the
+    * Delta/Iceberg CoW shape. Untouched files are carried by reference;
+    * history (time travel) keeps the pre-delete files alive until
+    * retention GC expires their versions; a change feed across a delete
+    * version fails the pure-append check LOUDLY (a delete is not a
+    * delta). The CAS is single-attempt: a delete decided what to remove
+    * from a state that must still hold at publish — concurrent commits
+    * lose it loudly, and the caller re-runs against the new state.
+    *
+    * Predicates compose as AND, in the one delete dialect: V2
+    * `Predicate`s, which SQL `DELETE FROM` and `TRUNCATE` pass
+    * directly and V1 `Filter` callers reach through `toV2`
+    * ([[deleteWhere]]). The dialect is strictly wider than V1 — `c % 10
+    * = 3` has no `Filter` form, and a dropped disjunct would be a silent
+    * UNDER-delete, the worst possible failure for a DELETE.
+    * [[supportedDeletePredicate]] gates it up front (in `canDeleteWhere`
+    * too), so anything we cannot evaluate fails loudly before any I/O.
+    *
+    * Candidates whose PARTITION TUPLE proves a full match drop
+    * metadata-only ([[partProvenV2]]); per-file min/max stats never can —
+    * null counts aren't tracked, and a null never matches a range
+    * predicate, so a stats-proven range could still shelter a surviving
+    * null row. Rewrites are per-file independent, so a distributed
+    * engine would fan them out one task each; driver-side sequential is
+    * the local[*] degenerate case (same argument as [[compact]]). */
+  def deleteWhereV2(tablePath: String,
+      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
+      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult = {
     val root = Paths.get(tablePath)
     val st = readState(root)
     require(st.version > 0L, s"delete requires a versioned manifest table at $tablePath")
     val schema = schemaOf(root, st)
-    validate(schema)
-    val (candidates, untouched) = st.entries.partition(filePrune)
+    val m = new DeleteMatch(st, schema, preds)
+    val (candidates, untouched) = st.entries.partition(m.mayMatch)
     var deletedRows = 0L
     var provenFiles = 0
+    val eqApplied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
     val replacements = candidates.map { e =>
-      if (fileProven(e)) {
+      if (m.proven(e)) {
         // partition tuple proves a full match: drop the entry without
-        // opening the file (see partProven) — the 100 TB partition-
+        // opening the file (see partProvenV2) — the 100 TB partition-
         // retirement path, a pure metadata commit
         provenFiles += 1; deletedRows += e.liveRows; None
       } else {
@@ -4879,12 +4840,17 @@ object ManifestSink {
       // purges the DV — the replacement entry carries none)
       val dv: Set[Long] =
         e.dvName.fold(Set.empty[Long])(n => readDvPositions(root.resolve(n)).toSet)
+      // rows an outstanding equality-delete record hides are invisible
+      // too, but they never match and are copied as they are: the
+      // replacement keeps the entry's sequence, so the record still
+      // hides them
+      val eqHidden = eqHiddenTest(schema, eqApplied, e)
       val remap = new LineageRemapper(e.lineageSegs(root))
       try {
         foreachRowPos(root.resolve(e.name), schema, st.colMap, st.schemaEpoch > 0L) { (row, pos) =>
           if (dv.contains(pos)) ()
           // deleted iff the conjunction is TRUE; UNKNOWN keeps the row
-          else if (rowMatches(row, schema)) deletedRows += 1
+          else if (!eqHidden(row) && m.row(row)) deletedRows += 1
           else {
             out.write(row); kept += 1
             stats.add(row); remap.add(pos)
@@ -4922,6 +4888,14 @@ object ManifestSink {
     }
   }
 
+  /** Row-level DELETE, copy-on-write, for V1 `Filter` callers: each
+    * filter converts at the edge with Spark's `Filter.toV2` (reached
+    * through [[org.apache.spark.sql.graft.GraftBridge]]), and the
+    * conjunction runs as [[deleteWhereV2]]. */
+  def deleteWhere(tablePath: String, filters: Seq[org.apache.spark.sql.sources.Filter],
+      gc: GcPolicy = GcPolicy(None, 3600L * 1000)): DeleteResult =
+    deleteWhereV2(tablePath, filters.map(org.apache.spark.sql.graft.GraftBridge.toV2), gc)
+
   /** Parquet primitive a TABLE type stores as (manifest tables carry
     * exactly these) — shared by the scan factory's widening probe and
     * [[foreachRowPos]]'s. */
@@ -4948,7 +4922,7 @@ object ManifestSink {
     // evolved tables probe the footer for BOTH presence and physical
     // primitive: a file written before ALTER COLUMN TYPE stores the
     // NARROW primitive, and the table-typed accessors the callers use
-    // (evalFilter, the rewrite writer) would read garbage off
+    // (evalPredicate, the rewrite writer) would read garbage off
     // file-typed vectors — such files must decode through the
     // widening reader, exactly like the scan path
     val types: Map[String, String] =
@@ -4989,43 +4963,8 @@ object ManifestSink {
     }
   }
 
-  /** The delete-filter dialect: equality/range/in/null tests on table
-    * columns plus AND/OR/NOT. Everything else is rejected loudly BEFORE
-    * any rewrite I/O. */
-  private[sources] def supportedDeleteFilter(f: org.apache.spark.sql.sources.Filter,
-      schema: StructType): Boolean = {
-    import org.apache.spark.sql.sources._
-    def known(c: String) = schema.fieldNames.contains(c)
-    f match {
-      case EqualTo(c, _) => known(c)
-      case EqualNullSafe(c, _) => known(c)
-      case GreaterThan(c, _) => known(c)
-      case GreaterThanOrEqual(c, _) => known(c)
-      case LessThan(c, _) => known(c)
-      case LessThanOrEqual(c, _) => known(c)
-      case In(c, _) => known(c)
-      case IsNull(c) => known(c)
-      case IsNotNull(c) => known(c)
-      case StringStartsWith(c, _) => known(c)
-      case StringEndsWith(c, _) => known(c)
-      case StringContains(c, _) => known(c)
-      case And(l, r) => supportedDeleteFilter(l, schema) && supportedDeleteFilter(r, schema)
-      case Or(l, r) => supportedDeleteFilter(l, schema) && supportedDeleteFilter(r, schema)
-      case Not(c) => supportedDeleteFilter(c, schema)
-      case AlwaysTrue() | AlwaysFalse() => true
-      case _ => false
-    }
-  }
-
-  /** SQL THREE-VALUED logic, faithfully: None is UNKNOWN. The DELETE
-    * contract collapses it at the top — a row is deleted iff the
-    * predicate is TRUE, so UNKNOWN keeps the row — but UNKNOWN must
-    * propagate correctly through Not/And/Or first (`NOT (c = 5)` over a
-    * null c is UNKNOWN, not TRUE; collapsing early would delete the
-    * null rows). */
   /** Runtime value of column `c` in `row`: null = SQL NULL, strings as
-    * java.lang.String, numbers boxed. Shared by the V1-Filter and
-    * V2-Predicate delete evaluators. */
+    * java.lang.String, numbers boxed. */
   private def fieldValue(row: InternalRow, schema: StructType, c: String): Any = {
     val i = schema.fieldIndex(c)
     if (row.isNullAt(i)) null
@@ -5054,62 +4993,14 @@ object ManifestSink {
     case _ => None
   }
 
-  private[sources] def evalFilter(f: org.apache.spark.sql.sources.Filter,
-      row: InternalRow, schema: StructType): Option[Boolean] = {
-    import org.apache.spark.sql.sources._
-    def value(c: String): Any = fieldValue(row, schema, c)
-    def cmp(a: Any, b: Any): Option[Int] = cmpAny(a, b)
-    def str(c: String)(p: String => Boolean): Option[Boolean] =
-      value(c) match { case s: String => Some(p(s)); case _ => None }
-    f match {
-      case EqualTo(c, v) => cmp(value(c), v).map(_ == 0)
-      case EqualNullSafe(c, v) =>
-        val a = value(c)
-        if (a == null || v == null) Some(a == null && v == null)
-        else cmp(a, v).map(_ == 0)
-      case GreaterThan(c, v) => cmp(value(c), v).map(_ > 0)
-      case GreaterThanOrEqual(c, v) => cmp(value(c), v).map(_ >= 0)
-      case LessThan(c, v) => cmp(value(c), v).map(_ < 0)
-      case LessThanOrEqual(c, v) => cmp(value(c), v).map(_ <= 0)
-      case In(c, vs) =>
-        val a = value(c)
-        if (a == null) None
-        // IN with a null member: TRUE if any non-null member matches,
-        // else UNKNOWN (never FALSE) — the SQL rule
-        else if (vs.exists(v => v != null && cmp(a, v).contains(0))) Some(true)
-        else if (vs.contains(null)) None
-        else Some(false)
-      case IsNull(c) => Some(value(c) == null)
-      case IsNotNull(c) => Some(value(c) != null)
-      case StringStartsWith(c, p) => str(c)(_.startsWith(p))
-      case StringEndsWith(c, p) => str(c)(_.endsWith(p))
-      case StringContains(c, p) => str(c)(_.contains(p))
-      case And(l, r) =>
-        (evalFilter(l, row, schema), evalFilter(r, row, schema)) match {
-          case (Some(false), _) | (_, Some(false)) => Some(false)
-          case (Some(true), Some(true)) => Some(true)
-          case _ => None
-        }
-      case Or(l, r) =>
-        (evalFilter(l, row, schema), evalFilter(r, row, schema)) match {
-          case (Some(true), _) | (_, Some(true)) => Some(true)
-          case (Some(false), Some(false)) => Some(false)
-          case _ => None
-        }
-      case Not(x) => evalFilter(x, row, schema).map(!_)
-      case AlwaysTrue() => Some(true)
-      case AlwaysFalse() => Some(false)
-      case other => throw new IllegalArgumentException(s"unsupported delete filter $other")
-    }
-  }
-
   /** The V2-Predicate delete dialect: comparisons / IN / null tests /
     * string predicates over VALUE EXPRESSIONS (column refs, literals,
     * arithmetic `+ - * / %`, ABS, COALESCE, CAST), composed with
-    * AND/OR/NOT. Strictly wider than the V1 dialect — arithmetic like
-    * `c % 10 = 3` has no V1 `Filter` form at all. Everything outside the
-    * dialect is rejected in `canDeleteWhere`, so Spark fails the DELETE
-    * loudly at analysis rather than running it under-scoped. */
+    * AND/OR/NOT. Every V1 `Filter` shape arrives here through `toV2`,
+    * a null literal (an IN member, a comparand) as a NULL-typed one;
+    * arithmetic like `c % 10 = 3` has no V1 form at all. Everything
+    * outside the dialect is rejected in `canDeleteWhere`, so Spark fails
+    * the DELETE loudly at analysis rather than running it under-scoped. */
   private[sources] def supportedDeletePredicate(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate,
       schema: StructType): Boolean = {
@@ -5119,7 +5010,7 @@ object ManifestSink {
         r.fieldNames.length == 1 && schema.fieldNames.contains(r.fieldNames.head)
       case l: Literal[_] => l.dataType match {
         case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-             StringType => true
+             StringType | NullType => true
         case _ => false
       }
       case c: Cast => (c.dataType match {
@@ -5220,7 +5111,12 @@ object ManifestSink {
     }
   }
 
-  /** Same THREE-VALUED contract as [[evalFilter]], over the V2 shape. */
+  /** SQL THREE-VALUED logic, faithfully: None is UNKNOWN. The DELETE
+    * contract collapses it at the top — a row is deleted iff the
+    * predicate is TRUE, so UNKNOWN keeps the row — but UNKNOWN must
+    * propagate correctly through NOT/AND/OR first (`NOT (c = 5)` over a
+    * null c is UNKNOWN, not TRUE; collapsing early would delete the
+    * null rows). */
   private[sources] def evalPredicate(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate,
       row: InternalRow, schema: StructType): Option[Boolean] = {
@@ -5274,55 +5170,18 @@ object ManifestSink {
     }
   }
 
-  /** Per-file min/max pruning for the V2 shape, mirroring [[mayMatch]]:
-    * only direct `column <op> literal` comparisons prune; arithmetic,
-    * NOT, and anything else conservatively may-match. `AND` prunes if
-    * either side prunes; `OR` only if both sides do. */
-  private[sources] def mayMatchV2(e: FileEntry,
+  /** Per-file pruning for the V2 shape: `AND` prunes if either side
+    * prunes, `OR` only if both do, and every other shape prunes through
+    * its V1 translation ([[v2ToV1]]) and the spec-aware
+    * [[entryMayMatch]] — partition tuple, min/max stats, blooms. A shape
+    * with no V1 form (arithmetic) conservatively may-match. */
+  private[sources] def mayMatchV2(st: TableState, e: FileEntry,
       p: org.apache.spark.sql.connector.expressions.filter.Predicate): Boolean = {
-    import org.apache.spark.sql.connector.expressions._
-    import org.apache.spark.sql.sources
-    // V2 string literals carry UTF8String — normalize to String so the
-    // V1 delegate's bloom path sees them
-    def norm(v: Any): Any = v match {
-      case u: UTF8String => u.toString
-      case other => other
-    }
-    def colLit(flip: Boolean): Option[(String, Any)] = p.children() match {
-      case Array(r: NamedReference, l: Literal[_])
-        if !flip && r.fieldNames.length == 1 => Some((r.fieldNames.head, norm(l.value)))
-      case Array(l: Literal[_], r: NamedReference)
-        if flip && r.fieldNames.length == 1 => Some((r.fieldNames.head, norm(l.value)))
-      case _ => None
-    }
-    def range(mk: (String, Any) => sources.Filter, flipped: (String, Any) => sources.Filter) =
-      colLit(flip = false).map { case (c, v) => mayMatch(e, mk(c, v)) }
-        .orElse(colLit(flip = true).map { case (c, v) => mayMatch(e, flipped(c, v)) })
-        .getOrElse(true)
+    import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Pred}
     p.name match {
-      case "AND" => p.children.forall {
-        case c: filter.Predicate => mayMatchV2(e, c); case _ => true
-      }
-      case "OR" => p.children.exists {
-        case c: filter.Predicate => mayMatchV2(e, c); case _ => true
-      }
-      case "=" => range(sources.EqualTo.apply, sources.EqualTo.apply)
-      case "<" => range(sources.LessThan.apply, sources.GreaterThan.apply)
-      case "<=" => range(sources.LessThanOrEqual.apply, sources.GreaterThanOrEqual.apply)
-      case ">" => range(sources.GreaterThan.apply, sources.LessThan.apply)
-      case ">=" => range(sources.GreaterThanOrEqual.apply, sources.LessThanOrEqual.apply)
-      case "IN" => p.children() match {
-        case arr if arr.nonEmpty => arr.head match {
-          case r: NamedReference if r.fieldNames.length == 1 =>
-            val lits = arr.tail.collect { case l: Literal[_] => norm(l.value) }
-            if (lits.length == arr.length - 1)
-              mayMatch(e, sources.In(r.fieldNames.head, lits.toArray))
-            else true
-          case _ => true
-        }
-        case _ => true
-      }
-      case _ => true
+      case "AND" => p.children.forall { case c: V2Pred => mayMatchV2(st, e, c); case _ => true }
+      case "OR" => p.children.exists { case c: V2Pred => mayMatchV2(st, e, c); case _ => true }
+      case _ => v2ToV1(p).forall(f => entryMayMatch(st, e, f))
     }
   }
 }
@@ -5331,7 +5190,7 @@ class ManifestTable(root: Path, schema0: StructType, pinned: Option[Long] = None
     changes: Option[(Long, Long)] = None, branch: Option[String] = None,
     cdc: Boolean = false)
     extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
+    with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with SupportsRowLevelOperations {
   require(branch.isEmpty || (pinned.isEmpty && changes.isEmpty),
@@ -5447,18 +5306,14 @@ class ManifestTable(root: Path, schema0: StructType, pinned: Option[Long] = None
     }.toArray
   }
 
-  /** SQL `DELETE FROM` lands here (via [[GraftCatalog]]): row-level
-    * delete — copy-on-write by default, merge-on-read (positional
-    * deletion vectors, see [[ManifestSink.deleteWhereMoR]]) when the
-    * table was created with TBLPROPERTIES `delete.mode` =
-    * `merge-on-read`. The V2 `Predicate` overloads are overridden
-    * DIRECTLY — `SupportsDelete`'s default V2→V1 bridge converts through
-    * `PredicateUtils.toV1`, which cannot express arithmetic shapes like
-    * `c % 10 = 3`; relying on it either fails statements our evaluator
-    * handles fine or (in `deleteWhere`, which never length-checks the
-    * conversion) silently under-deletes. Unsupported predicates are
-    * rejected in `canDeleteWhere` so Spark fails the statement loudly
-    * instead. */
+  /** SQL `DELETE FROM` lands here (via [[GraftCatalog]]), and so does
+    * `TRUNCATE TABLE` as `SupportsDeleteV2`'s default `ALWAYS_TRUE`
+    * delete: row-level delete — copy-on-write by default, merge-on-read
+    * (positional deletion vectors, see [[ManifestSink.deleteWhereMoRV2]])
+    * when the table was created with TBLPROPERTIES `delete.mode` =
+    * `merge-on-read`. Predicates stay V2 end to end; unsupported ones
+    * are rejected in `canDeleteWhere`, so Spark rewrites the statement
+    * row-level (see [[newRowLevelOperationBuilder]]) instead. */
   override def canDeleteWhere(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Boolean =
     pinned.isEmpty && changes.isEmpty && branch.isEmpty &&
@@ -5468,15 +5323,6 @@ class ManifestTable(root: Path, schema0: StructType, pinned: Option[Long] = None
     if (ManifestSink.deleteMode(root) == ManifestSink.DeleteModeMor)
       ManifestSink.deleteWhereMoRV2(root.toString, predicates.toSeq)
     else ManifestSink.deleteWhereV2(root.toString, predicates.toSeq)
-
-  // V1 overloads kept for the `truncateTable` default and direct callers
-  override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    pinned.isEmpty && changes.isEmpty && branch.isEmpty &&
-      filters.forall(f => ManifestSink.supportedDeleteFilter(f, schema0))
-  override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
-    if (ManifestSink.deleteMode(root) == ManifestSink.DeleteModeMor)
-      ManifestSink.deleteWhereMoR(root.toString, filters.toSeq)
-    else ManifestSink.deleteWhere(root.toString, filters.toSeq)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE,
@@ -5520,8 +5366,9 @@ class ManifestTable(root: Path, schema0: StructType, pinned: Option[Long] = None
     * `GroupBasedRowLevelOperationScanPlanning`) pinned to the version it
     * read, and the write's commit swaps exactly those files for the
     * rewritten content in one CAS publish against that version.
-    * `DELETE` statements whose predicates fit the [[SupportsDelete]]
-    * dialect still take the metadata-coordinated path above
+    * `DELETE` statements whose predicates fit the delete dialect
+    * ([[ManifestSink.supportedDeletePredicate]]) still take the
+    * metadata-coordinated path above
     * (`OptimizeMetadataOnlyDeleteFromTable` converts them back); shapes
     * outside it — subqueries, disjunctions over arithmetic — now fall
     * through to this rewrite instead of failing. */
@@ -7217,10 +7064,7 @@ class ManifestScan(root: Path, fileSchema: StructType, schema: StructType,
           // equality-delete positions apply row-by-row, like DVs
           !eqDels.exists(_.seq > e.seq)),
       colMap = colMap, evolved = evolved,
-      eqApplied = eqDels.map(r => EqDelApplied(r.cols,
-        r.cols.map(c => fileSchema.fields.find(_.name == c)
-          .map(_.dataType).getOrElse(StringType)),
-        ManifestSink.readEqDelKeys(root, r.name), r.seq)),
+      eqApplied = eqDels.map(EqDelApplied.resolve(root, fileSchema, _)),
       // row-group-level predicate pushdown inside surviving files —
       // translated ONCE on the driver, shipped serialized (parquet
       // predicates are Serializable). Withheld from (a) REWRITE scans:
@@ -7356,10 +7200,7 @@ class ManifestMicroBatchStream(root: Path, fileSchema: StructType,
     // still vectorized inside the reader.
     new ManifestReaderFactory(fileSchema, schema, columnar = false,
       colMap = colMap, evolved = evolved,
-      eqApplied = eqDels.map(r => EqDelApplied(r.cols,
-        r.cols.map(c => fileSchema.fields.find(_.name == c)
-          .map(_.dataType).getOrElse(StringType)),
-        ManifestSink.readEqDelKeys(root, r.name), r.seq)))
+      eqApplied = eqDels.map(EqDelApplied.resolve(root, fileSchema, _)))
 }
 
 /** One committed data file. `partKey` (when the table is partitioned
@@ -7405,20 +7246,6 @@ case class ManifestFilePartition(file: String, rows: Long = 0L,
 case class ManifestBinPartition(members: Seq[ManifestFilePartition])
     extends InputPartition
 
-/** Per-file readers. Data files decode through Spark's vectorized
-  * parquet reader — as whole ColumnarBatches when the scan allows it
-  * (`columnar`), else as row views over the same batches. Only the
-  * PRUNED columns are materialized. A zero-column projection (e.g.
-  * `SELECT lit(1)`) opens no file at all: the manifest's per-file row
-  * count drives an empty-row emitter.
-  *
-  * Schema evolution: columns are requested from parquet by their
-  * PHYSICAL names (`colMap` — identity unless the table was ALTERed),
-  * and when `evolved` (any schema-altering commit in the table's
-  * history) each file's footer decides which requested columns exist in
-  * THAT file; absent ones null-fill — per row via a mapped view, per
-  * batch via spliced constant-null vectors. Files never rewrite on
-  * ALTER; the read side reconciles. */
 /** One equality-delete record RESOLVED for executor-side application:
   * the key column (logical name + table type), the canonical key values
   * (read once on the driver — keys are bounded, the whole point), and
@@ -7433,6 +7260,31 @@ case class EqDelApplied(cols: Seq[String], dataTypes: Seq[DataType],
   }).toSet
 }
 
+object EqDelApplied {
+  /** Resolve a record against `schema` on the driver: key column types
+    * from the schema (a column it lacks compares as a string) and the
+    * sidecar's keys, read once. */
+  private[sources] def resolve(root: Path, schema: StructType,
+      r: ManifestSink.EqDelRec): EqDelApplied =
+    EqDelApplied(r.cols,
+      r.cols.map(c => schema.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)),
+      ManifestSink.readEqDelKeys(root, r.name), r.seq)
+}
+
+/** Per-file readers. Data files decode through Spark's vectorized
+  * parquet reader — as whole ColumnarBatches when the scan allows it
+  * (`columnar`), else as row views over the same batches. Only the
+  * PRUNED columns are materialized. A zero-column projection (e.g.
+  * `SELECT lit(1)`) opens no file at all: the manifest's per-file row
+  * count drives an empty-row emitter.
+  *
+  * Schema evolution: columns are requested from parquet by their
+  * PHYSICAL names (`colMap` — identity unless the table was ALTERed),
+  * and when `evolved` (any schema-altering commit in the table's
+  * history) each file's footer decides which requested columns exist in
+  * THAT file; absent ones null-fill — per row via a mapped view, per
+  * batch via spliced constant-null vectors. Files never rewrite on
+  * ALTER; the read side reconciles. */
 class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
     columnar: Boolean, colMap: Map[String, String] = Map.empty,
     evolved: Boolean = false,

@@ -14,6 +14,10 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A V1 source filter as the V2 predicate Spark itself would push. */
+  def toV2(f: org.apache.spark.sql.sources.Filter)
+      : org.apache.spark.sql.connector.expressions.filter.Predicate = f.toV2
+
   /** The analyzed logical plan behind a DataFrame. */
   def plan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]

@@ -95,6 +95,25 @@ class CoverageDocSpec extends AnyFunSuite {
       assert(count(java.util.regex.Pattern.quote(s)) == 0, s"'$s' must not occur"))
   }
 
+  test("DELETE has one predicate dialect") {
+    // V1 Filter callers convert at the edge (Filter.toV2); a second
+    // evaluator or gate drifts from the one SQL DELETE and TRUNCATE use,
+    // and one equality-delete resolver keeps every reader hiding the
+    // same rows
+    val src = java.nio.file.Paths.get("src/main/scala")
+    val text = java.nio.file.Files.walk(src).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).sorted
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .mkString("\n")
+    def count(s: String): Int = s.r.findAllMatchIn(text).size
+    Seq("""def evalFilter\b""", """def supportedDeleteFilter\b""",
+        """def deleteWhereMoR\([^)]*sources\.Filter""", """SupportsDelete(?!V2)""")
+      .foreach(re => assert(count(re) == 0, s"'$re' must not occur"))
+    assert(count("""(?<!class )\bEqDelApplied\(""") == 1,
+      "EqDelApplied must be constructed in one place, EqDelApplied.resolve")
+  }
+
   test("no COVERAGE.md query reference is stale") {
     // bare `qNN`/`qNNN` shorthands (q30–q33 style ranges) are prose;
     // only full `qN*_name` identifiers are checked against the registry

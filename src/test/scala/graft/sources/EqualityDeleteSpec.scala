@@ -306,4 +306,26 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(sidecars.nonEmpty, "a live record's sidecar must survive vacuum")
     assert(ids("e6") == Seq(0L, 1L, 3L))
   }
+
+  test("a DELETE neither counts nor republishes rows a record already hides") {
+    // CoW and MoR, through SQL and through the API: every visible row
+    // survives, so each statement must be a no-op
+    spark.sql("CREATE TABLE ecat.db.e15 (id BIGINT)")
+    spark.sql("INSERT INTO ecat.db.e15 SELECT id FROM range(8)")
+    ManifestSink.deleteWhereEq(root("e15").toString, "id", Seq("5"))
+    Seq("copy-on-write", "merge-on-read").foreach { mode =>
+      spark.sql(s"ALTER TABLE ecat.db.e15 SET TBLPROPERTIES ('delete.mode' = '$mode')")
+      val v = ManifestSink.currentVersion(root("e15"))
+      spark.sql("DELETE FROM ecat.db.e15 WHERE id = 5")
+      assert(ManifestSink.currentVersion(root("e15")) == v, s"$mode SQL DELETE published")
+      val k5 = org.apache.spark.sql.sources.EqualTo("id", 5L)
+      val cow = ManifestSink.deleteWhere(root("e15").toString, Seq(k5))
+      val mor = ManifestSink.deleteWhereMoRV2(root("e15").toString,
+        Seq(org.apache.spark.sql.graft.GraftBridge.toV2(k5)))
+      Seq(cow, mor).foreach { res =>
+        assert(res.version == v && res.deletedRows == 0L, s"$mode: $res")
+      }
+    }
+    assert(ids("e15") == Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L))
+  }
 }

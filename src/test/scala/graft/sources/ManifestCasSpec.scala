@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Commit-protocol hardening: versioned-manifest CAS (a losing concurrent
   * publish fails loudly instead of dropping the winner's files), schema
-  * nullability preservation on append, column-name validation, and legacy
-  * single-file manifest compatibility. Lives in graft.sources for access
-  * to the private[sources] protocol internals. */
+  * nullability preservation on append, and column-name validation. Lives
+  * in graft.sources for access to the private[sources] protocol
+  * internals. */
 class ManifestCasSpec extends AnyFunSuite {
   import graft.TestSpark.spark
   import spark.implicits._
