@@ -698,9 +698,9 @@ object GraftCatalog {
       s"schema\t${enc(schema.json)}") ++
       arr("qcols", qcols) ++ arr("aliases", aliases) ++
       // comments may contain nulls (no comment on that column): encode a
-      // null as the bare marker " " which enc() never produces
+      // null as the bare marker NUL ("\u0000"), which enc() never produces
       Option(comments).filter(_.nonEmpty).map(cs =>
-        ("comments" +: cs.map(c => if (c == null) " " else enc(c)).toSeq)
+        ("comments" +: cs.map(c => if (c == null) "\u0000" else enc(c)).toSeq)
           .mkString("\t")) ++
       props.toSeq.sortBy(_._1).map { case (k, v) => s"prop\t${enc(k)}\t${enc(v)}" })
       .mkString("\n")
@@ -719,7 +719,7 @@ object GraftCatalog {
     def arr(tag: String): Array[String] =
       field(tag).map(_.map(dec).toArray).getOrElse(Array.empty)
     val comments = field("comments")
-      .map(_.map(c => if (c == " ") null else dec(c)).toArray)
+      .map(_.map(c => if (c == "\u0000") null else dec(c)).toArray)
       .getOrElse(Array.empty[String])
     val props = lines.filter(_.startsWith("prop\t")).map { l =>
       val Array(_, k, v) = l.split("\t", 3)

@@ -2385,27 +2385,38 @@ object ManifestSink {
   private[sources] def boundConstraintExprs(schema: StructType,
       props: Map[String, String]):
       Seq[(String, String, org.apache.spark.sql.catalyst.expressions.Expression)] = {
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, IsNull, Or}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.catalyst.expressions.{IsNull, Or}
     val checks = props.toSeq.collect {
       case (k, v) if k.startsWith(ConstraintPropPrefix) =>
         (k.stripPrefix(ConstraintPropPrefix), decodeConstraint(v)._2)
     }.sortBy(_._1)
-    if (checks.isEmpty) Seq.empty
-    else {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val rel = LocalRelation(
-        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
-      checks.map { case (name, sql) =>
-        val parsed = spark.sessionState.sqlParser.parseExpression(sql)
-        val analyzed = spark.sessionState.analyzer.execute(Filter(parsed, rel))
-        val cond = analyzed.collectFirst { case f: Filter => f.condition }
-          .getOrElse(throw new IllegalStateException(
-            s"CHECK constraint $name ($sql) did not analyze to a filter"))
-        require(cond.resolved,
-          s"CHECK constraint $name ($sql) does not resolve against the write schema")
-        (name, sql, BindReferences.bindReference(Or(cond, IsNull(cond)), rel.output))
-      }
+    checks.map { case (name, sql) =>
+      val parsed = org.apache.spark.sql.SparkSession.active.sessionState.sqlParser
+        .parseExpression(sql)
+      val cond = bindToSchema(parsed, schema).getOrElse(throw new IllegalArgumentException(
+        s"CHECK constraint $name ($sql) does not resolve against the write schema"))
+      (name, sql, Or(cond, IsNull(cond)))
+    }
+  }
+
+  /** `cond` resolved by the session analyzer against a relation of
+    * `schema` and BOUND to its ordinals, or None when it does not
+    * resolve: the one analyze-and-bind step of CHECK constraints
+    * ([[boundConstraintExprs]]) and DELETE predicates
+    * ([[deletePredicate]]). The analyzer applies the session's type
+    * coercion, so the result evaluates a row exactly as `SELECT … WHERE
+    * cond` would. Driver-side; needs an active session. */
+  private[sources] def bindToSchema(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression, schema: StructType)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val rel = LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+    org.apache.spark.sql.SparkSession.active.sessionState.analyzer
+      .execute(Filter(cond, rel)) match {
+      case Filter(c, _) if c.resolved => Some(BindReferences.bindReference(c, rel.output))
+      case _ => None
     }
   }
 
@@ -2934,7 +2945,7 @@ object ManifestSink {
         .map { case (k, v) => s"${urlEnc(k)}=$v" }.mkString(",")
     }
     val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest((entryLines.mkString("\n") + " " + bloomLines.mkString("\n"))
+      .digest((entryLines.mkString("\n") + "\u0000" + bloomLines.mkString("\n"))
         .getBytes("UTF-8"))
     val name = s"mgroup-${digest.take(12).map("%02x".format(_)).mkString}.txt"
     writeIfAbsent(root.resolve(name), entryLines.mkString("\n"))
@@ -3948,6 +3959,8 @@ object ManifestSink {
     val schema = schemaOf(root, st)
     // typed kill sets once, per record
     val applied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
+    val files = new ManifestReaderFactory(schema, schema, columnar = false, st.colMap,
+      st.schemaEpoch > 0L)
     def governed(e: FileEntry): Seq[EqDelApplied] = applied.filter(_.seq > e.seq)
     def mayHold(e: FileEntry, a: EqDelApplied): Boolean =
       // a key tuple may live in the file iff EVERY component may match
@@ -3977,11 +3990,18 @@ object ManifestSink {
           toPhysicalSchema(schema, st.colMap))
         def killed(row: InternalRow): Boolean = killTests.exists(t => t(row))
         val remap = new LineageRemapper(e.lineageSegs(root))
-        try foreachRowPos(root.resolve(e.name), schema, st.colMap,
-          st.schemaEpoch > 0L) { (row, pos) =>
-          if (!dv.contains(pos) && !killed(row)) {
-            out.write(row); kept += 1; stats.add(row); remap.add(pos)
-          }
+        try {
+          val r = files.createReader(ManifestFilePartition(root.resolve(e.name).toString))
+          try {
+            var pos = -1L
+            while (r.next()) {
+              pos += 1
+              val row = r.get()
+              if (!dv.contains(pos) && !killed(row)) {
+                out.write(row); kept += 1; stats.add(row); remap.add(pos)
+              }
+            }
+          } finally r.close()
         } finally out.close()
         rewritten += 1
         FileEntry(newName, kept, stats.intMins, stats.intMaxs, e.parts,
@@ -4165,12 +4185,19 @@ object ManifestSink {
     val out = ManifestParquet.open(root.resolve(newName),
       toPhysicalSchema(schema, colMap))
     try {
-      foreachRowPos(root.resolve(e.name), schema, colMap, evolved) { (row, pos) =>
-        if (!dv.contains(pos)) {
-          out.write(row); kept += 1
-          stats.add(row); remap.add(pos)
+      val r = new ManifestReaderFactory(schema, schema, columnar = false, colMap, evolved)
+        .createReader(ManifestFilePartition(root.resolve(e.name).toString))
+      try {
+        var pos = -1L
+        while (r.next()) {
+          pos += 1
+          if (!dv.contains(pos)) {
+            val row = r.get()
+            out.write(row); kept += 1
+            stats.add(row); remap.add(pos)
+          }
         }
-      }
+      } finally r.close()
     } finally out.close()
     FileEntry(newName, kept, stats.intMins, stats.intMaxs, e.parts,
       blooms = stats.blooms, slows = stats.strLowers, sups = stats.strUppers,
@@ -4322,13 +4349,19 @@ object ManifestSink {
       quantColsOf(st.props))
       .createWriter(0, System.nanoTime())
     var moved = 0L
+    val files = new ManifestReaderFactory(schema, schema, columnar = false, st.colMap,
+      st.schemaEpoch > 0L)
     stale.foreach { e =>
       val dv: Set[Long] =
         e.dvName.fold(Set.empty[Long])(n => readDvPositions(root.resolve(n)).toSet)
-      foreachRowPos(root.resolve(e.name), schema, st.colMap,
-          st.schemaEpoch > 0L) { (row, pos) =>
-        if (!dv.contains(pos)) { w.write(row); moved += 1 }
-      }
+      val r = files.createReader(ManifestFilePartition(root.resolve(e.name).toString))
+      try {
+        var pos = -1L
+        while (r.next()) {
+          pos += 1
+          if (!dv.contains(pos)) { w.write(r.get()); moved += 1 }
+        }
+      } finally r.close()
     }
     val commits = w.commit() match {
       case ManifestCommitSet(cs) => cs
@@ -4561,17 +4594,19 @@ object ManifestSink {
     * translation ([[v2ToV1]]) decided TRUE by the transform-aware
     * [[evalPartFilter]], which also decides `OR`s whose other side
     * names a data column; or, when every referenced column is an
-    * identity partition column, [[evalPredicate]] over a synthetic row
-    * of the file's typed partition values, which covers shapes with no
-    * V1 form (`p % 2 = 0`). A NULL partition value is a real SQL NULL
-    * for every row of the file, so three-valued evaluation is exact.
-    * A transformed partition VALUE is not the column's value, so the
-    * second rule never applies to one. Anything undecided answers false
-    * and falls through to the row path. */
+    * identity partition column, the predicate's bound Catalyst form
+    * ([[deletePredicate]]) over a synthetic row of the file's typed
+    * partition values, which covers shapes with no V1 form (`p % 2 =
+    * 0`). A NULL partition value is a real SQL NULL for every row of the
+    * file, so three-valued evaluation is exact. A transformed partition
+    * VALUE is not the column's value, so the second rule never applies
+    * to one. Anything undecided answers false and falls through to the
+    * row path. */
   private def partProvenV2(
-      preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate],
+      preds: Seq[(org.apache.spark.sql.connector.expressions.filter.Predicate,
+        org.apache.spark.sql.catalyst.expressions.BasePredicate)],
       schema: StructType, tf: Map[String, PartTransform])(e: FileEntry): Boolean =
-    preds.forall { p =>
+    preds.forall { case (p, bound) =>
       v2ToV1(p).exists(f => evalPartFilter(f, e.parts, tf).contains(true)) ||
         p.references().forall(r => r.fieldNames.length == 1 &&
           tf.get(r.fieldNames.head).exists(_.isInstanceOf[PIdentity])) && {
@@ -4581,9 +4616,7 @@ object ManifestSink {
               case Some(v) => decodePartValue(v, f.dataType)
             }
           }
-          evalPredicate(p,
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals),
-            schema).contains(true)
+          bound.eval(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals))
         }
     }
 
@@ -4664,28 +4697,12 @@ object ManifestSink {
   }
 
   /** Row-level kill test for ONE record against `schema`-shaped rows:
-    * a row dies iff its key TUPLE (typed; any NULL component never
-    * matches — SQL equality) is in the record's key set. */
+    * a row dies iff its key tuple ([[EqDelApplied.keyOf]]) is in the
+    * record's key set. */
   private[sources] def rowKillTest(schema: StructType,
       a: EqDelApplied): InternalRow => Boolean = {
     val idx = a.cols.map(schema.fieldIndex)
-    val dts = a.dataTypes
-    val keys = a.typedKeys
-    (row: InternalRow) => {
-      var i = 0
-      var nullComponent = false
-      val tuple = Seq.newBuilder[Any]
-      while (i < idx.length && !nullComponent) {
-        if (row.isNullAt(idx(i))) nullComponent = true
-        else tuple += (dts(i) match {
-          case LongType => row.getLong(idx(i))
-          case IntegerType => row.getInt(idx(i)).toLong
-          case _ => row.getUTF8String(idx(i)).toString
-        })
-        i += 1
-      }
-      !nullComponent && keys(tuple.result())
-    }
+    row => a.keyOf(row, idx).exists(a.typedKeys)
   }
 
   /** Does an outstanding equality-delete record hide `row` of `e`? Only
@@ -4699,16 +4716,18 @@ object ManifestSink {
   /** The delete predicates bound to one table state: an unsupported
     * predicate is rejected before any I/O; then the file prune
     * ([[mayMatchV2]]), the metadata-only proof ([[partProvenV2]]) and
-    * the row test, where a row is deleted iff the conjunction is TRUE. */
+    * the row test, Catalyst's evaluation of the bound conjunction
+    * ([[deletePredicate]]): a row is deleted iff it is TRUE, so UNKNOWN
+    * keeps the row. */
   private final class DeleteMatch(st: TableState, schema: StructType,
       preds: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate]) {
-    preds.foreach(p => require(supportedDeletePredicate(p, schema),
-      s"unsupported delete predicate: $p"))
+    private val bound = preds.map(p => p -> deletePredicate(p, schema)
+      .map(org.apache.spark.sql.catalyst.expressions.Predicate.create(_))
+      .getOrElse(throw new IllegalArgumentException(s"unsupported delete predicate: $p")))
     def mayMatch(e: FileEntry): Boolean = preds.forall(p => mayMatchV2(st, e, p))
     def proven(e: FileEntry): Boolean =
-      st.transformsForOpt(e).exists(tf => partProvenV2(preds, schema, tf)(e))
-    def row(r: InternalRow): Boolean =
-      preds.forall(p => evalPredicate(p, r, schema).contains(true))
+      st.transformsForOpt(e).exists(tf => partProvenV2(bound, schema, tf)(e))
+    def row(r: InternalRow): Boolean = bound.forall(_._2.eval(r))
   }
 
   /** Row-level DELETE, merge-on-read: instead of rewriting every
@@ -4739,6 +4758,8 @@ object ManifestSink {
     // records resolved ONCE (sidecar read + typed key set), filtered per
     // entry by sequence — not re-read per data file
     val eqApplied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
+    val files = new ManifestReaderFactory(schema, schema, columnar = false, st.colMap,
+      st.schemaEpoch > 0L)
     val replacements = candidates.map { e =>
       if (m.proven(e)) {
         // partition tuple proves a full match: drop the entry without
@@ -4749,14 +4770,20 @@ object ManifestSink {
         e.dvName.fold(Set.empty[Long])(n => readDvPositions(root.resolve(n)).toSet)
       val eqHidden = eqHiddenTest(schema, eqApplied, e)
       val matched = scala.collection.mutable.Buffer.empty[Long]
-      foreachRowPos(root.resolve(e.name), schema, st.colMap, st.schemaEpoch > 0L) { (row, pos) =>
-        // positions already deleted — by a prior DV or by an outstanding
-        // equality-delete record — are invisible: never re-matched,
-        // never re-counted, never re-vectored (a DV'd eq-hidden position
-        // would otherwise leak into the cdc feed's DV diff)
-        if (!prior.contains(pos) && !eqHidden(row) && m.row(row))
-          matched += pos
-      }
+      val r = files.createReader(ManifestFilePartition(root.resolve(e.name).toString))
+      try {
+        var pos = -1L
+        while (r.next()) {
+          pos += 1
+          val row = r.get()
+          // positions already deleted — by a prior DV or by an outstanding
+          // equality-delete record — are invisible: never re-matched,
+          // never re-counted, never re-vectored (a DV'd eq-hidden position
+          // would otherwise leak into the cdc feed's DV diff)
+          if (!prior.contains(pos) && !eqHidden(row) && m.row(row))
+            matched += pos
+        }
+      } finally r.close()
       if (matched.isEmpty) Some(e) // stats were only a may-match
       else {
         deletedRows += matched.size
@@ -4822,6 +4849,8 @@ object ManifestSink {
     var deletedRows = 0L
     var provenFiles = 0
     val eqApplied = st.eqDels.map(EqDelApplied.resolve(root, schema, _))
+    val files = new ManifestReaderFactory(schema, schema, columnar = false, st.colMap,
+      st.schemaEpoch > 0L)
     val replacements = candidates.map { e =>
       if (m.proven(e)) {
         // partition tuple proves a full match: drop the entry without
@@ -4847,15 +4876,21 @@ object ManifestSink {
       val eqHidden = eqHiddenTest(schema, eqApplied, e)
       val remap = new LineageRemapper(e.lineageSegs(root))
       try {
-        foreachRowPos(root.resolve(e.name), schema, st.colMap, st.schemaEpoch > 0L) { (row, pos) =>
-          if (dv.contains(pos)) ()
-          // deleted iff the conjunction is TRUE; UNKNOWN keeps the row
-          else if (!eqHidden(row) && m.row(row)) deletedRows += 1
-          else {
-            out.write(row); kept += 1
-            stats.add(row); remap.add(pos)
+        val r = files.createReader(ManifestFilePartition(root.resolve(e.name).toString))
+        try {
+          var pos = -1L
+          while (r.next()) {
+            pos += 1
+            val row = r.get()
+            if (dv.contains(pos)) ()
+            // deleted iff the conjunction is TRUE; UNKNOWN keeps the row
+            else if (!eqHidden(row) && m.row(row)) deletedRows += 1
+            else {
+              out.write(row); kept += 1
+              stats.add(row); remap.add(pos)
+            }
           }
-        }
+        } finally r.close()
       } finally out.close()
       if (kept == e.liveRows) {
         // nothing in this file matched after all (stats were only a
@@ -4897,8 +4932,9 @@ object ManifestSink {
     deleteWhereV2(tablePath, filters.map(org.apache.spark.sql.graft.GraftBridge.toV2), gc)
 
   /** Parquet primitive a TABLE type stores as (manifest tables carry
-    * exactly these) — shared by the scan factory's widening probe and
-    * [[foreachRowPos]]'s. */
+    * exactly these) — what [[ManifestReaderFactory]]'s footer probes
+    * (widening, row-group filtering, the equality-delete pass) compare
+    * a file's physical primitive against. */
   private[sources] def expectedPrimitiveOf(dt: DataType): String = dt match {
     case LongType => "INT64"
     case IntegerType => "INT32"
@@ -4909,266 +4945,38 @@ object ManifestSink {
     case _ => "GROUP"
   }
 
-  /** Iterate every row of one committed data file with the FULL table
-    * schema — physical-name mapped and null-filled for files predating a
-    * schema change (same reconciliation as the scan). The callback
-    * receives the row's 0-based PHYSICAL position in the file (the
-    * coordinate a deletion vector indexes). */
-  private def foreachRowPos(file: Path, schema: StructType,
-      colMap: Map[String, String], evolved: Boolean)(
-      f: (InternalRow, Long) => Unit): Unit = {
-    var pos = -1L
-    val phys = schema.fieldNames.map(c => colMap.getOrElse(c, c))
-    // evolved tables probe the footer for BOTH presence and physical
-    // primitive: a file written before ALTER COLUMN TYPE stores the
-    // NARROW primitive, and the table-typed accessors the callers use
-    // (evalPredicate, the rewrite writer) would read garbage off
-    // file-typed vectors — such files must decode through the
-    // widening reader, exactly like the scan path
-    val types: Map[String, String] =
-      if (evolved || colMap.nonEmpty)
-        ManifestParquet.footerPrimitiveTypes(file.toString)
-      else phys.map(p => p -> "").toMap // "" = skip the widening check
-    def widened: Boolean = schema.fields.exists(fd =>
-      types.get(colMap.getOrElse(fd.name, fd.name)).exists(t =>
-        t.nonEmpty && t != "GROUP" && t != expectedPrimitiveOf(fd.dataType)))
-    def physSchemaOf(present: Seq[String]): StructType = {
-      val byPhys = schema.fields.map(fd =>
-        (colMap.getOrElse(fd.name, fd.name), fd)).toMap
-      StructType(present.map(p => byPhys(p).copy(name = p)))
-    }
-    if (phys.forall(types.contains)) {
-      val r =
-        if (widened) ManifestParquet.openReadWidened(file.toString,
-          physSchemaOf(phys.toSeq), returnBatches = false)
-        else ManifestParquet.openRead(file.toString, phys.toSeq,
-          returnBatches = false)
-      try while (r.nextKeyValue()) {
-        pos += 1; f(r.getCurrentValue.asInstanceOf[InternalRow], pos)
-      } finally r.close()
-    } else {
-      val present = phys.filter(types.contains)
-      val posOf = present.zipWithIndex.toMap
-      val mapping = phys.map(p => posOf.getOrElse(p, -1))
-      val view = new MappedInternalRow(mapping, schema.fields.map(_.dataType),
-        existenceDefaults(schema))
-      val r =
-        if (widened) ManifestParquet.openReadWidened(file.toString,
-          physSchemaOf(present.toSeq), returnBatches = false)
-        else ManifestParquet.openRead(file.toString, present.toSeq,
-          returnBatches = false)
-      try while (r.nextKeyValue()) {
-        view.row = r.getCurrentValue.asInstanceOf[InternalRow]; pos += 1; f(view, pos)
-      } finally r.close()
-    }
-  }
-
-  /** Runtime value of column `c` in `row`: null = SQL NULL, strings as
-    * java.lang.String, numbers boxed. */
-  private def fieldValue(row: InternalRow, schema: StructType, c: String): Any = {
-    val i = schema.fieldIndex(c)
-    if (row.isNullAt(i)) null
-    else schema.fields(i).dataType match {
-      case LongType    => row.getLong(i)
-      case IntegerType => row.getInt(i)
-      case DoubleType  => row.getDouble(i)
-      case BooleanType => row.getBoolean(i)
-      case StringType  => row.getUTF8String(i).toString
-      case other => throw new IllegalArgumentException(s"unsupported $other")
-    }
-  }
-
-  // numeric comparisons widen to double only when a double is involved;
-  // long/int compare exactly
-  private def cmpAny(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (null, _) | (_, null) => None
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(x.compareTo(y))
-    case (x: Number, y: Number) => (x, y) match {
-      case (_: java.lang.Double, _) | (_, _: java.lang.Double) |
-           (_: java.lang.Float, _) | (_, _: java.lang.Float) =>
-        Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-      case _ => Some(java.lang.Long.compare(x.longValue(), y.longValue()))
-    }
-    case _ => None
-  }
-
-  /** The V2-Predicate delete dialect: comparisons / IN / null tests /
-    * string predicates over VALUE EXPRESSIONS (column refs, literals,
-    * arithmetic `+ - * / %`, ABS, COALESCE, CAST), composed with
-    * AND/OR/NOT. Every V1 `Filter` shape arrives here through `toV2`,
-    * a null literal (an IN member, a comparand) as a NULL-typed one;
-    * arithmetic like `c % 10 = 3` has no V1 form at all. Everything
-    * outside the dialect is rejected in `canDeleteWhere`, so Spark fails
-    * the DELETE loudly at analysis rather than running it under-scoped. */
-  private[sources] def supportedDeletePredicate(
+  /** The delete dialect: a V2 `Predicate` that Spark's
+    * `V2ExpressionUtils` converts to Catalyst, that resolves against
+    * `schema` and is deterministic, and whose literals are all of a type
+    * stats pruning reads ([[v2ToV1]] hands it their raw values): BIGINT,
+    * INT, DOUBLE, FLOAT, BOOLEAN, STRING or NULL. Every V1 `Filter`
+    * shape arrives here through `toV2`; arithmetic like `c % 10 = 3` has
+    * no V1 form at all. Returns the predicate BOUND to `schema`'s
+    * ordinals ([[bindToSchema]]): evaluated over a row it gives the SQL
+    * three-valued answer (null = UNKNOWN) that `SELECT … WHERE` gives,
+    * string order, `-0.0 = 0.0` and the session's ANSI arithmetic
+    * included. None outside the dialect. */
+  private[sources] def deletePredicate(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate,
-      schema: StructType): Boolean = {
-    import org.apache.spark.sql.connector.expressions._
-    def expr(e: Expression): Boolean = e match {
-      case r: NamedReference =>
-        r.fieldNames.length == 1 && schema.fieldNames.contains(r.fieldNames.head)
-      case l: Literal[_] => l.dataType match {
+      schema: StructType): Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+    org.apache.spark.sql.catalyst.expressions.V2ExpressionUtils.toCatalyst(p)
+      .filter(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l.dataType
+      }.forall {
         case LongType | IntegerType | DoubleType | FloatType | BooleanType |
              StringType | NullType => true
         case _ => false
-      }
-      case c: Cast => (c.dataType match {
-        case LongType | IntegerType | DoubleType | StringType => true
-        case _ => false
-      }) && expr(c.expression)
-      case p2: filter.Predicate => pred(p2)
-      case g: GeneralScalarExpression => g.name match {
-        case "+" | "*" | "/" | "%" => g.children.length == 2 && g.children.forall(expr)
-        case "-" => (g.children.length == 1 || g.children.length == 2) &&
-          g.children.forall(expr)
-        case "ABS" => g.children.length == 1 && expr(g.children.head)
-        case "COALESCE" => g.children.nonEmpty && g.children.forall(expr)
-        case _ => false
-      }
-      case _ => false
-    }
-    def pred(q: filter.Predicate): Boolean = q.name match {
-      case "ALWAYS_TRUE" | "ALWAYS_FALSE" => true
-      case "AND" | "OR" =>
-        q.children.forall { case c: filter.Predicate => pred(c); case _ => false }
-      case "NOT" => q.children.head match {
-        case c: filter.Predicate => pred(c); case _ => false
-      }
-      case "IS_NULL" | "IS_NOT_NULL" => q.children.length == 1 && expr(q.children.head)
-      case "=" | "<>" | "!=" | "<=>" | "<" | "<=" | ">" | ">=" =>
-        q.children.length == 2 && q.children.forall(expr)
-      case "STARTS_WITH" | "ENDS_WITH" | "CONTAINS" =>
-        q.children.length == 2 && q.children.forall(expr)
-      case "IN" => q.children.nonEmpty && q.children.forall(expr)
-      case _ => false
-    }
-    pred(p)
-  }
+      })
+      .flatMap(bindToSchema(_, schema))
+      .filter(_.deterministic)
 
-  /** Evaluate one V2 value expression against a row. null = SQL NULL.
-    * Arithmetic follows the evaluator's non-ANSI convention: integral
-    * `/` or `%` by zero yields NULL rather than throwing (a DELETE that
-    * aborts mid-rewrite helps nobody; the CAS makes the partial work
-    * invisible either way). */
-  private def evalV2Expr(e: org.apache.spark.sql.connector.expressions.Expression,
-      row: InternalRow, schema: StructType): Any = {
-    import org.apache.spark.sql.connector.expressions._
-    def isIntegral(x: Any) = x.isInstanceOf[java.lang.Long] || x.isInstanceOf[java.lang.Integer]
-    def arith(a: Any, b: Any, lop: (Long, Long) => Any, dop: (Double, Double) => Any): Any =
-      if (a == null || b == null) null
-      else (a, b) match {
-        case (x: Number, y: Number) =>
-          if (isIntegral(a) && isIntegral(b)) lop(x.longValue(), y.longValue())
-          else dop(x.doubleValue(), y.doubleValue())
-        case _ => null
-      }
-    e match {
-      case r: NamedReference if r.fieldNames.length == 1 =>
-        fieldValue(row, schema, r.fieldNames.head)
-      case l: Literal[_] => l.dataType match {
-        case StringType => if (l.value == null) null else l.value.toString
-        case _ => l.value
-      }
-      case c: Cast =>
-        val v = evalV2Expr(c.expression, row, schema)
-        if (v == null) null
-        else (v, c.dataType) match {
-          case (n: Number, LongType) => n.longValue()
-          case (n: Number, IntegerType) => n.intValue()
-          case (n: Number, DoubleType) => n.doubleValue()
-          case (x, StringType) => x.toString
-          case _ => null
-        }
-      case p: filter.Predicate => evalPredicate(p, row, schema).orNull
-      case g: GeneralScalarExpression =>
-        def ch(i: Int) = evalV2Expr(g.children()(i), row, schema)
-        g.name match {
-          case "+" => arith(ch(0), ch(1), _ + _, _ + _)
-          case "-" if g.children.length == 1 => ch(0) match {
-            case null => null
-            case n: java.lang.Long => -n
-            case n: java.lang.Integer => -n
-            case n: Number => -n.doubleValue()
-            case _ => null
-          }
-          case "-" => arith(ch(0), ch(1), _ - _, _ - _)
-          case "*" => arith(ch(0), ch(1), _ * _, _ * _)
-          case "/" => arith(ch(0), ch(1), (a, b) => if (b == 0L) null else a / b, _ / _)
-          case "%" => arith(ch(0), ch(1), (a, b) => if (b == 0L) null else a % b, _ % _)
-          case "ABS" => ch(0) match {
-            case null => null
-            case n: java.lang.Long => math.abs(n.longValue())
-            case n: java.lang.Integer => math.abs(n.intValue())
-            case n: Number => math.abs(n.doubleValue())
-            case _ => null
-          }
-          case "COALESCE" =>
-            g.children.iterator.map(evalV2Expr(_, row, schema)).find(_ != null).orNull
-          case other => throw new IllegalArgumentException(s"unsupported expression $other")
-        }
-      case other => throw new IllegalArgumentException(s"unsupported expression $other")
-    }
-  }
-
-  /** SQL THREE-VALUED logic, faithfully: None is UNKNOWN. The DELETE
-    * contract collapses it at the top — a row is deleted iff the
-    * predicate is TRUE, so UNKNOWN keeps the row — but UNKNOWN must
-    * propagate correctly through NOT/AND/OR first (`NOT (c = 5)` over a
-    * null c is UNKNOWN, not TRUE; collapsing early would delete the
-    * null rows). */
-  private[sources] def evalPredicate(
+  /** Is `p` inside the delete dialect ([[deletePredicate]])? Everything
+    * outside it is rejected in `canDeleteWhere`, so Spark runs the
+    * DELETE as a row-level rewrite rather than under-scoped. */
+  private[sources] def supportedDeletePredicate(
       p: org.apache.spark.sql.connector.expressions.filter.Predicate,
-      row: InternalRow, schema: StructType): Option[Boolean] = {
-    import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Pred}
-    def ch(i: Int): Any = evalV2Expr(p.children()(i), row, schema)
-    def sub(i: Int): Option[Boolean] =
-      evalPredicate(p.children()(i).asInstanceOf[V2Pred], row, schema)
-    def strPred(f: (String, String) => Boolean): Option[Boolean] = (ch(0), ch(1)) match {
-      case (a: String, b: String) => Some(f(a, b))
-      case _ => None
-    }
-    p.name match {
-      case "ALWAYS_TRUE" => Some(true)
-      case "ALWAYS_FALSE" => Some(false)
-      case "AND" => (sub(0), sub(1)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true)) => Some(true)
-        case _ => None
-      }
-      case "OR" => (sub(0), sub(1)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false)) => Some(false)
-        case _ => None
-      }
-      case "NOT" => sub(0).map(!_)
-      case "IS_NULL" => Some(ch(0) == null)
-      case "IS_NOT_NULL" => Some(ch(0) != null)
-      case "=" => cmpAny(ch(0), ch(1)).map(_ == 0)
-      case "<>" | "!=" => cmpAny(ch(0), ch(1)).map(_ != 0)
-      case "<=>" =>
-        val (a, b) = (ch(0), ch(1))
-        if (a == null || b == null) Some(a == null && b == null)
-        else cmpAny(a, b).map(_ == 0)
-      case "<" => cmpAny(ch(0), ch(1)).map(_ < 0)
-      case "<=" => cmpAny(ch(0), ch(1)).map(_ <= 0)
-      case ">" => cmpAny(ch(0), ch(1)).map(_ > 0)
-      case ">=" => cmpAny(ch(0), ch(1)).map(_ >= 0)
-      case "STARTS_WITH" => strPred(_.startsWith(_))
-      case "ENDS_WITH" => strPred(_.endsWith(_))
-      case "CONTAINS" => strPred(_.contains(_))
-      case "IN" =>
-        val a = ch(0)
-        if (a == null) None
-        else {
-          val vs = (1 until p.children.length).map(ch)
-          if (vs.exists(v => v != null && cmpAny(a, v).contains(0))) Some(true)
-          else if (vs.contains(null)) None
-          else Some(false)
-        }
-      case other => throw new IllegalArgumentException(s"unsupported delete predicate $other")
-    }
-  }
+      schema: StructType): Boolean =
+    deletePredicate(p, schema).isDefined
 
   /** Per-file pruning for the V2 shape: `AND` prunes if either side
     * prunes, `OR` only if both do, and every other shape prunes through
@@ -7258,6 +7066,18 @@ case class EqDelApplied(cols: Seq[String], dataTypes: Seq[DataType],
     case (v, IntegerType) => v.toLong // compared as long row-side
     case (v, _) => v
   }).toSet
+
+  /** The typed key tuple of `row`, key component i read at `ordinals(i)`
+    * — integral keys as Long, the rest as String, the form of
+    * [[typedKeys]] — or None when a component is NULL: SQL equality
+    * never matches a NULL, so such a row is never deleted. */
+  def keyOf(row: InternalRow, ordinals: Seq[Int]): Option[Seq[Any]] =
+    if (ordinals.exists(row.isNullAt)) None
+    else Some(ordinals.lazyZip(dataTypes).map {
+      case (i, LongType) => row.getLong(i)
+      case (i, IntegerType) => row.getInt(i).toLong
+      case (i, _) => row.getUTF8String(i).toString
+    })
 }
 
 object EqDelApplied {
@@ -7371,22 +7191,8 @@ class ManifestReaderFactory(fileSchema: StructType, schema: StructType,
           while (reader.nextKeyValue()) {
             pos += 1
             val row = reader.getCurrentValue.asInstanceOf[InternalRow]
-            var nullComponent = false
-            val tuple = Seq.newBuilder[Any]
-            var i = 0
-            while (i < dts.length && !nullComponent) {
-              if (row.isNullAt(i)) nullComponent = true
-              else tuple += (dts(i) match {
-                case LongType => row.getLong(i)
-                case IntegerType => row.getInt(i).toLong
-                case _ => row.getUTF8String(i).toString
-              })
-              i += 1
-            }
-            if (!nullComponent) {
-              val t = tuple.result()
-              if (keySets.exists(_.contains(t))) out += pos
-            }
+            if (dels.head.keyOf(row, dts.indices).exists(t => keySets.exists(_.contains(t))))
+              out += pos
           }
         } finally reader.close()
       }

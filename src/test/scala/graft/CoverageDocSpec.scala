@@ -114,6 +114,35 @@ class CoverageDocSpec extends AnyFunSuite {
       "EqDelApplied must be constructed in one place, EqDelApplied.resolve")
   }
 
+  test("DELETE rows evaluate through Catalyst") {
+    // a hand-written row evaluator drifts from SELECT's semantics (one
+    // ordered strings by UTF-16 and told -0.0 from 0.0); committed files
+    // decode through the scan's reader, and CHECK and DELETE share one
+    // analyze-and-bind step
+    val src = java.nio.file.Paths.get("src/main/scala")
+    val text = java.nio.file.Files.walk(src).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).sorted
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .mkString("\n")
+    Seq("evalPredicate", "evalV2Expr", "cmpAny", "fieldValue", "foreachRowPos")
+      .foreach(d => assert(s"def $d\\b".r.findFirstIn(text).isEmpty, s"'def $d' must not occur"))
+    val sink = new String(java.nio.file.Files.readAllBytes(
+      src.resolve("graft/sources/ManifestSink.scala")), "UTF-8")
+    assert("BindReferences.bindReference".r.findAllMatchIn(sink).size == 1,
+      "CHECK and DELETE must bind through one BindReferences.bindReference call")
+  }
+
+  test("no main source file contains a NUL byte") {
+    // grep and rg treat a file with a NUL as binary and hide its matches
+    val withNul = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filter(p => java.nio.file.Files.readAllBytes(p).contains(0: Byte))
+      .map(_.toString).sorted
+    assert(withNul.isEmpty, s"NUL bytes in: ${withNul.mkString(", ")}")
+  }
+
   test("no COVERAGE.md query reference is stale") {
     // bare `qNN`/`qNNN` shorthands (q30–q33 style ranges) are prose;
     // only full `qN*_name` identifiers are checked against the registry

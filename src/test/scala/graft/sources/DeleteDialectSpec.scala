@@ -13,9 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape the delete path accepts must survive that conversion — the
   * dialect accepts it, [[ManifestSink.v2ToV1]] maps it back to the same
   * filter (so partition pruning and proofs see what the V1 path saw),
-  * and [[ManifestSink.evalPredicate]] gives the SQL three-valued answer
-  * written out below for a small row grid with nulls. No Spark session. */
+  * and the predicate bound by [[ManifestSink.deletePredicate]] gives,
+  * under Catalyst, the SQL three-valued answer written out below for a
+  * small row grid with nulls. The session analyzer does the binding. */
 class DeleteDialectSpec extends AnyFunSuite {
+  private val spark = graft.TestSpark.spark // its analyzer binds each predicate
+
   private val schema = StructType(Seq(StructField("l", LongType),
     StructField("i", IntegerType), StructField("d", DoubleType),
     StructField("s", StringType)))
@@ -31,6 +34,13 @@ class DeleteDialectSpec extends AnyFunSuite {
     row(5L, 5, 5.0, "banana"),
     row(null, null, null, null),
     row(10L, -3, -0.5, "cherry"))
+
+  /** The bound predicate's answer per row: None = UNKNOWN. */
+  private def answers(p: org.apache.spark.sql.connector.expressions.filter.Predicate,
+      schema: StructType, rows: Seq[InternalRow]): Seq[Option[Boolean]] = {
+    val bound = ManifestSink.deletePredicate(p, schema).get
+    rows.map(r => Option(bound.eval(r)).map(_.asInstanceOf[Boolean]))
+  }
 
   /** One character per row: T = TRUE, F = FALSE, N = UNKNOWN. */
   private def expect(spec: String): Seq[Option[Boolean]] = spec.map {
@@ -77,7 +87,25 @@ class DeleteDialectSpec extends AnyFunSuite {
       val p = GraftBridge.toV2(f)
       assert(ManifestSink.supportedDeletePredicate(p, schema), s"rejected: $p")
       assert(ManifestSink.v2ToV1(p).contains(f), s"$p maps back to ${ManifestSink.v2ToV1(p)}")
-      assert(rows.map(r => ManifestSink.evalPredicate(p, r, schema)) == expect(spec))
+      assert(answers(p, schema, rows) == expect(spec))
+    }
+  }
+
+  // SQL's order, not the JVM's: strings compare by UTF-8 bytes, so U+FFFD
+  // (EF BF BD) sorts below an emoji (F0 9F 98 80) although UTF-16 puts
+  // the emoji's surrogate pair (D83D DE00) first; and -0.0 = 0.0
+  private val orderSchema = StructType(Seq(StructField("s", StringType),
+    StructField("d", DoubleType)))
+  private val orderRows: Seq[InternalRow] = Seq(("a", -0.0), ("\uFFFD", 1.0),
+    ("\uD83D\uDE00", 2.0)).map { case (s, d) =>
+    new GenericInternalRow(Array[Any](UTF8String.fromString(s), d)) }
+  Seq("strings order by UTF-8 bytes" -> LessThan("s", "\uFFFD"),
+      "-0.0 equals 0.0" -> EqualTo("d", 0.0)).foreach { case (what, f) =>
+    test(s"$what, as in SELECT: accepted, maps back, evaluates") {
+      val p = GraftBridge.toV2(f)
+      assert(ManifestSink.supportedDeletePredicate(p, orderSchema), s"rejected: $p")
+      assert(ManifestSink.v2ToV1(p).contains(f), s"$p maps back to ${ManifestSink.v2ToV1(p)}")
+      assert(answers(p, orderSchema, orderRows) == expect("TFF"))
     }
   }
 

@@ -151,6 +151,57 @@ class ManifestDeleteSpec extends AnyFunSuite {
     assert(left == expect, "rewrite-path DELETE must remove exactly the matching rows")
   }
 
+  /** Rows on which SQL's order differs from the JVM's: strings compare
+    * by UTF-8 bytes, so U+FFFD sorts below the emoji although UTF-16
+    * puts the emoji's surrogate pair first; and -0.0 = 0.0. */
+  private val orderRows = Seq(("a", -0.0), ("\uFFFD", 1.0), ("\uD83D\uDE00", 2.0))
+  private lazy val orderDb: String = {
+    spark.conf.set("spark.sql.catalog.gdel4", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gdel4.warehouse", tmp().toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gdel4.db")
+    "gdel4.db"
+  }
+
+  /** SQL DELETE on a copy-on-write and a merge-on-read table, and
+    * `deleteWhere` with the V1 filter, each leave exactly the rows that
+    * `SELECT … WHERE NOT(pred) OR pred IS NULL` returned before. */
+  private def deletesAsSelectMatches(tag: String, pred: String,
+      filter: org.apache.spark.sql.sources.Filter): Unit = {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Double)] =
+      df.select("s", "d").as[(String, Double)].collect().toSet
+    val keepWhere = s"NOT($pred) OR ($pred) IS NULL"
+    // (path, rows left, rows SELECT kept) for each of the three paths
+    val sql = Seq("cow" -> "copy-on-write", "mor" -> "merge-on-read").map { case (m, mode) =>
+      val t = s"$orderDb.${m}_$tag"
+      spark.sql(s"CREATE TABLE $t (s STRING, d DOUBLE) " +
+        s"TBLPROPERTIES ('delete.mode' = '$mode')")
+      // one file: per-file string bounds would prune a lone emoji row
+      orderRows.toDF("s", "d").coalesce(1).writeTo(t).append()
+      val keep = rows(spark.table(t).where(keepWhere))
+      spark.sql(s"DELETE FROM $t WHERE $pred")
+      (s"$mode SQL DELETE", rows(spark.table(t)), keep)
+    }
+    val dir = tmp().toString
+    orderRows.toDF("s", "d").coalesce(1)
+      .write.format(fmt).option("path", dir).mode("overwrite").save()
+    def load() = spark.read.format(fmt).option("path", dir).load()
+    val keep = rows(load().where(keepWhere))
+    ManifestSink.deleteWhere(dir, Seq(filter))
+    val wrong = (sql :+ ((s"deleteWhere($filter)", rows(load()), keep)))
+      .filter { case (_, left, kept) => left != kept }
+    assert(wrong.isEmpty, s"WHERE $pred: " + wrong.map { case (path, left, kept) =>
+      s"$path left $left, SELECT kept $kept" }.mkString("; "))
+  }
+
+  test("DELETE orders strings by UTF-8 bytes, as SELECT does") {
+    deletesAsSelectMatches("s", "s < '\uFFFD'",
+      org.apache.spark.sql.sources.LessThan("s", "\uFFFD"))
+  }
+
+  test("DELETE finds -0.0 equal to 0.0, as SELECT does") {
+    deletesAsSelectMatches("d", "d = 0.0D", org.apache.spark.sql.sources.EqualTo("d", 0.0))
+  }
+
   test("SQL TRUNCATE TABLE empties the table through the delete capability") {
     val wh = tmp().toString
     spark.conf.set("spark.sql.catalog.gdel3", "graft.sources.GraftCatalog")

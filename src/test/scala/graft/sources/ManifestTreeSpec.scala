@@ -191,4 +191,16 @@ class ManifestTreeSpec extends AnyFunSuite {
     assert(live.forall(n => Files.exists(root("gc").resolve(n))),
       "live groups must survive the sweep")
   }
+
+  test("entry-group names are stable content addresses") {
+    // a group's name digests its entry lines, a NUL separator and its
+    // bloom lines: pinned so that a change to that input, which would
+    // rename every group a writer produces, shows here
+    val dir = Files.createTempDirectory("graft-mgroup")
+    dir.toFile.deleteOnExit()
+    val lines = ManifestSink.renderEntrySection(dir,
+      fakeEntries(ManifestSink.inlineThreshold + 1), Seq.empty)
+    assert(lines.filter(_.startsWith("#mgroup")).map(l =>
+      ManifestSink.parseGroupRefLine(l).name) == Seq("mgroup-42c2df497e8b6226af9d22ce.txt"))
+  }
 }
