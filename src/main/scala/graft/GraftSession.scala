@@ -13,6 +13,8 @@ object GraftSession {
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
   }
 
+  /** The local session. Its generated-class cache size is set by the
+    * extension it installs (`GraftExtensions.CodegenCacheEntries`). */
   def local(cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 
-import graft.engine.Tables
+import graft.engine.{Staging, Tables}
 import graft.plans.BpeApplyExpr
 
 /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the missing piece of
@@ -70,23 +71,19 @@ object BpeOps {
       .otherwise(array().cast("array<struct<l:string,r:string>>"))
 
   /** The greedy training loop: returns (round, left, right, count) per
-    * merge, memoized per (sfDir, rounds) so q166 and q167 share one
-    * training run per session. */
-  private val mergeMemo =
-    scala.collection.concurrent.TrieMap[(String, Int), Seq[(Int, String, String, Long)]]()
+    * merge, built once per (sfDir, rounds) so q166 and q167 share one
+    * training run per process. */
+  private val mergesTrained = new Object
 
   private[graft] def trainedMerges(s: SparkSession, dir: String,
       rounds: Int = BpeRounds): Seq[(Int, String, String, Long)] =
-    // synchronized: TrieMap.getOrElseUpdate may evaluate the op twice
-    // under contention — duplicate TRAINING runs, not corruption; the
-    // lock makes a concurrent sweep pay training once
-    mergeMemo.synchronized { mergeMemo.getOrElseUpdate((dir, rounds), {
+    Staging.once(mergesTrained, (dir, rounds)) {
       // the word table is every round's input: pin it (small — the
       // vocabulary) so rounds don't re-read and re-aggregate the corpus
       val words = wordFreq(Tables.documents(s, dir)).localCheckpoint()
       var merges = Vector.empty[(String, String)]
       val out = Vector.newBuilder[(Int, String, String, Long)]
-      for (r <- 1 to rounds) {
+      try for (r <- 1 to rounds) {
         val toks = BpeApplyExpr.bpeApply(col("word"), merges)
         val top = words
           .select(col("wc"), explode(pairCol(toks)).as("p"))
@@ -101,9 +98,9 @@ object BpeOps {
         val (l, rr, c) = (row.getString(0), row.getString(1), row.getLong(2))
         merges :+= ((l, rr))
         out += ((r, l, rr, c))
-      }
+      } finally GraftBridge.freeCheckpoint(words)
       out.result()
-    }) }
+    }
 
   val queries: Map[String, Q] = Map(
     // round-0 merge candidates: the character-bigram frequency table

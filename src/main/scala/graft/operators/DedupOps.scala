@@ -1190,8 +1190,8 @@ object DedupOps {
 
   /** Shingle sets of the docs that appear in the verified pair table —
     * staged with the pairs so downstream consumers (q90 containment)
-    * never re-scan and re-shingle the full corpus for a kilobyte-scale
-    * pair set (15s of the sf1 bench before this existed). */
+    * never re-shingle the full corpus for a kilobyte-scale pair set (15s
+    * of the sf1 bench before this existed). */
   private[graft] def pairMemberShingles(s: SparkSession, dir: String): DataFrame =
     stagedPairs(s, dir)._2
 
@@ -1215,17 +1215,31 @@ object DedupOps {
     }
   }
 
-  private def computeVerifiedNearDupPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    nearDupPairsOf(Tables.documents(s, dir))
+  /** The verified pairs of the corpus and their members' shingle sets,
+    * both localCheckpoints of near-dup-fraction-sized tables. Only the
+    * members are shingled again: a semi-join of `documents` with the
+    * member ids, so q90 never re-shingles the full corpus. */
+  private def computeVerifiedNearDupPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, dir)
+    val verified = nearDupPairsOf(docs)
+    val members = verified.select(col("doc_a").as("doc_id"))
+      .union(verified.select(col("doc_b").as("doc_id")))
+      .distinct()
+    val memberShingles = joinIds(docs, members, "doc_id")
+      .select(col("doc_id"),
+        graft.plans.ShinglesExpr.shinglesNative(col("text"), ShingleN).as("shingles"))
+      .localCheckpoint()
+    (verified, memberShingles)
+  }
 
   /** The full MinHash/LSH near-dup pipeline over an ARBITRARY
     * (doc_id, text) frame — factored from the dir-staged path so the
     * composed pipeline (q117) can near-dup its line-cleaned survivors
-    * with the identical algebra. Returns (verified pairs, pair-member
-    * shingle sets); both are localCheckpoints of near-dup-fraction-
-    * sized tables. */
+    * with the identical algebra. Returns the verified pairs
+    * (doc_a, doc_b, inter, uni, jac_bp), a localCheckpoint of a
+    * near-dup-fraction-sized table. */
   private[graft] def nearDupPairsOf(docs: DataFrame,
-      transient: Boolean = false): (DataFrame, DataFrame) = {
+      transient: Boolean = false): DataFrame = {
     // transient = true registers every internal checkpoint in the
     // harness's transient scope (q117's per-call use); the SESSION-staged
     // memo path keeps the default — a freed checkpoint cannot recompute.
@@ -1271,15 +1285,8 @@ object DedupOps {
       .filter(col("inter") * 2 >= col("uni"))
       .withColumn("jac_bp", expr("inter * 10000L div uni"))
       .transform(cp) // eager: materializes the small pair set now
-    // stage the pair members' shingles while `sets` is still cached: the
-    // member set is tiny (near-dup fraction), so this join is one cheap
-    // probe of the cache, and q90 never touches `documents` again
-    val members = verified.select(col("doc_a").as("doc_id"))
-      .union(verified.select(col("doc_b").as("doc_id")))
-      .distinct()
-    val memberShingles = cp(sets.join(members, "doc_id"))
     sets.unpersist()
-    (verified, memberShingles)
+    verified
   }
 
   /** Min-label propagation over the verified near-dup pair graph to a
@@ -1444,7 +1451,7 @@ object DedupOps {
       case Some(t) if scala.util.Try { t._1.take(1); t._2.take(1) }.isSuccess => t
       case _ =>
         val standing = labelsFor(corpus.select("doc_id"),
-          nearDupPairsOf(corpus)._1.select("doc_a", "doc_b")).localCheckpoint()
+          nearDupPairsOf(corpus).select("doc_a", "doc_b")).localCheckpoint()
         val t = (standing, sigBands(corpus))
         clusterStateCache.put((s, dir), t)
         t
@@ -1456,7 +1463,7 @@ object DedupOps {
       staged: Option[(DataFrame, DataFrame)] = None): (DataFrame, DataFrame, DataFrame) = {
     val (standing, cBands) = staged.getOrElse {
       (labelsFor(corpus.select("doc_id"),
-        nearDupPairsOf(corpus)._1.select("doc_a", "doc_b")).localCheckpoint(),
+        nearDupPairsOf(corpus).select("doc_a", "doc_b")).localCheckpoint(),
         sigBands(corpus))
     }
     val bBands = sigBands(batch, transient = true)

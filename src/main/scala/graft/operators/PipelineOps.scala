@@ -324,7 +324,7 @@ object PipelineOps {
         graft.plans.GopherKeepExpr.gopherKeep(col("text"), stops) &&
           graft.plans.RepKeepExpr.repKeep(col("text"))))
       // S3: near-dup removal among the gated survivors (cleaned text)
-      val losers = DedupOps.nearDupPairsOf(gated, transient = true)._1
+      val losers = DedupOps.nearDupPairsOf(gated, transient = true)
         .select(col("doc_b").as("doc_id")).distinct()
       val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
       // S4: decontamination — eval stratum out, verbatim + semantic leaks out

@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** Session extension wiring for the engine's native expressions: makes
   * `graft_dot(a, b)` / `graft_cosine(a, b)` first-class SQL functions.
@@ -11,9 +13,20 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * (or `builder.withExtensions(new GraftExtensions)`); the Column-API
   * helpers on [[FloatVectorDot]] work without any registration.
+  *
+  * It also sizes Spark's JVM-wide generated-class cache
+  * ([[GraftExtensions.CodegenCacheEntries]]) and keeps codegen stage ids
+  * out of generated class names, so a plan that repeats over new input
+  * compiles its classes once per process. A user's explicit setting of
+  * either conf wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftBridge.defaultConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheEntries.toString)
+    // a whole-stage class named after its codegen stage id misses the
+    // cache whenever adaptive execution numbers the same stage differently
+    GraftBridge.defaultConf(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, "false")
     // optimizer tier: portable HOF dot-product pattern -> native codegen
     ext.injectOptimizerRule(_ => NativeVectorDotRule)
     // SQL views on the DSv2 catalog (GraftViews): commands rewrite and
@@ -88,4 +101,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           Multiply(Sqrt(FloatVectorDot(a, a)), Sqrt(FloatVectorDot(b, b))))
       }))
   }
+}
+
+object GraftExtensions {
+  /** Entries in Spark's generated-class cache,
+    * `spark.sql.codegen.cache.maxEntries` (Spark's default is 100).
+    * `CodeGenerator` reads the size once, at the JVM's first code
+    * generation, and every session shares the cache. One q117+q221
+    * pipeline pass generates about 262 distinct classes, so at 100 a
+    * cron-style loop recompiled all of them on every pass; 300 holds one
+    * pass with headroom. The 39 ingest queries generate about 433, but
+    * each cached class keeps about 30 KB of heap, and a cache that held
+    * all of them raised the interactive benchmark's live heap by 10 %.
+    * PERF.md "Generated-class cache" has the measurements. */
+  val CodegenCacheEntries = 300
 }

@@ -147,7 +147,7 @@ object ClusterIndexMaintenance {
       val snap = s.table(s"$catalog.$srcIdent")
         .select(col("doc_id"), col("text")).localCheckpoint()
       MinHashIndexMaintenance.bandRows(snap).writeTo(s"$catalog.$bandIdent").append()
-      val edges = knownEdges.getOrElse(DedupOps.nearDupPairsOf(snap)._1)
+      val edges = knownEdges.getOrElse(DedupOps.nearDupPairsOf(snap))
         .select("doc_a", "doc_b").localCheckpoint()
       edges.writeTo(s"$catalog.$edgeIdent").append()
       DedupOps.labelsFor(snap.select("doc_id"), edges)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** The engine's CLI entry point — the analog of the reference's
@@ -9,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * verbatim+semantic decontamination → BPE sequence packing) against a
   * table directory, publish the result through the atomically-committed
   * ManifestSink, and print one JSON line with the observe()-collected
-  * stage metrics.
+  * stage metrics and `classes_compiled`, the number of classes Spark's
+  * code generator compiled during the run (0 when every plan class was
+  * already in its cache).
   *
   * Usage: runMain graft.tools.RunPipeline <sfDir> <outDir>
   */
@@ -25,6 +28,7 @@ object RunPipeline {
     * it against a shared session). */
   def run(spark: SparkSession, sfDir: String, outDir: String): String = {
     val t0 = System.nanoTime()
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val df = graft.operators.PipelineOps.queries("q117_corpus_pipeline")(spark, sfDir)
     // observe() metrics attach to THIS DataFrame's OWN QueryExecution —
     // the write (and even a count()) plan separate executions, so
@@ -40,10 +44,11 @@ object RunPipeline {
     val decontam = df.queryExecution.observedMetrics("pipeline_decontam")
     val pack = df.queryExecution.observedMetrics("pipeline_pack")
     val secs = (System.nanoTime() - t0) / 1e9
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
     f"""{"pipeline":"corpus","sf_dir":"$sfDir","out":"$outDir",""" +
       s""""docs_surviving":${decontam.getAs[Long]("docs_surviving")},""" +
       s""""span_rows":${pack.getAs[Long]("span_rows")},""" +
       s""""tokens_packed":${pack.getAs[Long]("tokens_packed")},""" +
-      f""""seq_rows":$shards,"sec":$secs%.2f}"""
+      f""""seq_rows":$shards,"sec":$secs%.2f,"classes_compiled":$compiled}"""
   }
 }

@@ -28,6 +28,14 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], p)
 
+  /** Set a SQL conf on the active SparkContext unless the user already
+    * set it. Session extensions are applied after the context exists and
+    * before the session's SharedState/SQLConf is built, which copy the
+    * context's conf, so a call from an extension reaches the session it
+    * extends, static confs included. No-op when no context is active. */
+  def defaultConf(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
+
   /** Cancel every active job carrying `tag`; returns once the scheduler
     * has failed them (SparkContext.cancelJobsWithTag only posts the
     * request). */

@@ -133,6 +133,21 @@ class CoverageDocSpec extends AnyFunSuite {
       "CHECK and DELETE must bind through one BindReferences.bindReference call")
   }
 
+  test("the generated-class cache is sized in one main source file") {
+    // Spark reads the size once per JVM, so two sites would race for it
+    val naming = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        src.contains("spark.sql.codegen.cache.maxEntries") ||
+          src.contains("CODEGEN_CACHE_MAX_ENTRIES")
+      }
+      .map(_.toString).sorted
+    assert(naming == Seq("src/main/scala/graft/plans/GraftExtensions.scala"),
+      s"files naming the codegen cache size: ${naming.mkString(", ")}")
+  }
+
   test("no main source file contains a NUL byte") {
     // grep and rg treat a file with a NUL as binary and hide its matches
     val withNul = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq

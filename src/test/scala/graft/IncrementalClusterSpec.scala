@@ -45,7 +45,7 @@ class IncrementalClusterSpec extends AnyFunSuite {
     // from-scratch over the union corpus via the same label algebra
     val all = corpus.unionAll(batch)
     val fromScratch = DedupOps.labelsFor(all.select("doc_id"),
-        DedupOps.nearDupPairsOf(all)._1.select("doc_a", "doc_b"))
+        DedupOps.nearDupPairsOf(all).select("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == fromScratch,
       s"incremental fold diverged from from-scratch labels: $got vs $fromScratch")

@@ -105,6 +105,24 @@ class OperatorSpec extends AnyFunSuite {
     assert(exact.filter(col("est_bp") =!= 10000L).count() == 0)
   }
 
+  test("staged pair-member shingles are the shingle sets of exactly the verified pairs' members") {
+    val pairs = DedupOps.verifiedNearDupPairs(spark, sfDir)
+    val members = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    // the HOF twin of the native shingle kernel, as a sorted set
+    val expected = graft.engine.Tables.documents(spark, sfDir)
+      .join(members, "doc_id")
+      .select(col("doc_id"),
+        sort_array(graft.functions.GraftFunctions.shingleSet(col("text"), DedupOps.ShingleN)))
+      .as[(Long, Seq[String])].collect().toMap
+    val staged = DedupOps.pairMemberShingles(spark, sfDir)
+      .select(col("doc_id"), sort_array(col("shingles")))
+      .as[(Long, Seq[String])].collect()
+    assert(expected.nonEmpty, "the fixture has no verified near-dup pair — nothing was checked")
+    assert(staged.length == expected.size, "one staged row per member")
+    assert(staged.toMap == expected)
+  }
+
   test("candidate-doc semi-join is size-gated: shuffle plan past the id threshold, identical rows") {
     val docs = graft.engine.Tables.documents(spark, sfDir)
     val ids = docs.select("doc_id").filter(col("doc_id") % 7 === 0)

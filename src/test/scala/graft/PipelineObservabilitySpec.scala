@@ -47,7 +47,7 @@ class PipelineObservabilitySpec extends AnyFunSuite {
       .filter(col("keep")).select("doc_id")
     val gated = cleaned.join(gKeep, "doc_id").join(rKeep, "doc_id")
       .localCheckpoint()
-    val losers = graft.operators.DedupOps.nearDupPairsOf(gated)._1
+    val losers = graft.operators.DedupOps.nearDupPairsOf(gated)
       .select(col("doc_b").as("doc_id")).distinct()
     val train = gated.join(losers, Seq("doc_id"), "left_anti")
       .filter(col("doc_id") % 5 =!= 0)

@@ -39,7 +39,7 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
   /** From-scratch ground truth over the given survivors. */
   private def fromScratch(docs: DataFrame): Set[(Long, Long)] =
     DedupOps.labelsFor(docs.select("doc_id"),
-        DedupOps.nearDupPairsOf(docs)._1.select("doc_a", "doc_b"))
+        DedupOps.nearDupPairsOf(docs).select("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   /** doc_ids of label rows APPENDED by commits in (vFrom, vTo] — the

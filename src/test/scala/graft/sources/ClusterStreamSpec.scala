@@ -49,7 +49,7 @@ class ClusterStreamSpec extends AnyFunSuite {
 
   private def fromScratch(docs: DataFrame): Set[(Long, Long)] =
     DedupOps.labelsFor(docs.select("doc_id"),
-        DedupOps.nearDupPairsOf(docs)._1.select("doc_a", "doc_b"))
+        DedupOps.nearDupPairsOf(docs).select("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   // three g-near-dups arriving across different micro-batches (the
