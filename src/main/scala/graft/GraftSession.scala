@@ -25,7 +25,9 @@ object GraftSession {
       // sf3+ (the r15 sf10 spot-check's q190 5.2x reading; one bench
       // session recorded q190/q196 OOM at sf3 under accumulated state).
       // At cluster scale this IS the documented knob; adaptive initial
-      // sizing is its data-proportional form.
+      // sizing is its data-proportional form. A persisted frame coalesces
+      // too only because the extension allows it (PERF.md "Cached
+      // reports and AQE headroom").
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")

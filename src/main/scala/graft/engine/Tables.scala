@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 
 /** Fixture-table loaders for the TPC-H-ish star schema plus the
   * `events` / `documents` / `embeddings` tables described in
@@ -24,12 +25,15 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(all.contains(name), s"unknown fixture table: $name (expected one of ${all.mkString(", ")})")
-    if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    if (name == "events") events(spark, sfDir) else rawScan(spark, sfDir, name)
   }
 
-  private def rawScan(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `spark.read.parquet` with the schema read from the footer on the
+    * driver, so a load launches no schema-inference job. */
+  private def rawScan(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(GraftBridge.parquetSchema(spark, path)).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = rawScan(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = rawScan(spark, sfDir, "orders")

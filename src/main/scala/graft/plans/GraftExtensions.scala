@@ -17,8 +17,11 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * It also sizes Spark's JVM-wide generated-class cache
   * ([[GraftExtensions.CodegenCacheEntries]]) and keeps codegen stage ids
   * out of generated class names, so a plan that repeats over new input
-  * compiles its classes once per process. A user's explicit setting of
-  * either conf wins.
+  * compiles its classes once per process. And it lets a persisted frame
+  * keep adaptive execution's final-stage coalescing, so a cached small
+  * report is one partition, not the 8 x cores that shuffles start with
+  * (PERF.md "Cached reports and AQE headroom"). A user's explicit setting
+  * of any of these confs wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,6 +30,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a whole-stage class named after its codegen stage id misses the
     // cache whenever adaptive execution numbers the same stage differently
     GraftBridge.defaultConf(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, "false")
+    // without it CacheManager plans every persisted frame with the final
+    // stage's coalescing off, so a cached report keeps all its shuffle's
+    // initial partitions (8 x cores) through collect, publish and read-back
+    GraftBridge.defaultConf(SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING.key, "true")
     // optimizer tier: portable HOF dot-product pattern -> native codegen
     ext.injectOptimizerRule(_ => NativeVectorDotRule)
     // SQL views on the DSv2 catalog (GraftViews): commands rewrite and

@@ -2527,7 +2527,7 @@ object ManifestSink {
   /** Entry line: `fileName<TAB>rowCount<TAB>mins<TAB>maxs`. The first
     * line of a manifest is the schema and is skipped, as are
     * `#`-prefixed marker lines. */
-  private[sources] def committedEntries(root: Path,
+  private[graft] def committedEntries(root: Path,
       pinned: Option[Long] = None, withBlooms: Boolean = true): Seq[FileEntry] = {
     val v = resolveVersion(root, pinned)
     if (v > 0L) {

@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * verbatim+semantic decontamination → BPE sequence packing) against a
   * table directory, publish the result through the atomically-committed
   * ManifestSink, and print one JSON line with the observe()-collected
-  * stage metrics and `classes_compiled`, the number of classes Spark's
+  * stage metrics, `classes_compiled`, the number of classes Spark's
   * code generator compiled during the run (0 when every plan class was
-  * already in its cache).
+  * already in its cache), and `data_files`, the data files the published
+  * version commits (read from the manifest, no Spark job).
   *
   * Usage: runMain graft.tools.RunPipeline <sfDir> <outDir>
   */
@@ -45,10 +46,11 @@ object RunPipeline {
     val pack = df.queryExecution.observedMetrics("pipeline_pack")
     val secs = (System.nanoTime() - t0) / 1e9
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    val files = graft.sources.ManifestSink.committedEntries(java.nio.file.Paths.get(outDir)).size
     f"""{"pipeline":"corpus","sf_dir":"$sfDir","out":"$outDir",""" +
       s""""docs_surviving":${decontam.getAs[Long]("docs_surviving")},""" +
       s""""span_rows":${pack.getAs[Long]("span_rows")},""" +
       s""""tokens_packed":${pack.getAs[Long]("tokens_packed")},""" +
-      f""""seq_rows":$shards,"sec":$secs%.2f,"classes_compiled":$compiled}"""
+      f""""seq_rows":$shards,"sec":$secs%.2f,"classes_compiled":$compiled,"data_files":$files}"""
   }
 }

@@ -148,6 +148,20 @@ class CoverageDocSpec extends AnyFunSuite {
       s"files naming the codegen cache size: ${naming.mkString(", ")}")
   }
 
+  test("cached-plan output partitioning is allowed in one main source file") {
+    val naming = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        src.contains("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") ||
+          src.contains("CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING")
+      }
+      .map(_.toString).sorted
+    assert(naming == Seq("src/main/scala/graft/plans/GraftExtensions.scala"),
+      s"files naming the cached-plan partitioning conf: ${naming.mkString(", ")}")
+  }
+
   test("no main source file contains a NUL byte") {
     // grep and rg treat a file with a NUL as binary and hide its matches
     val withNul = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
