@@ -47,7 +47,8 @@ def step_medians(raw):
         med[n] = statistics.median(
             sum(v for k, v in o["steps"].items() if k == n or k.startswith(n + "."))
             for o in ops)
-    med["tail_s"] = sum(med.get(n, 0.0) for n in TAIL)
+    if any(n in med for n in TAIL):
+        med["tail_s"] = sum(med.get(n, 0.0) for n in TAIL)
     return med
 
 

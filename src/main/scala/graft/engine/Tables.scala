@@ -1,8 +1,13 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders for the TPC-H-ish star schema plus the
   * `events` / `documents` / `embeddings` tables described in
@@ -32,7 +37,32 @@ object Tables {
     * driver, so a load launches no schema-inference job. */
   private def rawScan(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    spark.read.schema(GraftBridge.parquetSchema(spark, path)).parquet(path)
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * from one footer: the file's own, or for a directory its first data
+    * file's in name order (names starting `_` or `.` are not data).
+    * Spark's inference without `mergeSchema` (off by default) also reads
+    * a single footer, but inside a job. The footer goes through Spark's
+    * own footer-to-schema conversion under the session's conf, so the
+    * row-metadata schema Spark writes, `nanosAsLong` and the other
+    * converter settings apply as in inference. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val st = fs.getFileStatus(root)
+    val file = if (!st.isDirectory) st else {
+      val data = fs.listStatus(root).filter(f => f.isFile &&
+        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      require(data.nonEmpty, s"no parquet data file in $path")
+      data.minBy(_.getPath.getName)
+    }
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = rawScan(spark, sfDir, "lineitem")

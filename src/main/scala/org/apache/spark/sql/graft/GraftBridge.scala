@@ -36,37 +36,6 @@ object GraftBridge {
   def defaultConf(key: String, value: String): Unit =
     org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 
-  /** The schema `spark.read.parquet(path)` infers, read on the driver
-    * from one footer: the file's own, or for a directory its first data
-    * file's in name order (names starting `_` or `.` are not data).
-    * Spark's inference without `mergeSchema` (off by default) also reads
-    * a single footer, but inside a job; this reads it in place and
-    * converts it with Spark's own footer-to-schema path under the
-    * session's conf, so the row-metadata schema Spark writes,
-    * `nanosAsLong` and the other converter settings apply as in
-    * inference. */
-  def parquetSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    val conf = state.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val st = fs.getFileStatus(root)
-    val file = if (!st.isDirectory) st else {
-      val data = fs.listStatus(root).filter(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      require(data.nonEmpty, s"no parquet data file in $path")
-      data.minBy(_.getPath.getName)
-    }
-    val meta = ParquetFooterReader.readFooter(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
-      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-    ParquetFileFormat.readSchemaFromFooter(
-      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
-      new ParquetToSparkSchemaConverter(state.conf))
-  }
-
   /** Cancel every active job carrying `tag`; returns once the scheduler
     * has failed them (SparkContext.cancelJobsWithTag only posts the
     * request). */

@@ -133,31 +133,27 @@ class CoverageDocSpec extends AnyFunSuite {
       "CHECK and DELETE must bind through one BindReferences.bindReference call")
   }
 
-  test("the generated-class cache is sized in one main source file") {
-    // Spark reads the size once per JVM, so two sites would race for it
-    val naming = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
+  /** Files under src/main whose text contains any of `needles`, sorted. */
+  private def mainFilesNaming(needles: String*): Seq[String] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(java.nio.file.Files.isRegularFile(_))
       .filter { p =>
         val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        src.contains("spark.sql.codegen.cache.maxEntries") ||
-          src.contains("CODEGEN_CACHE_MAX_ENTRIES")
+        needles.exists(src.contains)
       }
       .map(_.toString).sorted
+
+  test("the generated-class cache is sized in one main source file") {
+    // Spark reads the size once per JVM, so two sites would race for it
+    val naming = mainFilesNaming("spark.sql.codegen.cache.maxEntries", "CODEGEN_CACHE_MAX_ENTRIES")
     assert(naming == Seq("src/main/scala/graft/plans/GraftExtensions.scala"),
       s"files naming the codegen cache size: ${naming.mkString(", ")}")
   }
 
   test("cached-plan output partitioning is allowed in one main source file") {
-    val naming = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).toArray.toSeq
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .filter { p =>
-        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        src.contains("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") ||
-          src.contains("CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING")
-      }
-      .map(_.toString).sorted
+    val naming = mainFilesNaming("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+      "CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING")
     assert(naming == Seq("src/main/scala/graft/plans/GraftExtensions.scala"),
       s"files naming the cached-plan partitioning conf: ${naming.mkString(", ")}")
   }

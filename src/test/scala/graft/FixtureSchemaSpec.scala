@@ -7,7 +7,6 @@ import scala.util.Try
 
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graft.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Tables
@@ -60,7 +59,7 @@ class FixtureSchemaSpec extends AnyFunSuite {
     val prior = spark.conf.getOption(NanosAsLong)
     try for (nanos <- Seq("true", "false"); p <- paths) {
       spark.conf.set(NanosAsLong, nanos)
-      assert(outcome(spark.read.schema(GraftBridge.parquetSchema(spark, p)).parquet(p).schema) ==
+      assert(outcome(spark.read.schema(Tables.footerSchema(spark, p)).parquet(p).schema) ==
         outcome(spark.read.parquet(p).schema), s"$p, nanosAsLong=$nanos")
     } finally prior.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
   }
