@@ -4363,18 +4363,7 @@ object ManifestSink {
         }
       } finally r.close()
     }
-    val commits = w.commit() match {
-      case ManifestCommitSet(cs) => cs
-      case c: ManifestCommit => Seq(c)
-      case _ => Seq.empty
-    }
-    commits.filter(_.rows == 0L)
-      .foreach(c => Files.deleteIfExists(root.resolve(c.fileName)))
-    val migrated0 = commits.filter(_.rows > 0L).map(c =>
-      FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
-        blooms = c.blooms, slows = c.slows, sups = c.sups, specId = st.specId,
-        ndvs = c.ndvs, nulls = c.nulls, sorted = c.sorted, ndvSk = c.ndvSk,
-        qsk = c.qsk))
+    val migrated0 = commitEntries(Seq(w.commit())).map(_.copy(specId = st.specId))
     // the layout migration re-routes rows across files: a non-preserving
     // rewrite, so migrated rows are NEW rows to lineage (fresh ids)
     val (migrated, nextRid) =
@@ -4512,13 +4501,7 @@ object ManifestSink {
           s"data-zorder-p$pid-${java.util.UUID.randomUUID()}.parquet", fileParts,
           cmap, bc, rgb, quantCols = qc)
         rows.foreach(w.write)
-        w.commit() match {
-          case m: ManifestCommit if m.rows > 0L => Iterator.single(m)
-          case m: ManifestCommit =>
-            Files.deleteIfExists(Paths.get(rootStr).resolve(m.fileName))
-            Iterator.empty
-          case _ => Iterator.empty
-        }
+        w.commitFile().iterator
       }.collect().toSeq.map(c => FileEntry(c.fileName, c.rows, c.mins, c.maxs, c.parts,
         blooms = c.blooms, slows = c.slows, sups = c.sups, specId = st.specId,
         ndvs = c.ndvs, nulls = c.nulls, sorted = c.sorted, ndvSk = c.ndvSk,
@@ -5337,7 +5320,8 @@ case class ManifestCommit(fileName: String, rows: Long,
     qsk: Map[String, String] = Map.empty) extends WriterCommitMessage
 
 /** A partition-fanout task's commit: one [[ManifestCommit]] per data
-  * file it opened (one per distinct partition tuple it received). */
+  * file it opened (one per distinct partition tuple it received). A task
+  * that received no rows opened no file and commits the empty set. */
 case class ManifestCommitSet(commits: Seq[ManifestCommit]) extends WriterCommitMessage
 
 class ManifestBatchWrite(root: Path, schema: StructType, truncateFirst: Boolean,
@@ -5481,15 +5465,8 @@ class ManifestReplaceDataWrite(root: Path, schema: StructType,
     new ManifestReplaceWriterFactory(root.toString, schema, partCols, colMap,
       bloomCols, rowGroupBytes, partSpec, quantCols)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (live0, empty) = ManifestSink.commitEntries(messages).partition(_.rows > 0L)
-    val live = live0.map(_.copy(specId = specId))
-    // a task whose every row was deleted (or that received no rows from
-    // the rewrite) leaves a footer-only file: drop it instead of
-    // publishing an entry that would cost a scan partition forever
-    empty.foreach(e => Files.deleteIfExists(root.resolve(e.name)))
-    op.commitReplace(live)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    op.commitReplace(ManifestSink.commitEntries(messages).map(_.copy(specId = specId)))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     ManifestSink.commitFileNames(messages)
@@ -5697,8 +5674,7 @@ class PartitionedDataWriter(rootStr: String, schema: StructType,
   }
 
   override def commit(): WriterCommitMessage =
-    ManifestCommitSet(writers.values.map(
-      _.commit().asInstanceOf[ManifestCommit]).toSeq)
+    ManifestCommitSet(writers.values.flatMap(_.commitFile()).toSeq)
   override def abort(): Unit = writers.values.foreach(_.abort())
   override def close(): Unit = writers.values.foreach(_.close())
 }
@@ -5890,7 +5866,9 @@ class ManifestDataWriter(rootStr: String, schema: StructType, fileName: String,
   // are physical).
   private val stats =
     new ManifestSink.FileStatsCollector(schema, bloomCols, sortCols, quantCols)
-  private lazy val out = {
+  // opened by the first row: a task that receives no rows writes no file
+  private var out: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+  private def open(): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     Files.createDirectories(root)
     // data files carry PHYSICAL column names — immutable across renames
     val phys = ManifestSink.toPhysicalSchema(schema, colMap)
@@ -5898,19 +5876,23 @@ class ManifestDataWriter(rootStr: String, schema: StructType, fileName: String,
       ManifestParquet.open(root.resolve(fileName), phys, b))
   }
   override def write(record: InternalRow): Unit = {
+    if (out == null) out = open()
     out.write(record)
     lineageCell.foreach(noteLineage) // position = rows, pre-increment
     rows += 1
     stats.add(record)
   }
-  override def commit(): WriterCommitMessage = {
-    out.close() // forces creation even for an empty task: footer-only file
+  /** The file's entry, or None when no row arrived (no file exists). */
+  def commitFile(): Option[ManifestCommit] = Option(out).map { w =>
+    w.close()
     ManifestCommit(fileName, rows, stats.intMins, stats.intMaxs, parts,
       stats.blooms, stats.strLowers, stats.strUppers,
       stats.intNdvs, stats.nullCounts, stats.sortedBy, capturedLineage,
       stats.ndvSketches, stats.quantSketches)
   }
-  override def abort(): Unit = {
+  override def commit(): WriterCommitMessage =
+    commitFile().getOrElse(ManifestCommitSet(Seq.empty))
+  override def abort(): Unit = if (out != null) {
     try out.close() catch { case _: Throwable => () }
     Files.deleteIfExists(root.resolve(fileName))
   }

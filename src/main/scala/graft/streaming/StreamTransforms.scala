@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.GraftFunctions.cents
 
@@ -163,23 +163,6 @@ object StreamTransforms {
         coalesce(col("purchase_us") - col("click_us"), lit(-1L)).as("lag_us"))
   }
 
-  /** The SAME running totals on the new Spark 4 arbitrary-state API
-    * (`transformWithState`): typed ValueState per key, explicit
-    * TTL/time-mode control, RocksDB-backed. Functionally identical to
-    * [[runningTotals]]; kept side by side so both state APIs stay
-    * covered — new pipelines should prefer this one (finer state
-    * schema evolution + TTL without timeouts). */
-  def runningTotalsTws(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    prepared(events)
-      .select(col("user_id"), col("v_cents"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new TotalsProcessor, TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "n_events", "sum_cents")
-  }
-
   /** Stream-static join: enrich the event stream with the (slowly
     * changing) customer→nation dimension, then aggregate per nation. The
     * static side is re-planned per micro-batch by Structured Streaming
@@ -208,27 +191,4 @@ object StreamTransforms {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(unix_micros(col("w.start")).as("win_us"), col("event_type"), col("n_events"))
-}
-
-/** StatefulProcessor for [[StreamTransforms.runningTotalsTws]]: two longs
-  * of ValueState per key — state bounded by key cardinality, never by
-  * stream length. Top-level class: processors are serialized to tasks. */
-class TotalsProcessor
-    extends StatefulProcessor[Long, (Long, Long), (Long, Long, Long)] {
-
-  @transient private var totals: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[(Long, Long)](
-      "totals", Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-    val (n0, s0) = if (totals.exists()) totals.get() else (0L, 0L)
-    var n = n0
-    var s = s0
-    rows.foreach { case (_, c) => n += 1; s += c }
-    totals.update((n, s))
-    Iterator.single((key, n, s))
-  }
 }

@@ -177,4 +177,15 @@ class CoverageDocSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"COVERAGE.md references retired/unknown queries: ${stale.mkString(", ")}")
   }
+
+  test("graft.streaming holds only the product's stream surfaces") {
+    // ReportStream is the cron tick; StreamTransforms serves the
+    // streaming twin queries. A stream driver or a second state API
+    // that no query, main or workload runs is spec-only code.
+    val dir = new java.io.File("src/main/scala/graft/streaming")
+    assert(dir.list().toSeq.sorted == Seq("ReportStream.scala", "StreamTransforms.scala"),
+      s"graft.streaming holds ${dir.list().toSeq.sorted.mkString(", ")}")
+    val naming = mainFilesNaming("transformWithState", "StatefulProcessor")
+    assert(naming.isEmpty, s"files naming the state API v2: ${naming.mkString(", ")}")
+  }
 }

@@ -176,4 +176,29 @@ class ManifestSinkSpec extends AnyFunSuite {
       .rdd.getNumPartitions == 8)
     finally spark.conf.unset("graft.scan.bin-rows")
   }
+
+  test("a task that receives no rows publishes no data file") {
+    val dir = tmp()
+    def entries = graft.sources.ManifestSink.committedEntries(dir)
+    // 2 rows over 8 partitions: most write tasks receive nothing
+    val sparse = spark.range(0, 10).repartition(8).filter(col("id") < 2)
+    val nonEmpty = sparse.rdd.mapPartitions(it => Iterator(it.hasNext))
+      .collect().count(identity)
+    sparse.write.format(fmt).option("path", dir.toString).mode("overwrite").save()
+    assert(entries.size == nonEmpty && nonEmpty < 8,
+      s"${entries.size} entries for $nonEmpty non-empty partitions")
+    assert(entries.map(_.rows).sum == 2L && entries.forall(_.rows > 0L))
+    val onDisk = Files.list(dir).toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString)
+      .filter(_.startsWith("data-")).toSet
+    assert(onDisk == entries.map(_.name).toSet, s"data files outside the manifest: $onDisk")
+    // an overwrite whose every task is empty commits a version with no
+    // entries; the table keeps its schema
+    spark.range(0, 10).repartition(8).filter(col("id") < 0)
+      .write.format(fmt).option("path", dir.toString).mode("overwrite").save()
+    assert(entries.isEmpty, s"an all-empty overwrite committed ${entries.size} entries")
+    val back = spark.read.format(fmt).option("path", dir.toString).load()
+    assert(back.count() == 0)
+    assert(back.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> org.apache.spark.sql.types.LongType))
+  }
 }

@@ -1,16 +1,21 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MultimodalOps
+import graft.sources.PhashIndexMaintenance
 
 /** Perceptual-hash media near-dup (q211): the 64-bit aHash over the
   * grid-structured synthetic media recovers planted noised AND resized
   * twins, negative controls stay clean, the resized twin carries REAL
   * resampling error (the round-13 negative result's bar: no baked-equal
-  * roundtrip), and Hamming-band LSH is pigeonhole-lossless below the
-  * band count. */
+  * roundtrip), Hamming-band LSH is pigeonhole-lossless below the
+  * band count, and the maintained index (q215) stays bit-identical to a
+  * from-scratch build window by window. */
 class MediaPhashSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
   import spark.implicits._
@@ -95,5 +100,49 @@ class MediaPhashSpec extends AnyFunSuite {
       "the maintained verdict must be q211's minus every pair touching doc 10")
     assert(maintained.exists(r => r._1 == 11L && r._2 == 12L),
       "the surviving twin pair (11, 12) must remain")
+  }
+
+  test("q215 refreshCdc equals a from-scratch build after every window") {
+    val wh = Files.createTempDirectory("graft-phm")
+    wh.toFile.deleteOnExit()
+    spark.conf.set("spark.sql.catalog.phmcat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.phmcat.warehouse", wh.toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS phmcat.db")
+    spark.sql("CREATE TABLE phmcat.db.src (doc_id BIGINT, px ARRAY<BIGINT>)")
+    PhashIndexMaintenance.createIndex(spark, "phmcat", "db.src", "db.hash", "db.band")
+    // a sorted multiset: a window applied twice shows as duplicate rows
+    def rows(df: DataFrame): Seq[String] = df.collect()
+      .map(_.toSeq.map {
+        case xs: Seq[_] => xs.mkString(",")
+        case x => String.valueOf(x)
+      }.mkString("|")).toSeq.sorted
+    // deterministic 64-pixel scene per id; `tweak` moves one pixel by a
+    // small step (a near-dup within the Hamming threshold)
+    def scene(k: Long, tweak: Int = 0): Seq[Long] =
+      (0 until 64).map(i => ((k * 131 + i * 17) % 89) * 3 + (if (i == 5) tweak else 0): Long)
+    // (arrivals, deleted doc_ids): window 2 near-dups window 1's scene 1
+    // across windows; window 3 deletes doc 1 and near-dups scene 30
+    val windows = Seq(
+      Seq(1L -> scene(1), 4L -> scene(4)) -> Set.empty[Long],
+      Seq(2L -> scene(1, tweak = 2), 30L -> scene(30)) -> Set.empty[Long],
+      Seq(31L -> scene(30, tweak = 1)) -> Set(1L))
+    var live = Seq.empty[(Long, Seq[Long])]
+    for ((arrivals, deleted) <- windows) {
+      if (deleted.nonEmpty)
+        spark.sql(s"DELETE FROM phmcat.db.src WHERE doc_id IN (${deleted.mkString(", ")})")
+      arrivals.toDF("doc_id", "px").writeTo("phmcat.db.src").append()
+      PhashIndexMaintenance.refreshCdc(spark, "phmcat", "db.src", "db.hash", "db.band")
+      live = live.filterNot(d => deleted(d._1)) ++ arrivals
+      val media = live.toDF("doc_id", "px")
+      assert(rows(spark.table("phmcat.db.hash")) == rows(PhashIndexMaintenance.hashRows(media)),
+        s"hash table diverged from a from-scratch build over ${live.map(_._1)}")
+      assert(rows(spark.table("phmcat.db.band")) == rows(PhashIndexMaintenance.bandRows(media)),
+        s"band table diverged from a from-scratch build over ${live.map(_._1)}")
+    }
+    // the cross-window near-dup collides in at least one band
+    val band = spark.table("phmcat.db.band")
+    assert(band.as("x").join(band.as("y"), Seq("band"))
+      .filter(col("x.doc_id") === 30L && col("y.doc_id") === 31L).count() > 0,
+      "near-dup pair (30, 31) must share a band")
   }
 }

@@ -130,36 +130,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(sorted(stream) == sorted(batch))
   }
 
-  test("transformWithState (state API v2) converges to the flatMapGroupsWithState twin") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Ev]
-      val q = StreamTransforms.runningTotalsTws(ms.toDF())
-        .writeStream.outputMode("update")
-        .format("memory").queryName("t_tws")
-        .start()
-      allEvents.grouped(250).foreach { b => ms.addData(b); q.processAllAvailable() }
-      q.stop()
-      val stream = spark.table("t_tws")
-        .withColumn("r", monotonically_increasing_id())
-        .groupBy("user_id")
-        .agg(max(struct(col("r"), col("n_events"), col("sum_cents"))).as("m"))
-        .select(col("user_id"), col("m.n_events"), col("m.sum_cents"))
-      val batch = StreamTransforms.runningTotals(Tables.events(spark, TestSpark.sfDir))
-      assert(sorted(stream) == sorted(batch))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("stream-stream interval join emits exactly the batch twin's pairs") {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[Ev]

@@ -14,7 +14,8 @@ import graft.operators.DedupOps
   * structurally cannot express), untouched components are never
   * rewritten (pinned via the labels table's own change feed), crash
   * states roll forward exactly-once, and the maintained labels equal a
-  * from-scratch clustering of the survivors after any history. */
+  * from-scratch clustering of the survivors after any history, window
+  * by window. */
 class ClusterMaintenanceSpec extends AnyFunSuite {
   import graft.TestSpark.spark
   import spark.implicits._
@@ -199,5 +200,35 @@ class ClusterMaintenanceSpec extends AnyFunSuite {
         "db.lab3", "db.edg3", "db.bnd3")
     }
     assert(e.getMessage.contains("intra-window"))
+  }
+
+  test("labels equal a from-scratch clustering after every window") {
+    spark.sql("CREATE TABLE clcat.db.src4 (doc_id BIGINT, text STRING)")
+    ClusterIndexMaintenance.createIndex(spark, "clcat", "db.src4",
+      "db.lab4", "db.edg4", "db.bnd4")
+    // three g-near-dups arriving in different windows (the cross-window
+    // merge), one h-pair inside a single window, one singleton
+    val w1 = Seq(1L -> words("g", 20), 4L -> words("z", 12))
+    val w2 = Seq(2L -> (words("g", 19) + " gz99"),
+      5L -> words("h", 15), 6L -> (words("h", 14) + " hz88"))
+    val w3 = Seq(3L -> (words("g", 19) + " gy88"))
+    var arrived = Seq.empty[(Long, String)]
+    for (w <- Seq(w1, w2, w3)) {
+      w.toDF("doc_id", "text").writeTo("clcat.db.src4").append()
+      ClusterIndexMaintenance.refreshCdc(spark, "clcat", "db.src4",
+        "db.lab4", "db.edg4", "db.bnd4")
+      arrived ++= w
+      assert(labelRows("lab4") == fromScratch(arrived.toDF("doc_id", "text")),
+        s"maintained labels diverged from from-scratch after ${arrived.size} docs")
+    }
+    assert(labelRows("lab4") == Set(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      4L -> 4L, 5L -> 5L, 6L -> 5L))
+    // and they equal q210's batch fold over the same split
+    // (corpus = windows 1-2, batch = window 3)
+    val (batchFold, _, _) = DedupOps.incrementalClusterLabels(
+      (w1 ++ w2).toDF("doc_id", "text"), w3.toDF("doc_id", "text"))
+    assert(labelRows("lab4") ==
+      batchFold.collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+      "maintained labels diverged from the batch incremental fold")
   }
 }
